@@ -38,7 +38,13 @@ class ReplicationSettings:
     """Live logical-replication upstream (reference cdc config block,
     README.md:186-227): where the slot lives and what to subscribe to.
     The consumer (sources/pgoutput.py) runs in a daemon thread owned by
-    the Connector — single connection per slot, like the reference."""
+    the Connector — single connection per slot, like the reference.
+
+    Staging cadence: the consumer writes a segment for the stream once
+    ``batch_size`` changes have arrived or on the ack ticker
+    (``ack_interval_sec``), whichever comes first, and forwards the
+    committed frontier as a slot ack on the same ticker — the
+    reference's bulk flushes on batchTickerDuration, then acks."""
 
     host: str
     port: int
@@ -202,8 +208,31 @@ def wal_to_view_transform(cfg: ConnectorConfig):
     return xform
 
 
+def _read_once(inner):
+    """Outermost foreachBatch wrapper: persist the micro-batch, run
+    ``inner``, unpersist it (also when ``inner`` raises). Every action
+    inside — the truncate probe, the merge's emptiness probe and merge,
+    the metered counters — then reads the one materialization, so the
+    source (e.g. the pgwal segments) is scanned once per micro-batch
+    instead of once per action."""
+
+    def write(batch_df: DataFrame, epoch_id: int) -> None:
+        batch_df = batch_df.persist()
+        try:
+            inner(batch_df, epoch_id)
+        finally:
+            batch_df.unpersist()
+
+    return write
+
+
 class Connector:
-    """Start/WaitUntilReady/Close over the streaming CDC pipeline."""
+    """Start/WaitUntilReady/Close over the streaming CDC pipeline.
+
+    Each micro-batch is read from its source exactly once: the query's
+    foreachBatch function persists the batch before the view's writer
+    (and the truncate and metrics wrappers around it) runs its several
+    actions over it, and unpersists it afterwards."""
 
     def __init__(
         self,
@@ -397,6 +426,9 @@ class Connector:
                     stop_event=self._repl_stop,
                     batch_size=rs.batch_size,
                     ack_interval_sec=rs.ack_interval_sec,
+                    # a partial segment is staged on the ack ticker, like
+                    # the reference's bulk flushing on batchTickerDuration
+                    flush_interval_sec=rs.ack_interval_sec,
                 )
             except BaseException as e:  # noqa: BLE001 — record, never vanish
                 self.consumer_error = e
@@ -665,11 +697,11 @@ class Connector:
             self.cfg.replication is not None
             and self.cfg.replication.on_truncate == "tombstone_table"
         ):
-            # OUTERMOST wrapper: tombstone rows are intercepted before the
-            # metered counters and the keyed merge ever see them
+            # tombstone rows are intercepted before the metered counters
+            # and the keyed merge ever see them
             batch_fn = self._truncating_writer(batch_fn)
         writer = (
-            stream.writeStream.foreachBatch(batch_fn)
+            stream.writeStream.foreachBatch(_read_once(batch_fn))
             .option("checkpointLocation", self.cfg.checkpoint_dir)
         )
         if available_now:
@@ -762,7 +794,8 @@ class Connector:
 
     def _metered_writer(self, inner):
         """Wrap the view's foreachBatch writer so each merged epoch books
-        its op counters with ONE explicit aggregate over the micro-batch.
+        its op counters with ONE explicit aggregate over the micro-batch
+        (the persisted copy ``_read_once`` holds, not the source).
 
         Not an Observation riding the merge's own actions: Observation.get
         captures the FIRST completed action's flow, and merge_batch's
@@ -825,7 +858,8 @@ class Connector:
         probe is one extra small aggregate job per epoch even when no
         truncate is present — the accepted price of the opt-in policy (it
         cannot ride the merge's own actions: the wipe must happen BEFORE
-        them)."""
+        them). It reads the persisted batch (``_read_once``), so the
+        merge after it does not scan the source again."""
         from pyspark.sql import functions as F
 
         seq_col, op_col = self.cfg.seq_col, self.cfg.op_col

@@ -428,8 +428,8 @@ class MaterializedView:
     def state(self) -> DataFrame | None:
         """Current compacted state INCLUDING tombstones, or None if empty.
 
-        mergeSchema (per-file footer reconciliation) is paid only once
-        drift has EVER happened — same conditional the merge path uses."""
+        Read with the meta-recorded schema until drift has EVER happened,
+        then with mergeSchema — same conditional the merge path uses."""
         if not self.exists():
             return None
         if not self._bucket_dirs():
@@ -446,19 +446,27 @@ class MaterializedView:
                     [], T.StructType.fromJson(json.loads(self._schema_json))
                 )
             return None
-        return self._read_buckets(merge_schema=self._drifted).drop(_BUCKET_COL)
+        return self._read_buckets().drop(_BUCKET_COL)
 
     def _bucket_dirs(self) -> list[int]:
         return list_bucket_dirs(self.path)
 
-    def _read_buckets(
-        self, buckets: list[int] | None = None, merge_schema: bool = True
-    ) -> DataFrame:
-        df = (
-            self.spark.read.option("basePath", self.path)
-            .option("mergeSchema", str(merge_schema).lower())
-            .parquet(self.path)
-        )
+    def _read_buckets(self, buckets: list[int] | None = None) -> DataFrame:
+        """Scan the bucket dirs (all, or only ``buckets``) with the bucket
+        column. A view that never drifted has one file schema, the one
+        the meta recorded at the last swap, so it is read with that
+        schema and no footer-inference job. A drifted view reconciles
+        footers (mergeSchema); a meta without a schema (older layouts)
+        infers from the files."""
+        reader = self.spark.read.option("basePath", self.path)
+        if self._schema_json and not self._drifted:
+            from pyspark.sql import types as T
+
+            schema = T.StructType.fromJson(json.loads(self._schema_json))
+            reader = reader.schema(schema.add(_BUCKET_COL, T.IntegerType()))
+        else:
+            reader = reader.option("mergeSchema", str(self._drifted).lower())
+        df = reader.parquet(self.path)
         if buckets is not None:
             # partition pruning: only the touched bucket dirs are scanned
             df = df.filter(F.col(_BUCKET_COL).isin(buckets))
@@ -677,9 +685,9 @@ class MaterializedView:
             self._write_meta()
         try:
             if existing:
-                merged = self._read_buckets(
-                    existing, merge_schema=self._drifted
-                ).unionByName(compact, allowMissingColumns=True)
+                merged = self._read_buckets(existing).unionByName(
+                    compact, allowMissingColumns=True
+                )
             else:
                 merged = compact
             new_state = self._resolve(merged)
@@ -871,7 +879,13 @@ class MaterializedView:
         property Spark sets on the micro-batch thread) is stable across
         restarts from the same checkpoint but fresh for a new query — so a
         view re-fed from a NEW checkpoint lineage does not silently drop
-        the new query's low-numbered batches."""
+        the new query's low-numbered batches.
+
+        The merge runs several actions over the batch (an emptiness or
+        touched-bucket probe, then the write), and each re-reads an
+        unpersisted batch from its source. Persist the batch around this
+        writer to scan the source once per micro-batch, as the Connector
+        does for everything its foreachBatch function runs."""
 
         def write(batch_df: DataFrame, epoch_id: int) -> None:
             qid = batch_df.sparkSession.sparkContext.getLocalProperty(

@@ -604,3 +604,66 @@ def test_fence_checked_in_write_meta(spark, tmp_path):
     b.merge_batch(_batch(spark, [(2, "update", 1, 11.0)]), epoch_id=8)
     with open(_os.path.join(path, _META)) as f:
         assert _json.load(f)["last_epoch"] == 8
+
+
+def _jobs_of(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the
+    number of Spark jobs it submitted."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"mv_probe_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs of one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_uses_recorded_schema_until_drift(spark, tmp_path):
+    """A view that never drifted is read with the schema its meta
+    records, so building read() submits no Spark job (no footer
+    inference); a drifted view still reconciles footers and shows its
+    new column; a meta without a schema (older layouts) still reads."""
+    import json as _json
+
+    from go_pq_cdc_elasticsearch_spark.sink.materialized import _META
+
+    path = str(tmp_path / "v")
+    mv = MaterializedView(spark, path, n_buckets=4)
+    mv.merge_batch(_batch(spark, [(i, "insert", i, float(i)) for i in range(8)]))
+    mv.merge_batch(_batch(spark, [(9, "update", 3, 33.0)]))
+    inferred = spark.read.option("basePath", path).parquet(path)
+
+    df, jobs = _jobs_of(spark, mv.read)
+    assert jobs == 0
+    assert df.schema == inferred.drop("__bucket").schema
+    assert {r["user_id"]: r["value"] for r in df.collect()} == {
+        i: (33.0 if i == 3 else float(i)) for i in range(8)
+    }
+    # a reopened view reads the same way
+    _df, jobs = _jobs_of(spark, MaterializedView(spark, path).read)
+    assert jobs == 0
+
+    # older layout: no schema in the meta -> inference, same rows
+    with open(os.path.join(path, _META)) as f:
+        meta = _json.load(f)
+    del meta["schema"]
+    with open(os.path.join(path, _META), "w") as f:
+        _json.dump(meta, f)
+    legacy = MaterializedView(spark, path)
+    assert sorted(r["user_id"] for r in legacy.read().collect()) == list(range(8))
+
+    # drift touching one bucket leaves non-uniform files: the new column
+    # still shows, on the writer and on a reopened view
+    evolved = spark.createDataFrame(
+        [(20, "insert", 100, 1.0, "eu-west")],
+        "event_id long, event_type string, user_id long, value double, "
+        "region string",
+    )
+    legacy.merge_batch(evolved)
+    assert legacy._drifted
+    for v in (legacy, MaterializedView(spark, path)):
+        rows = {r["user_id"]: r["region"] for r in v.read().collect()}
+        assert rows == {**{i: None for i in range(8)}, 100: "eu-west"}
