@@ -390,13 +390,12 @@ class Connector:
         # connection gone but Spark query still running on the shared
         # staged dir — must see the bumped generation before any segment
         # this instance produces can wake its query, or the two could
-        # swap buckets concurrently. Bumped ONLY at start, never on the
+        # merge into the view concurrently. Bumped ONLY at start, never on the
         # supervisor's reconnects: the same instance re-winning its slot
         # keeps its token (re-acquiring would race its own running
         # merges), and an active that reconnects after a full
         # takeover-and-death cycle of a standby finds itself fenced —
         # the safe direction (operator decides who owns the view).
-        # Closes the README runbook's fencing caveat (review r11).
         self.view.acquire_fence()
         # streaming reads are select()-paced, not timed: drop the
         # handshake timeout once CopyBoth is established
@@ -576,9 +575,9 @@ class Connector:
         REPLICATION CONNECTION is gone — an active that lost its
         connection (partition, server-side terminate, SIGSTOP) may still
         be running its Spark query. Winning the slot bumps the view's
-        fence generation (MaterializedView.acquire_fence), so every
-        mutation the zombie attempts afterwards raises FencedWriterError
-        before touching a bucket. Live-tested in
+        fence token (MaterializedView.acquire_fence, a manifest commit),
+        so every commit the zombie attempts afterwards fails with
+        FencedWriterError and its files never become visible. Live-tested in
         test_live_zombie_active_fenced_after_takeover.
 
         Raises the last slot-in-use error if ``timeout_sec`` elapses;
@@ -823,15 +822,14 @@ class Connector:
             # book only when THIS call advanced the frontier: after a crash
             # between merge commit and checkpoint commit, the redelivered
             # epoch arrives with the frontier ALREADY at epoch_id (adopted
-            # from meta) and merge_batch skips — a bare equality check
-            # would double-book the whole batch (review r10). Adopt the
-            # on-disk frontier BEFORE capturing `before`: on a standby's
-            # first batch the view object is fresh (in-object frontier
-            # None) while meta already carries epoch_id — reading the raw
-            # field saw before=None, merge_batch skipped inside inner(),
-            # and counters were booked for a merge that never ran
-            # (review r11)
-            view._ensure_meta_adopted()
+            # from the manifest) and merge_batch skips — a bare equality
+            # check would double-book the whole batch. Load the on-disk
+            # frontier BEFORE capturing `before`: on a standby's first
+            # batch the view object is fresh (in-object frontier None)
+            # while the manifest already carries epoch_id — reading the
+            # raw field saw before=None, merge_batch skipped inside
+            # inner(), and counters were booked for a merge that never ran
+            view._load()
             before = view._last_epoch
             inner(batch_df, epoch_id)
             if view._last_epoch == epoch_id and before != epoch_id:

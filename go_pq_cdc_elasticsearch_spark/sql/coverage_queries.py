@@ -154,8 +154,9 @@ def _json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "arrives WITH it (the reference's payloads are schemaless "
     "map[string]any, message.go:17-18 — columns can appear mid-stream); "
     "the drifted merge rewrites only touched buckets via "
-    "unionByName(allowMissingColumns) + mergeSchema reads "
-    "(sink/materialized.py). Old keys never overwritten read back src "
+    "unionByName(allowMissingColumns), and the manifest records the "
+    "union schema that every read uses (sink/materialized.py, "
+    "sink/store.py). Old keys never overwritten read back src "
     "NULL, newer wins carry the new column — exactly what the batch "
     "oracle's NULL-padded union computes.",
 )

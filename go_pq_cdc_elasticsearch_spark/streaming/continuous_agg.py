@@ -12,16 +12,13 @@ special casing: additive combine is order-independent.
 
 Exactly-once: additive combine is NOT idempotent, so redelivered batches
 must not re-merge. ``foreachBatch`` redelivers with the SAME epoch id after
-a failure; the view records the merged-epoch frontier in its meta file and
-skips epochs at or below it (see ``MaterializedView.merge_batch``). Two
-documented residual risks, both closed for real by a table format's atomic
-multi-file commit (Delta/Iceberg) on a cluster: (1) the one-batch window
-between bucket swap and meta write redelivers an already-merged batch;
-(2) a crash MID-multi-bucket-swap leaves already-swapped buckets at
-post-merge state while recovery rolls the interrupted one back, so the
-redelivered batch double-counts the swapped buckets (swap recovery is
-per-bucket, see ``MaterializedView._recover_interrupted_swap``). The LWW
-base class is immune to both (seq-resolved merge is idempotent).
+a failure; the view records the merged-epoch frontier in its manifest and
+skips epochs at or below it (see ``MaterializedView.merge_batch``). The
+frontier and every touched bucket's new file land in ONE manifest commit
+(``sink/store.py``): a crash before it leaves the whole pre-merge
+generation, so the redelivered epoch applies once to state that never saw
+it; a crash after it leaves the epoch committed, so redelivery is skipped.
+No crash point leaves some buckets merged and others not.
 
 Sums are carried as DECIMAL(30,10): exact and associative, so the view
 equals the batch recomputation bit-for-bit regardless of merge order —
@@ -36,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from go_pq_cdc_elasticsearch_spark.sink.materialized import MaterializedView
+from go_pq_cdc_elasticsearch_spark.sink.store import BUCKET_COL
 
 _DEC = "decimal(30,10)"
 
@@ -73,6 +71,17 @@ class ContinuousAggregate(MaterializedView):
         n_buckets: int | None = None,
         **kwargs,
     ):
+        self.sum_cols = list(sum_cols)
+        self.min_cols = list(min_cols)
+        self.max_cols = list(max_cols)
+        self.distinct_cols = list(distinct_cols)
+        self.prepare = prepare
+        # the aggregate column lists are part of the merge contract (prior
+        # state rows would carry NULL for an added sum col, a removed one
+        # would be dropped from touched buckets only): set before the base
+        # constructor, which validates them against the manifest.
+        # (``prepare`` is a callable and can't be recorded; changing its
+        # derivation is the caller's responsibility.)
         super().__init__(
             spark,
             path,
@@ -83,18 +92,6 @@ class ContinuousAggregate(MaterializedView):
             n_buckets=n_buckets,
             **kwargs,
         )
-        self.sum_cols = list(sum_cols)
-        self.min_cols = list(min_cols)
-        self.max_cols = list(max_cols)
-        self.distinct_cols = list(distinct_cols)
-        self.prepare = prepare
-        # the aggregate column lists are part of the merge contract: prior
-        # state rows would carry NULL for an added sum col (silently wrong
-        # averages) and a removed one would be dropped from touched buckets
-        # only — validate against the stored meta like the base class does
-        # for keys/seq. (``prepare`` is a callable and can't be recorded;
-        # changing its derivation is the caller's responsibility.)
-        self._check_meta_extra()
 
     def _meta_extra(self) -> dict:
         return {
@@ -137,8 +134,6 @@ class ContinuousAggregate(MaterializedView):
     def _resolve(self, merged: DataFrame) -> DataFrame:
         """Combine prior state with batch partials: every metric is
         mergeable (sum-of-counts, sum-of-sums, min-of-mins, max-of-maxes)."""
-        from go_pq_cdc_elasticsearch_spark.sink.materialized import _BUCKET_COL
-
         aggs = [F.sum("n").cast("long").alias("n")]
         aggs += [
             F.sum(F.col(f"sum_{c}").cast(_DEC)).cast(_DEC).alias(f"sum_{c}")
@@ -154,7 +149,7 @@ class ContinuousAggregate(MaterializedView):
             F.hll_union_agg(f"hll_{c}").alias(f"hll_{c}")
             for c in self.distinct_cols
         ]
-        return merged.groupBy(*self.keys, _BUCKET_COL).agg(*aggs)
+        return merged.groupBy(*self.keys, BUCKET_COL).agg(*aggs)
 
     def merge_batch(
         self,

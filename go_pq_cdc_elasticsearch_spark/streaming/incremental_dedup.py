@@ -46,32 +46,27 @@ from go_pq_cdc_elasticsearch_spark.operators.dedup import (
     jaccard_from_sets,
     minhash_band_rows,
 )
-from go_pq_cdc_elasticsearch_spark.sink.materialized import (
-    _BUCKET_COL,
-    MaterializedView,
-    list_bucket_dirs,
-    recover_interrupted_swap,
-    swap_bucket_dir,
-)
+from go_pq_cdc_elasticsearch_spark.sink.materialized import MaterializedView
+from go_pq_cdc_elasticsearch_spark.sink.store import BUCKET_COL, ManifestStore
 
 
 class LazyResultsOutstandingError(RuntimeError):
     """compact() was called while ``process_batch(eager=False)`` results
     are still outstanding. Those lazy frames are pinned to the segment
-    FILES listed at probe time; compaction replaces the files, so
-    materializing a stale frame afterwards dies as a confusing executor
-    FileNotFoundError mid-job (the r11 footgun this names — the same
-    loud-over-confusing discipline as FencedWriterError). Materialize the
+    FILES listed at probe time; compaction retires the files and GC
+    deletes them after ``GC_GRACE_S``, so materializing a stale frame
+    later dies as a confusing executor FileNotFoundError mid-job (the
+    footgun this names — the same loud-over-confusing discipline as
+    FencedWriterError). Materialize the
     lazy results, call ``settle_lazy_results()``, then compact — or pass
     ``force=True`` if you know every lazy frame is already materialized
     (e.g. via an eager localCheckpoint)."""
 
 
 def _atomic_json_dump(path: str, obj) -> None:
-    """tmp + os.replace, the same discipline as MaterializedView._write_meta
-    (r7): every meta file here is load-bearing — opens json.load it with no
-    recovery path — so a crash mid-dump must never leave torn JSON that
-    bricks the index/deduper until manual repair (review r8)."""
+    """tmp + os.replace: every meta file here is load-bearing — opens
+    json.load it with no recovery path — so a crash mid-dump must never
+    leave torn JSON that bricks the deduper until manual repair."""
     import json
 
     os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -86,23 +81,26 @@ class _BandSegmentIndex:
     ``(band_idx, band_hash)`` for probe-side partition pruning.
 
     Band rows are immutable inserts (doc ids are content handles), so the
-    index does NOT need LWW merge-on-write: each batch APPENDS segment
-    files into the bucket dirs it touches — per-batch write cost is
-    O(batch), independent of index size. An earlier MaterializedView-based
-    variant read-merged-rewrote every touched bucket per batch; measured
-    with a 1k-doc batch against replicated corpora, its cost grew with
-    corpus size because a realistic batch's band hashes touch EVERY bucket
-    (8k band rows >> any sane bucket count), making each merge a full
-    index rewrite. Segments are exactly how the reference's actual sink
-    absorbs this write pattern — Elasticsearch/Lucene is an LSM: appended
-    segments, deferred merges. ``compact()`` is the deferred merge: it
-    rewrites each bucket to one file and drops duplicate rows from
-    crash-redelivered appends (reads already dedup candidates via
-    ``distinct()``, so duplicates are never a correctness issue).
+    index does NOT need LWW merge-on-write: each batch APPENDS one segment
+    file to every bucket it touches — per-batch write cost is O(batch),
+    independent of index size. A merge-on-write variant read-merged-
+    rewrote every touched bucket per batch, and since a realistic batch's
+    band hashes touch EVERY bucket (8k band rows >> any sane bucket
+    count), each merge was a full index rewrite. Segments are exactly how
+    the reference's actual sink absorbs this write pattern —
+    Elasticsearch/Lucene is an LSM: appended segments, deferred merges.
+    ``compact()`` is the deferred merge: it rewrites each bucket to one
+    file and drops duplicate rows from crash-redelivered appends (reads
+    already dedup candidates via ``distinct()``, so duplicates are never a
+    correctness issue).
 
-    Exactly-once on the write path is the same epoch-frontier guard the
-    materialized views use; a crash between append and frontier write
-    re-appends on redelivery, which duplicate-tolerant reads absorb.
+    Storage is the manifest-committed store of ``sink/store.py``: an
+    append or a compaction is one commit that lists the bucket's segment
+    files and the epoch frontier together, and a read resolves one
+    manifest and reads exactly its file list — a snapshot that later
+    appends and compactions never change. A crash before a commit leaves
+    the previous generation and orphan files GC removes; redelivery
+    re-appends.
 
     Probe-side sizing: a probe reads the buckets its band hashes fall in,
     so its read cost is ``min(1, distinct_probe_hashes / n_buckets)`` of
@@ -112,24 +110,15 @@ class _BandSegmentIndex:
     64k) so realistic batches prune most of the index, exactly how a
     term-sharded search index keeps query fan-out sublinear.
 
-    ``n_buckets=None`` (default, r12) auto-sizes the layout at the first
+    ``n_buckets=None`` (default) auto-sizes the layout at the first
     append — ``ceil(first_batch_band_rows / target_rows_per_bucket)``
     capped at ``max_buckets`` — the same scale-adaptive convention as
-    ``MaterializedView`` (optimization guide §2: derive partitioning from
-    input size, don't hard-code one box's constant). A fixed 64 on a toy
-    batch wrote 64 near-empty segment files and listed 64 dirs per probe
-    (measured: the dominant q_lx5 write cost at sf0.1), while a fixed 64
-    on a petabyte stream is far too few; explicit ``n_buckets`` remains
-    the deployment override. The sizing count runs on the caller's
-    already-checkpointed band frame — one cheap job, no recompute.
-
-    ``max_buckets`` defaults to 65_536 (r13, VERDICT r12 item 5): the
-    prior 256 cap contradicted this docstring's own sizing rule — a
-    realistic first batch on a corpus-scale stream (tens of millions of
-    band rows) would have been silently under-bucketed to 256 unless the
-    deployment passed an explicit ``n_buckets``. The cap now only bounds
-    pathological layouts (an enormous FIRST batch no longer dictates a
-    million bucket dirs); ``ceil(rows/target)`` is the operative size.
+    ``MaterializedView``: a fixed 64 on a toy batch wrote 64 near-empty
+    segment files, while a fixed 64 on a petabyte stream is far too few;
+    explicit ``n_buckets`` remains the deployment override. The sizing
+    count runs on the caller's already-checkpointed band frame — one
+    cheap job, no recompute. ``max_buckets`` (65_536) only bounds
+    pathological layouts; ``ceil(rows/target)`` is the operative size.
     """
 
     def __init__(
@@ -145,38 +134,20 @@ class _BandSegmentIndex:
         self.n_buckets = n_buckets
         self.target_rows_per_bucket = target_rows_per_bucket
         self.max_buckets = max_buckets
+        self.store = ManifestStore(path)
         self._last_epoch: int | None = None
-        meta = self._read_meta()
-        if meta is not None:
-            self.n_buckets = int(meta["n_buckets"])
-            self._last_epoch = meta.get("last_epoch")
-            # repair a compact() interrupted mid-swap (shared two-rename
-            # protocol with the materialized views)
-            recover_interrupted_swap(self.path)
+        self._load()
 
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "_INDEX_META.json")
+    def _load(self) -> dict | None:
+        snap = self.store.latest()
+        self._last_epoch = snap["last_epoch"] if snap else None
+        if snap is not None:
+            self.n_buckets = snap["n_buckets"]
+        return snap
 
-    def _read_meta(self):
-        import json
-
-        p = self._meta_path()
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_meta(self) -> None:
-        _atomic_json_dump(
-            self._meta_path(),
-            {"n_buckets": self.n_buckets, "last_epoch": self._last_epoch},
-        )
-
-    def exists(self) -> bool:
-        return os.path.exists(self._meta_path())
-
-    def _bucket_dirs(self) -> list[int]:
-        return list_bucket_dirs(self.path)
+    def _live_buckets(self) -> list[int]:
+        snap = self.store.latest()
+        return sorted(snap["files"]) if snap else []
 
     def _bucket_expr(self):
         return F.pmod(
@@ -184,134 +155,92 @@ class _BandSegmentIndex:
         )
 
     def append_batch(self, bands: DataFrame, epoch_id: int | None = None) -> None:
+        snap = self._load()
         if (
             epoch_id is not None
             and self._last_epoch is not None
             and epoch_id <= self._last_epoch
         ):
             return
-        if not self.exists():
-            if self.n_buckets is None:  # auto-size the layout to the data
-                n_rows = bands.count()
-                if n_rows == 0:
-                    # an empty first batch must not bake a degenerate
-                    # layout into the meta (the MaterializedView rule);
-                    # the first real batch sizes it
-                    return
-                self.n_buckets = max(
-                    1,
-                    min(
-                        self.max_buckets,
-                        -(-n_rows // self.target_rows_per_bucket),
-                    ),
-                )
-            self._write_meta()
-        # one output task per touched bucket (coalesced by AQE when tiny):
-        # appended files form LSM segments; untouched bucket dirs are not
-        # opened, and no existing file is read or rewritten
-        bands.withColumn(_BUCKET_COL, self._bucket_expr()).repartition(
-            self.n_buckets, F.col(_BUCKET_COL)
-        ).write.mode("append").partitionBy(_BUCKET_COL).parquet(self.path)
-        if epoch_id is not None:
-            self._last_epoch = epoch_id
-            self._write_meta()
+        if snap is None and self.n_buckets is None:
+            # auto-size the layout to the data
+            n_rows = bands.count()
+            if n_rows == 0:
+                # an empty first batch must not bake a degenerate layout
+                # into the manifest (the MaterializedView rule); the first
+                # real batch sizes it
+                return
+            self.n_buckets = max(
+                1,
+                min(self.max_buckets, -(-n_rows // self.target_rows_per_bucket)),
+            )
+        # one new segment file per touched bucket; no existing file is
+        # read or rewritten
+        files = {b: list(v) for b, v in (snap["files"] if snap else {}).items()}
+        new = self.store.write(
+            bands.withColumn(BUCKET_COL, self._bucket_expr()), self.n_buckets
+        )
+        for b, rels in new.items():
+            files.setdefault(b, []).extend(rels)
+        last_epoch = self._last_epoch if epoch_id is None else epoch_id
+        self.store.commit(
+            snap,
+            {
+                "n_buckets": self.n_buckets,
+                "files": files,
+                "schema": snap["schema"] if snap else bands.schema.jsonValue(),
+                "last_epoch": last_epoch,
+            },
+        )
+        self._last_epoch = last_epoch
 
     def read_buckets(
         self, buckets: list[int] | None = None
     ) -> DataFrame | None:
-        """Read the (optionally pruned) index state as of NOW: the segment
-        files are enumerated here, file by file, and the returned frame
-        reads exactly that list — segments appended AFTER this call can
-        never leak into it. That snapshot property is load-bearing for
-        process_batch (r10): it appends the batch's band rows BEFORE the
-        verification job runs, which is only sound because the probe's
-        state read is pinned to the pre-append file list. (Spark's
-        InMemoryFileIndex happens to list eagerly at load() too, but the
-        explicit file list makes the guarantee structural rather than an
-        internals assumption.)"""
-        dirs = self._bucket_dirs() if buckets is None else buckets
-        files = []
-        for b in dirs:
-            d = os.path.join(self.path, f"{_BUCKET_COL}={b}")
-            if not os.path.isdir(d):
-                continue
-            files.extend(
-                os.path.join(d, name)
-                for name in os.listdir(d)
-                if name.endswith(".parquet")
-            )
-        if not files:
-            # a probe can hash to buckets no segment was ever written to;
-            # None = "no state to read" (the callers' existing no-state path)
-            return None
-        return (
-            self.spark.read.option("basePath", self.path)
-            .parquet(*files)
-            .drop(_BUCKET_COL)
-        )
+        """Read the (optionally pruned) index state as of NOW: the frame
+        reads exactly the segment files the newest manifest lists, so
+        segments appended AFTER this call can never leak into it. That
+        snapshot property is load-bearing for process_batch: it appends
+        the batch's band rows BEFORE the verification job runs, which is
+        only sound because the probe's state read is pinned to the
+        pre-append file list. None = no segment in those buckets (the
+        callers' no-state path)."""
+        snap = self.store.latest()
+        df = self.store.read(self.spark, snap, buckets) if snap else None
+        return None if df is None else df.drop(BUCKET_COL)
 
     def segment_counts(self) -> dict[int, int]:
         """Segment files per bucket — the growth metric compact() bounds
         (one file is appended per touched bucket per indexed batch, so at
-        months of micro-batches the LISTING, not the data, dominates probe
-        cost)."""
-        out: dict[int, int] = {}
-        for b in self._bucket_dirs():
-            d = os.path.join(self.path, f"{_BUCKET_COL}={b}")
-            if os.path.isdir(d):
-                out[b] = sum(
-                    1 for name in os.listdir(d) if name.endswith(".parquet")
-                )
-        return out
+        months of micro-batches the file count, not the data, dominates
+        probe cost)."""
+        snap = self.store.latest()
+        return {b: len(v) for b, v in snap["files"].items()} if snap else {}
 
     def compact(self, min_files: int = 2) -> None:
         """Deferred merge: one file per bucket, duplicates (from
-        crash-redelivered appends) dropped. A maintenance op like the
-        LWW view's vacuum — run rarely, never per batch. Buckets swap in
-        via the shared crash-recoverable two-rename protocol: an earlier
-        delete-then-rename version silently lost the WHOLE index when
-        killed between the two loops (meta intact, zero band rows — every
-        later probe would quietly report no cross-batch dups).
+        crash-redelivered appends) dropped, in one commit. A maintenance
+        op like the LWW view's vacuum — run rarely, never per batch.
 
         Only buckets holding ``min_files`` or more segment files are
-        rewritten (r11): rows are hash-routed to exactly one bucket, so
+        rewritten: rows are hash-routed to exactly one bucket, so
         per-bucket rewrites are independent and an already-compacted
         bucket carries no cross-bucket duplicates to merge — skipping it
         makes repeated maintenance runs touch only the buckets that grew
-        since the last one, instead of rewriting the whole index every
-        time. ``min_files=1`` forces the full rewrite."""
-        if not self.exists() or not self._bucket_dirs():
+        since the last one. ``min_files=1`` forces the full rewrite."""
+        snap = self._load()
+        if snap is None:
             return
-        todo = [
-            b for b, n in self.segment_counts().items() if n >= min_files
-        ]
+        todo = [b for b, v in snap["files"].items() if len(v) >= min_files]
         if not todo:
             return
-        state = self.read_buckets(todo)
-        if state is None:
-            return
-        state = state.distinct()
-        import shutil
-        import tempfile
-
-        parent = os.path.dirname(self.path) or "."
-        tmp = tempfile.mkdtemp(prefix="bsi_", dir=parent)
-        try:
-            out = os.path.join(tmp, "data")
-            state.withColumn(_BUCKET_COL, self._bucket_expr()).repartition(
-                self.n_buckets, F.col(_BUCKET_COL)
-            ).write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(out)
-            # rewritten copy is complete on disk before any live dir moves
-            for b in todo:
-                swap_bucket_dir(
-                    self.path, os.path.join(out, f"{_BUCKET_COL}={b}"), b
-                )
-        finally:
-            # a failed rewrite must not abandon a full index copy next to
-            # the live path on every retry (same try/finally class as
-            # _swap_buckets, review r8); after a successful swap this is
-            # the normal cleanup
-            shutil.rmtree(tmp, ignore_errors=True)
+        files = {b: v for b, v in snap["files"].items() if b not in todo}
+        files.update(
+            self.store.write(
+                self.store.read(self.spark, snap, todo).distinct(), self.n_buckets
+            )
+        )
+        self.store.commit(snap, {**snap, "files": files})
 
 
 class LshDedupIndex:
@@ -366,7 +295,7 @@ class LshDedupIndex:
         # error). In-process tracking matches the single-writer model.
         self._outstanding_lazy: list[int | None] = []
         # Hash-family pinning (review r6, the ContinuousAggregate
-        # _check_meta rule): reopening an existing index with different
+        # merge-contract rule): reopening an existing index with different
         # k/bands silently mixes incompatible families — new probes can
         # never match any stored row's band hash, so every near-dup of a
         # previously indexed doc is kept (duplicate leak) while the new
@@ -407,7 +336,7 @@ class LshDedupIndex:
         fall in — the read that keeps cross-batch probing independent of
         corpus size (the analog of the reference's per-shard doc-id
         routing: a bulk request touches the shards its ids hash to)."""
-        if not self.view.exists() or not self.view._bucket_dirs():
+        if not self.view._live_buckets():
             return None
         n = self.view.n_buckets
         if n == 1:
@@ -459,9 +388,9 @@ class LshDedupIndex:
         (index segments) or caller-owned (``corpus``), so computing it
         later — even after more batches were indexed — yields exactly the
         pairs this batch's probe saw. The guarantee holds until
-        ``compact()``: the deferred merge REPLACES the segment files the
+        ``compact()``: the deferred merge RETIRES the segment files the
         pinned list points at, so materialize every outstanding lazy
-        result before compacting (review r10). A replay driver (q_lx5) uses that
+        result before compacting. A replay driver (q_lx5) uses that
         to fold N waves' verification into ONE overlapped Spark job
         instead of N serial driver-synchronous ones. ``eager=True``
         (default) materializes before returning, which stateful callers
@@ -581,12 +510,13 @@ class LshDedupIndex:
         """Deferred segment merge for the band index (the LSM maintenance
         op — see ``_BandSegmentIndex.compact``). Run it between batches;
         an outstanding ``eager=False`` result raises
-        ``LazyResultsOutstandingError`` (r13 — previously a contract-only
-        footnote whose violation died as an executor FileNotFoundError):
-        lazy results are pinned to the segment FILES existing at probe
-        time, and compaction replaces those files (process_batch
-        docstring). Bounds the per-probe listing/footer cost, which —
-        not the data volume — is what grows without bound at months of
+        ``LazyResultsOutstandingError``: lazy results are pinned to the
+        segment FILES existing at probe time, and compaction retires
+        those files, which GC deletes once ``GC_GRACE_S`` has passed
+        (process_batch docstring). ``force=True`` declares every
+        outstanding result materialized, like ``settle_lazy_results``.
+        Bounds the per-probe file/footer cost, which — not the data
+        volume — is what grows without bound at months of
         micro-batches."""
         if self._outstanding_lazy and not force:
             raise LazyResultsOutstandingError(
@@ -595,6 +525,7 @@ class LshDedupIndex:
                 f"{self._outstanding_lazy}): materialize them and call "
                 f"settle_lazy_results() first, or pass force=True"
             )
+        self._outstanding_lazy.clear()
         self.view.compact(min_files=min_files)
 
 
@@ -671,10 +602,10 @@ class IncrementalDeduper(LshDedupIndex):
 
         # 1. cross-batch drop: either pair end that is already kept
         # condemns the OTHER end if it belongs to this batch.
-        # "Prior" means STRICTLY EARLIER EPOCHS (seq < epoch_id): in the
-        # swap-before-frontier crash window the kept view already holds
-        # THIS epoch's ids from the crashed attempt, and condemning the
-        # batch against its own kept set diverges on transitive chains —
+        # "Prior" means STRICTLY EARLIER EPOCHS (seq < epoch_id): a re-run
+        # of an already-committed wave finds THIS epoch's ids in the kept
+        # view, and condemning the batch against its own kept set
+        # diverges on transitive chains —
         # pairs (1,2),(2,3) with J(1,3) < τ keep {1} on a clean run, but a
         # redelivery that sees 1 as "prior" condemns 2, severs the chain,
         # and keeps {1,3}: a permanent duplicate leak breaking the
@@ -682,7 +613,7 @@ class IncrementalDeduper(LshDedupIndex):
         # by execution, review r8). Clique-shaped data masked it — every
         # member pairs with the kept representative directly.
         kept_prior = None
-        if self.kept.exists() and self.kept._bucket_dirs():
+        if self.kept._live_buckets():
             if epoch_id is None:
                 # without an epoch the crashed-attempt scoping below is
                 # impossible, and a RE-RUN of the same wave would condemn
@@ -739,7 +670,7 @@ class IncrementalDeduper(LshDedupIndex):
     ) -> None:
         seq = 0 if epoch_id is None else int(epoch_id)
         rows = kept_batch.select(self.id_col)
-        if self.kept.exists() and self.kept._bucket_dirs():
+        if self.kept._live_buckets():
             # first-kept epoch WINS: a later wave legitimately re-feeding
             # an already-kept id must not overwrite its seq, or the id
             # loses 'prior' status (seq < epoch) on a redelivery of that
@@ -748,8 +679,8 @@ class IncrementalDeduper(LshDedupIndex):
             # (review r8). The kept view is an id registry; re-upserting
             # an existing id carries no information anyway.
             # pinned: merge_batch evaluates its input twice (probe +
-            # write) while REWRITING the kept buckets this lazy anti-join
-            # reads — the second evaluation would see post-swap state
+            # write), and a lazy anti-join re-resolving the kept view on
+            # the second evaluation would see this merge's own commit
             rows = rows.join(
                 self.kept.read().select(self.id_col), self.id_col, "left_anti"
             ).localCheckpoint(eager=True)
@@ -776,7 +707,7 @@ class IncrementalDeduper(LshDedupIndex):
         ``LshDedupIndex.compact`` for the lazy-result guard)."""
         super().compact(min_files=min_files, force=force)
         if corpus_path is not None:
-            self.kept._ensure_meta_adopted()
+            self.kept._load()
             if self.kept._last_epoch is not None:
                 consolidate_corpus_epochs(
                     self.spark, corpus_path, upto_seq=int(self.kept._last_epoch)
@@ -964,17 +895,17 @@ class IncrementalDeduper(LshDedupIndex):
             # reaches _compute_kept with the kept view still lacking these
             # ids — identical recompute either way. In normal streaming an
             # id arrives once and this anti-join matches nothing.
-            if self.kept.exists() and self.kept._bucket_dirs():
-                # PRIOR epochs only (seq < this epoch): the kept view may
-                # already contain THIS epoch's rows from a crash exactly
-                # between _merge_kept's bucket swap and its frontier meta
-                # write (the window materialized.py documents as a replay).
-                # Anti-joining those rows away would make the redelivered
+            if self.kept._live_buckets():
+                # PRIOR epochs only (seq < this epoch): the frontier and
+                # the kept rows commit together, so the top guard already
+                # skipped any epoch whose rows are in the view; the filter
+                # keeps that true should the two ever diverge. Anti-
+                # joining this epoch's rows away would make a redelivered
                 # recompute diverge — the epoch's kept docs drop out of
                 # their own wave, and the idempotent corpus overwrite at
                 # the end would replace epoch=seq with a kept set that no
                 # longer carries their text: permanent loss, plus their
-                # future near-dups verify against nothing (review r6).
+                # future near-dups verify against nothing.
                 # seq rows > this epoch cannot exist: the frontier is
                 # monotone, so a committed later epoch implies the top
                 # guard already returned.
@@ -1016,9 +947,9 @@ class IncrementalDeduper(LshDedupIndex):
                 )
                 if self._batches_since_compact >= auto_compact_batches:
                     # between batches, after the frontier commit: the
-                    # epoch is fully durable, and a crash mid-compact is
-                    # covered by the two-rename/manifest recovery both
-                    # merge paths already carry
+                    # epoch is fully durable, a band compaction is one
+                    # manifest commit, and corpus consolidation rolls
+                    # forward from its own manifest
                     self.compact(min_files=2, corpus_path=corpus_path)
                     self._batches_since_compact = 0
 

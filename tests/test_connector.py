@@ -493,7 +493,7 @@ def test_metered_writer_adopts_frontier_before_booking(spark):
     # constructed while the view does NOT yet exist on disk — that is
     # the late-adoption scenario. Building it after the active's merge
     # let __init__ adopt the frontier, and the test passed with or
-    # without the writer's _ensure_meta_adopted() call.
+    # without the writer's own _load() call.
     standby = Connector(spark, _cfg(work, keys=("user_id",)))
     assert standby.view._last_epoch is None  # nothing adopted yet
     # the active (created later, merging first) commits epoch 0 to meta
@@ -910,8 +910,7 @@ def test_connector_reads_each_segment_once(
     c = Connector(spark, cfg, snapshot_df=snap)
     c.start()
     try:
-        # wait on the commit log, not by polling read(): a read racing a
-        # merge's bucket swap can fail (ROADMAP item 2)
+        # wait on the commit log: it marks the batch that carried lsn 22
         deadline = time.time() + 120
         while PG.committed_checkpoint_lsn(cfg.checkpoint_dir) < 22:
             assert time.time() < deadline, "stream did not commit lsn 22"

@@ -162,8 +162,6 @@ def test_segment_index_compaction(spark, sf_dir):
     """compact() = the deferred LSM merge: appended segments collapse to
     one file per bucket, duplicate rows from crash-redelivered appends are
     dropped, and probe results are unchanged."""
-    import glob
-
     from go_pq_cdc_elasticsearch_spark.operators.dedup import minhash_band_rows
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 300)
@@ -173,11 +171,9 @@ def test_segment_index_compaction(spark, sf_dir):
     b1 = docs.filter(F.col("doc_id") % 2 == 1)
     idx.process_batch(b0, corpus=docs, epoch_id=0)
     idx.process_batch(b1, corpus=docs, epoch_id=1)
-    # simulate a crash-redelivery that slipped past the frontier (fresh
-    # handle whose meta was written before the frontier advanced)
-    idx.view._last_epoch = 0
+    # a duplicate append, as a crash-redelivery without an epoch makes
     idx.view.append_batch(
-        minhash_band_rows(b1, "text", "doc_id", idx.k, idx.bands), epoch_id=1
+        minhash_band_rows(b1, "text", "doc_id", idx.k, idx.bands)
     )
     n_rows_dup = idx.view.read_buckets().count()
     n_distinct = idx.view.read_buckets().distinct().count()
@@ -189,11 +185,7 @@ def test_segment_index_compaction(spark, sf_dir):
         tuple(r) for r in idx._indexed_bands(probe).distinct().collect()
     }
     idx.view.compact()
-    files = glob.glob(os.path.join(work, "idx", "bands", "__bucket=*", "*.parquet"))
-    per_bucket = {}
-    for f in files:
-        per_bucket.setdefault(os.path.dirname(f), []).append(f)
-    assert all(len(v) == 1 for v in per_bucket.values())
+    assert all(n == 1 for n in idx.view.segment_counts().values())
     assert idx.view.read_buckets().count() == n_distinct
     after = {tuple(r) for r in idx._indexed_bands(probe).collect()}
     assert after == before
@@ -452,7 +444,7 @@ def test_band_crash_window_then_new_lineage_still_indexes(spark, sf_dir):
     assert dd.view._last_epoch == 0
     assert not os.path.isdir(corpus_path)
 
-    # fresh deduper objects (a restart re-reads metas from disk)
+    # fresh deduper objects (a restart re-reads manifests from disk)
     dd2 = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
     write = dd2.foreach_batch_writer(corpus_path)
     sc.setLocalProperty("sql.streaming.queryId", "query-B")
@@ -543,14 +535,11 @@ def test_deduper_string_doc_ids(spark, sf_dir):
 
 
 def test_foreach_batch_crash_between_kept_swap_and_frontier(spark, sf_dir):
-    """Review r6: the DEEPER crash window — inside _merge_kept, AFTER the
-    kept-view bucket swap but BEFORE its frontier meta write (the replay
-    window materialized.py documents). On redelivery the kept view already
-    contains this epoch's ids while the frontier says the epoch never
-    committed; the exact-id anti-join must NOT strip those ids (they are
-    seq == this epoch), or the recompute diverges and the idempotent
-    corpus overwrite replaces epoch=N with a kept set that lost their
-    text — permanent loss plus an unverifiable-near-dup leak."""
+    """The deepest crash point inside _merge_kept: the kept view's new
+    files are written, its manifest commit never happens. The kept view
+    and its frontier stay at the previous generation together, and the
+    redelivered epoch must recompute the IDENTICAL kept set and leave the
+    corpus text intact — no loss, no duplicate."""
     from go_pq_cdc_elasticsearch_spark.streaming.incremental_dedup import (
         IncrementalDeduper,
     )
@@ -568,28 +557,23 @@ def test_foreach_batch_crash_between_kept_swap_and_frontier(spark, sf_dir):
         r["doc_id"] for r in dd.kept.read().select("doc_id").collect()
     }
 
-    # crash window: epoch-1 kept buckets swap, frontier meta write dies
-    real_swap = dd.kept._swap_buckets
-    calls = {"n": 0}
+    # crash point: epoch-1 kept files written, manifest commit dies
+    real_commit = dd.kept.store.commit
 
-    def swap_then_die(df, buckets):
-        real_swap(df, buckets)
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("injected crash after swap, before meta")
+    def die_before_commit(base, snap):
+        dd.kept.store.commit = real_commit
+        raise RuntimeError("injected crash before the kept-view commit")
 
-    dd.kept._swap_buckets = swap_then_die
+    dd.kept.store.commit = die_before_commit
     try:
         write(w1, 1)
         raise AssertionError("injected crash did not surface")
     except RuntimeError:
         pass
-    dd.kept._swap_buckets = real_swap
-    # the window: frontier says epoch 1 never committed, but the kept
-    # view's buckets already contain epoch 1's ids
-    assert dd.kept._last_epoch == 0
+    # files and frontier move together: neither landed
+    assert dd.kept._load()["last_epoch"] == 0
     kept_mid = {r["doc_id"] for r in dd.kept.read().select("doc_id").collect()}
-    assert kept_mid > kept_after_0  # epoch 1 ids landed in the swap
+    assert kept_mid == kept_after_0
     epoch1_expected = {
         r["doc_id"]
         for r in spark.read.parquet(
@@ -646,12 +630,12 @@ def test_lsh_index_rejects_hash_family_drift(spark, sf_dir):
 
 
 def test_crash_window_redelivery_identical_on_transitive_chain(spark):
-    """Review r8: the swap-before-frontier crash window with CHAIN-shaped
-    duplicates (pairs (1,2),(2,3), J(1,3) < tau — the clique-shaped data
-    of the r6 test masked this). A redelivery that condemns the batch
-    against its OWN crashed-attempt kept ids severs the chain at 2 and
-    keeps {1,3} — a permanent duplicate leak vs the clean run's {1}.
-    kept_prior must mean STRICTLY EARLIER EPOCHS (seq < epoch_id)."""
+    """Crash before the kept-view commit with CHAIN-shaped duplicates
+    (pairs (1,2),(2,3), J(1,3) < tau — clique-shaped data masks chain
+    bugs). A redelivery that condemned the batch against its OWN
+    crashed-attempt kept ids would sever the chain at 2 and keep {1,3}, a
+    permanent duplicate leak vs the clean run's {1}: the redelivered
+    epoch must recompute the identical kept set."""
     from go_pq_cdc_elasticsearch_spark.streaming.incremental_dedup import (
         IncrementalDeduper,
     )
@@ -674,24 +658,20 @@ def test_crash_window_redelivery_identical_on_transitive_chain(spark):
     kept_clean = {r["doc_id"] for r in dd_a.kept.read().select("doc_id").collect()}
     assert kept_clean == {1}
 
-    # crash window: kept bucket swap lands, frontier meta write dies
+    # crash point: kept files written, the manifest commit dies
     work_b = tempfile.mkdtemp(prefix="dd_chain_b_")
     dd_b = IncrementalDeduper(spark, os.path.join(work_b, "dd"), **kw)
     write_b = dd_b.foreach_batch_writer(os.path.join(work_b, "corpus"))
-    real_swap = dd_b.kept._swap_buckets
-    calls = {"n": 0}
+    real_commit = dd_b.kept.store.commit
 
-    def swap_then_die(df, buckets):
-        real_swap(df, buckets)
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("injected crash after swap, before meta")
+    def die_before_commit(base, snap):
+        dd_b.kept.store.commit = real_commit
+        raise RuntimeError("injected crash before the kept-view commit")
 
-    dd_b.kept._swap_buckets = swap_then_die
+    dd_b.kept.store.commit = die_before_commit
     with pytest.raises(RuntimeError, match="injected crash"):
         write_b(chain, 0)
-    dd_b.kept._swap_buckets = real_swap
-    assert {r["doc_id"] for r in dd_b.kept.read().select("doc_id").collect()} == {1}
+    assert not dd_b.kept.exists()  # nothing committed
 
     # redelivery must recompute the IDENTICAL kept set
     write_b(chain, 0)
@@ -705,11 +685,11 @@ def test_crash_window_redelivery_identical_on_transitive_chain(spark):
 
 
 def test_meta_writes_are_atomic(spark, sf_dir):
-    """Review r8: all three JSON metas (_INDEX_META/_LSH_META/_CORPUS_META)
-    are load-bearing (every open json.loads them with no recovery path), so
-    a crash mid-write must never leave torn JSON. Kill the writer between
-    the tmp write and the rename: the prior meta must be intact (or absent)
-    and the store must reopen cleanly."""
+    """The deduper's JSON metas (_LSH_META/_CORPUS_META) are load-bearing
+    (every open json.loads them with no recovery path), so a crash
+    mid-write must never leave torn JSON. Kill the writer between the tmp
+    write and the rename: the prior meta must be intact and the deduper
+    must reopen cleanly."""
     import json
 
     from go_pq_cdc_elasticsearch_spark.streaming import incremental_dedup as ID
@@ -718,63 +698,91 @@ def test_meta_writes_are_atomic(spark, sf_dir):
     work = tempfile.mkdtemp(prefix="dd_atomic_")
     dd = ID.IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
     corpus = os.path.join(work, "corpus")
-    dd.foreach_batch_writer(corpus)(docs, 0)
-    index_meta = dd.view._meta_path()
-    before = open(index_meta).read()
-    json.loads(before)  # valid
+    sc = spark.sparkContext
+    sc.setLocalProperty("sql.streaming.queryId", "query-A")
+    try:
+        dd.foreach_batch_writer(corpus)(docs, 0)
+    finally:
+        sc.setLocalProperty("sql.streaming.queryId", None)
+    metas = [
+        os.path.join(corpus, "_CORPUS_META.json"),
+        os.path.join(work, "dd", "_LSH_META.json"),
+    ]
+    before = [open(m).read() for m in metas]
+    for text in before:
+        json.loads(text)  # valid
 
     real_replace = os.replace
 
     def die_before_rename(src, dst):
-        if dst.endswith("_INDEX_META.json"):
+        if dst.endswith("_META.json"):
             raise RuntimeError("injected crash between tmp write and rename")
         return real_replace(src, dst)
 
     ID.os.replace = die_before_rename
     try:
-        with pytest.raises(RuntimeError, match="injected crash"):
-            dd.view._write_meta()
+        for m in metas:
+            with pytest.raises(RuntimeError, match="injected crash"):
+                ID._atomic_json_dump(m, {"torn": True})
     finally:
         ID.os.replace = real_replace
-    # the live meta is untouched and still valid JSON; reopen works
-    assert open(index_meta).read() == before
+    # the live metas are untouched and still valid JSON; reopen works
+    assert [open(m).read() for m in metas] == before
     reopened = ID.IncrementalDeduper(
         spark, os.path.join(work, "dd"), jaccard_threshold=TAU
     )
-    assert reopened.view._last_epoch == dd.view._last_epoch
+    assert reopened.kept._last_epoch == dd.kept._last_epoch == 0
 
 
-def test_compact_cleans_staging_on_failure(spark, sf_dir):
-    """Review r8: a failed compact rewrite must not abandon a full bsi_*
-    staging copy of the index next to the live path on every retry."""
-    import glob
+def test_band_compact_crash_keeps_segments(spark, sf_dir, monkeypatch):
+    """A compaction that dies part-way (after moving one rewritten file
+    into its bucket dir) commits nothing: the index keeps its segments
+    and rows and leaves no staging dir; the next commit after the grace
+    period deletes the orphan, and a retried compaction completes."""
+    from go_pq_cdc_elasticsearch_spark.sink import store as S
 
-    from go_pq_cdc_elasticsearch_spark.streaming import incremental_dedup as ID
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 40)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 80)
     work = tempfile.mkdtemp(prefix="dd_compactfail_")
-    dd = LshDedupIndex(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
-    dd.process_batch(docs, docs.limit(0), epoch_id=0)
+    dd = LshDedupIndex(spark, os.path.join(work, "dd"), n_buckets=4)
+    dd.process_batch(docs.filter(F.col("doc_id") % 2 == 0), docs, epoch_id=0)
+    dd.process_batch(docs.filter(F.col("doc_id") % 2 == 1), docs, epoch_id=1)
+    counts = dd.view.segment_counts()
+    rows = dd.view.read_buckets().count()
+    assert any(n > 1 for n in counts.values())
 
-    real = ID.swap_bucket_dir
+    real_rename = os.rename
+    calls = {"n": 0}
 
-    def die(path, src, b):
-        raise RuntimeError("injected swap failure")
+    def rename_once_then_die(src, dst):
+        calls["n"] += 1
+        if calls["n"] > 1:
+            raise OSError("injected crash mid-compaction")
+        return real_rename(src, dst)
 
-    ID.swap_bucket_dir = die
-    try:
-        # min_files=1 forces the rewrite: after one batch each bucket holds
-        # a single segment, which the default min_files=2 would now skip
-        with pytest.raises(RuntimeError, match="injected swap failure"):
-            dd.view.compact(min_files=1)
-    finally:
-        ID.swap_bucket_dir = real
-    leftovers = glob.glob(os.path.join(work, "dd", "bsi_*")) + glob.glob(
-        os.path.join(work, "bsi_*")
-    )
-    assert leftovers == [], f"staging dirs leaked: {leftovers}"
-    # and the index is still fully usable (swap never started mid-bucket)
-    assert dd.view.read_buckets().count() > 0
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", rename_once_then_die)
+        with pytest.raises(OSError, match="injected crash mid-compaction"):
+            dd.compact()
+    bands = os.path.join(work, "dd", "bands")
+    staging = os.path.join(bands, "_staging")
+    assert not os.path.isdir(staging) or os.listdir(staging) == []
+    assert dd.view.segment_counts() == counts
+    assert dd.view.read_buckets().count() == rows
+
+    monkeypatch.setattr(S, "GC_GRACE_S", 0.0)
+    dd.compact()
+    assert all(n == 1 for n in dd.view.segment_counts().values())
+    assert dd.view.read_buckets().count() == rows
+    live = {
+        rel for rels in dd.view.store.latest()["files"].values() for rel in rels
+    }
+    on_disk = {
+        f"{d}/{name}"
+        for d in os.listdir(bands)
+        if d.startswith("__bucket=")
+        for name in os.listdir(os.path.join(bands, d))
+    }
+    assert on_disk == live
 
 
 def test_refeed_kept_id_preserves_prior_status_and_none_epoch_refused(spark):
@@ -910,12 +918,12 @@ def test_corpus_consolidation_and_min_files(spark, sf_dir):
     # second compact rewrites ONLY those (other buckets keep their file)
     untouched_before = {
         b: os.listdir(os.path.join(dd.view.path, f"__bucket={b}"))
-        for b in dd.view._bucket_dirs()
+        for b in dd.view._live_buckets()
     }
     write(docs.filter(F.col("doc_id") % 4 == 3), 3)
     grew = {b for b, n in dd.view.segment_counts().items() if n > 1}
     dd.compact(corpus_path=corpus_path)
-    for b in dd.view._bucket_dirs():
+    for b in dd.view._live_buckets():
         if b not in grew and b in untouched_before:
             assert (
                 os.listdir(os.path.join(dd.view.path, f"__bucket={b}"))
@@ -1053,7 +1061,7 @@ def test_band_index_autosize_scales_past_old_cap(spark):
     )
     idx.append_batch(bands, epoch_id=0)
     assert idx.n_buckets == 300  # past the old 256 cap, == ceil(300/1)
-    # reopen adopts the sized layout from meta
+    # reopen adopts the sized layout from the manifest
     again = _BandSegmentIndex(spark, os.path.join(work, "bands"))
     assert again.n_buckets == 300
     # every appended row is readable back through the sized layout
@@ -1095,6 +1103,9 @@ def test_compact_guard_names_outstanding_lazy_results(spark, sf_dir):
         docs.limit(5), corpus=docs, epoch_id=2, eager=False
     ).collect()
     idx.compact(force=True)
+    # force declared the epoch-2 result materialized: a plain compact
+    # no longer raises for it
+    idx.compact()
 
 
 def test_foreach_writer_auto_compacts(spark, sf_dir):

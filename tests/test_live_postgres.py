@@ -194,22 +194,14 @@ def _collect(client: PG.ReplicationClient, n: int, deadline_sec: float = 30.0):
 
 
 def _view_state(c) -> "dict | None":
-    """One polling read of a live Connector's view, or None when the read
-    landed in a transient not-ready window so the caller's deadline loop
-    just retries: (a) view not initialized yet (Python FileNotFoundError),
-    (b) the documented read-during-swap window — the per-bucket two-rename
-    swap (sink/materialized.py module doc) can make a concurrently-planned
-    scan lose its listed file, surfacing as a Py4J-wrapped
-    java.io.FileNotFoundException mid-collect."""
+    """One polling read of a live Connector's view, or None while the
+    view is not initialized yet (so the caller's deadline loop just
+    retries). A read resolves one committed manifest and reads its
+    files, so a concurrent merge cannot make it fail."""
     try:
         return {r["id"]: r["payload"]["v"] for r in c.read().collect()}
     except FileNotFoundError:
         return None
-    except Exception as e:  # noqa: BLE001 — inspect, rethrow non-transient
-        msg = str(e)
-        if "FileNotFoundException" in msg or "PATH_NOT_FOUND" in msg:
-            return None
-        raise
 
 
 def test_live_insert_update_delete_roundtrip(pg):
@@ -778,8 +770,8 @@ def test_live_ddl_add_column_and_widen_mid_stream(pg, spark):
        frames overwrite ``decoder.relations[relid]``) decodes the NEW
        shape — post-DDL rows carry the added column and an id beyond
        int32, pre-DDL rows don't;
-    2. the view's drift-merge (q_c13 semantics: new columns only,
-       mergeSchema reconciliation) lands the added column with NULL
+    2. the view's drift-merge (q_c13 semantics: the manifest's schema
+       grows by the new column) lands the added column with NULL
        backfill on pre-DDL rows;
     3. zero loss across the DDL boundary — every row from both epochs is
        in the view exactly once with its correct payload.

@@ -93,10 +93,12 @@ def test_incremental_merge_leaves_untouched_buckets_byte_identical(spark):
     after = snapshot_files()
     from pyspark.sql import functions as F
 
-    touched_bucket = mv._bucket_dir(
-        _batch(spark, [(0, "x", 7, 0.0)])
+    touched_bucket = os.path.join(
+        path,
+        "__bucket=%d"
+        % _batch(spark, [(0, "x", 7, 0.0)])
         .select(F.pmod(F.hash("user_id"), F.lit(8)).alias("b"))
-        .collect()[0]["b"]
+        .collect()[0]["b"],
     )
     changed_dirs = {
         os.path.dirname(p)
@@ -128,7 +130,7 @@ def test_rebucket_preserves_state(spark):
     )
     before = {r["user_id"]: r["value"] for r in mv.read().collect()}
     mv.rebucket(8)
-    assert mv._bucket_dirs() and len(mv._bucket_dirs()) <= 8
+    assert 0 < len(mv._live_buckets()) <= 8
     after = {r["user_id"]: r["value"] for r in mv.read().collect()}
     assert after == before
     # reopening picks up the new layout, merges still work
@@ -140,10 +142,10 @@ def test_rebucket_preserves_state(spark):
 
 def test_rebucket_adopts_late_meta(spark):
     """rebucket() on a view object constructed BEFORE the store appeared
-    on disk (the standby pattern) must adopt the on-disk meta first, like
-    merge_batch/vacuum/truncate_upto do — without it, _write_meta()
-    clobbered the stored epoch frontier, schema, and lineage with the
-    fresh object's None fields (ADVICE r11)."""
+    on disk (the standby pattern) must adopt the newest manifest first,
+    like merge_batch/vacuum/truncate_upto do — otherwise its commit would
+    clobber the stored epoch frontier, schema, and lineage with the fresh
+    object's None fields."""
     path = os.path.join(tempfile.mkdtemp(prefix="mv_rbla_"), "view")
     standby = MaterializedView(spark, path, n_buckets=2)  # store absent
     active = MaterializedView(spark, path, n_buckets=4)
@@ -162,22 +164,6 @@ def test_rebucket_adopts_late_meta(spark):
         _batch(spark, [(3, "insert", 3, 3.0)]), epoch_id=7, lineage="q1"
     )
     assert {r["user_id"] for r in reopened.read().collect()} == {1, 2}
-
-
-def test_rebucket_clears_stale_rbold(spark):
-    """A stale .rbold (a prior rebucket's final rmtree lost) must not make
-    the next in-process rebucket's os.rename(path, rbold) fail ENOTEMPTY —
-    recovery only runs in __init__, so rebucket() has to clear it itself."""
-    path = os.path.join(tempfile.mkdtemp(prefix="mv_rbold_"), "view")
-    mv = MaterializedView(spark, path, n_buckets=2)
-    mv.merge_batch(_batch(spark, [(i, "insert", i, float(i)) for i in range(6)]))
-    stale = path + ".rbold"
-    os.makedirs(stale, exist_ok=True)
-    with open(os.path.join(stale, "leftover.parquet"), "w") as f:
-        f.write("stale")
-    mv.rebucket(4)  # must not raise ENOTEMPTY
-    assert not os.path.exists(stale)
-    assert {r["user_id"] for r in mv.read().collect()} == set(range(6))
 
 
 def test_in_batch_dedup_before_apply(spark):
@@ -232,32 +218,6 @@ def test_unknown_lineage_does_not_reset_frontier(spark):
     assert {r["value"] for r in mv.read().filter("user_id = 1").collect()} == {11.0}
 
 
-def test_interrupted_swap_recovery(spark):
-    # simulate a crash between _swap_buckets' two renames: the live bucket
-    # dir was renamed to .old, the replacement was lost with the tmp dir.
-    # Reopening the view must restore the pre-merge state (lossless) and
-    # keep every read path working; the redelivered batch then re-merges.
-    import shutil
-
-    path = os.path.join(tempfile.mkdtemp(prefix="mv_c_"), "view")
-    mv = MaterializedView(spark, path)
-    mv.merge_batch(_batch(spark, [(1, "insert", 1, 10.0), (2, "insert", 2, 20.0)]),
-                   epoch_id=0, lineage="q1")
-    [b] = [d for d in os.listdir(path) if d.startswith("__bucket=")]
-    os.rename(os.path.join(path, b), os.path.join(path, b + ".old"))
-    mv2 = MaterializedView(spark, path)  # reopen -> recovery runs
-    assert {r["value"] for r in mv2.read().collect()} == {10.0, 20.0}
-    # redelivery of the interrupted batch is a no-op / idempotent
-    mv2.merge_batch(_batch(spark, [(3, "update", 1, 11.0)]), epoch_id=1, lineage="q1")
-    assert {r["value"] for r in mv2.read().collect()} == {11.0, 20.0}
-    # completed-swap leftovers (live dir present + .old) are garbage-collected
-    live = os.path.join(path, b)
-    shutil.copytree(live, live + ".old")
-    mv3 = MaterializedView(spark, path)
-    assert not os.path.exists(live + ".old")
-    assert {r["value"] for r in mv3.read().collect()} == {11.0, 20.0}
-
-
 def test_reopen_with_different_contract_raises(spark):
     """The bucket hashing and LWW resolution are baked into the stored
     layout: reopening with different keys (or seq/op/delete config) would
@@ -278,45 +238,6 @@ def test_reopen_with_different_contract_raises(spark):
     assert MaterializedView(spark, path, keys=("user_id",)).read().count() == 1
 
 
-def test_rebucket_crash_recovery(spark):
-    """rebucket uses a whole-dir two-rename swap: a crash between the two
-    renames must roll FORWARD when the staged copy is complete (meta
-    present — written last) and roll BACK when it is not. The earlier
-    delete-then-rename version lost the entire view in that window."""
-    import shutil
-
-    from go_pq_cdc_elasticsearch_spark.sink.materialized import (
-        _recover_interrupted_rebucket,
-    )
-
-    path = os.path.join(tempfile.mkdtemp(prefix="mv_rbc_"), "view")
-    mv = MaterializedView(spark, path, n_buckets=2)
-    mv.merge_batch(_batch(spark, [(i, "insert", i, float(i)) for i in range(10)]))
-    before = {r["user_id"]: r["value"] for r in mv.read().collect()}
-
-    # crash between rename(path->rbold) and rename(rbnew->path), staged
-    # copy COMPLETE: reopen rolls forward to the new layout
-    shutil.copytree(path, path + ".rbnew")
-    os.rename(path, path + ".rbold")
-    mv2 = MaterializedView(spark, path)
-    assert {r["user_id"]: r["value"] for r in mv2.read().collect()} == before
-    assert not os.path.exists(path + ".rbold")
-
-    # same window but staged copy INCOMPLETE (no meta): roll back
-    shutil.copytree(path, path + ".rbnew")
-    os.remove(os.path.join(path + ".rbnew", "_VIEW_META.json"))
-    os.rename(path, path + ".rbold")
-    _recover_interrupted_rebucket(path)
-    assert {r["user_id"]: r["value"] for r in
-            MaterializedView(spark, path).read().collect()} == before
-    assert not os.path.exists(path + ".rbnew")
-
-    # and a real end-to-end rebucket still preserves state
-    mv3 = MaterializedView(spark, path)
-    mv3.rebucket(8)
-    assert {r["user_id"]: r["value"] for r in mv3.read().collect()} == before
-
-
 def test_vacuum_to_empty_keeps_schema_readable(spark):
     """Retention dropping the LAST row must leave an empty typed view, not
     a 'not initialized' FileNotFoundError (review r5)."""
@@ -327,26 +248,6 @@ def test_vacuum_to_empty_keeps_schema_readable(spark):
     out = mv.read()
     assert out.count() == 0
     assert "user_id" in out.columns  # schema survived
-
-
-def test_drift_not_rearmed_by_missing_column_batches(spark):
-    """A source that permanently DROPPED a column must not re-flag drift
-    on every batch forever (defeating vacuum's reset) — the merged write
-    carries the superset, so the files stay uniform (review r5)."""
-    path = os.path.join(tempfile.mkdtemp(prefix="mv_drift_"), "view")
-    mv = MaterializedView(spark, path, n_buckets=2)
-    mv.merge_batch(_batch(spark, [(1, "insert", 1, 1.0)]))
-    from pyspark.sql import functions as F
-    wide = _batch(spark, [(2, "insert", 2, 2.0)]).withColumn("src", F.lit("a"))
-    mv.merge_batch(wide)  # drift: new column
-    assert mv._drifted
-    mv.vacuum(watermark_seq=-1)  # full rewrite unifies schemas
-    assert not mv._drifted
-    narrow = _batch(spark, [(3, "insert", 3, 3.0)])  # 'src' missing
-    mv.merge_batch(narrow)
-    assert not mv._drifted  # missing-known-column batch: no re-arm
-    got = {r["user_id"]: r["src"] for r in mv.read().collect()}
-    assert got[2] == "a" and got[3] is None
 
 
 def test_one_bucket_empty_batch_skips_rewrite(spark):
@@ -434,27 +335,6 @@ def test_merge_batch_rejects_reserved_bucket_column(spark, tmp_path):
         view.merge_batch(bad)
 
 
-def test_meta_write_is_atomic(spark, tmp_path):
-    """Review r7: _write_meta now goes through temp+rename, so a meta
-    file's existence implies completeness (rebucket recovery rolls
-    forward on exactly that signal) and no .tmp garbage survives."""
-    import json as _json
-    import os as _os
-
-    from go_pq_cdc_elasticsearch_spark.sink.materialized import MaterializedView
-
-    path = str(tmp_path / "v")
-    view = MaterializedView(
-        spark, path, keys=("k",), seq_col="seq", op_col="op", delete_op="delete",
-    )
-    batch = spark.createDataFrame([(1, 1, "upsert")], "k long, seq long, op string")
-    view.merge_batch(batch, epoch_id=0)
-    meta = _os.path.join(path, "_VIEW_META.json")
-    assert _os.path.exists(meta)
-    _json.load(open(meta))  # complete, parseable
-    assert not _os.path.exists(meta + ".tmp")
-
-
 def test_fence_zombie_writer_aborts_loudly(spark, tmp_path):
     """U3 fencing (review r11): after a takeover bumps the view's fence
     generation, the old writer's every mutation raises FencedWriterError
@@ -501,8 +381,8 @@ def test_fence_zombie_writer_aborts_loudly(spark, tmp_path):
 
 
 def test_fence_survives_rebucket(spark, tmp_path):
-    """rebucket's whole-dir swap must carry the fence marker into the new
-    dir — losing it would silently un-fence every zombie."""
+    """rebucket's commit must carry the fence token forward — losing it
+    would silently un-fence every zombie."""
     from go_pq_cdc_elasticsearch_spark.sink.materialized import (
         MaterializedView,
         read_fence,
@@ -520,8 +400,8 @@ def test_fence_survives_rebucket(spark, tmp_path):
 
 
 def test_fence_acquire_is_atomic_under_races(spark, tmp_path):
-    """acquire_fence is an O_EXCL filesystem CAS: N instances racing it
-    claim N DISTINCT generations (a read-modify-write on a shared file
+    """acquire_fence is a conditional manifest commit: N instances racing
+    it claim N DISTINCT tokens (a read-modify-write on a shared file
     handed racers the same token — no mutual exclusion). Exactly one
     instance — the highest claim — survives the fence check."""
     import threading
@@ -565,105 +445,389 @@ def test_fence_acquire_is_atomic_under_races(spark, tmp_path):
                 v.merge_batch(batch)
 
 
-def test_fence_checked_in_write_meta(spark, tmp_path):
-    """ADVICE r11: merge_batch checks the fence at entry, but the Spark
-    aggregation between entry and the first meta write can run for
-    minutes — a zombie fenced mid-batch could still overwrite the
-    _VIEW_META.json sidecar (epoch frontier / lineage) after takeover.
-    _write_meta itself is now fence-checked, so the meta clobber window
-    is closed like the bucket-swap window already was."""
-    import json as _json
-    import os as _os
+
+
+# -- manifest commit points ---------------------------------------------------
+
+
+def _rows(view):
+    return {r["user_id"]: (r["event_id"], r["value"]) for r in view.read().collect()}
+
+
+def _crash_once(monkeypatch, obj, name):
+    """Make ``obj.name`` raise on its next call, then behave normally."""
+    real = getattr(obj, name)
+
+    def die(*args, **kwargs):
+        monkeypatch.setattr(obj, name, real)
+        raise RuntimeError(f"injected crash in {name}")
+
+    monkeypatch.setattr(obj, name, die)
+
+
+def _rename_fails_after(n_ok):
+    """An os.rename that moves ``n_ok`` files, then fails (a crash while
+    a write moves its files into the bucket dirs)."""
+    real = os.rename
+    calls = {"n": 0}
+
+    def rename(src, dst):
+        calls["n"] += 1
+        if calls["n"] > n_ok:
+            raise OSError("injected crash mid-write")
+        return real(src, dst)
+
+    return rename
+
+
+def _disk_files(path):
+    import glob
+
+    return {
+        os.path.relpath(p, path)
+        for p in glob.glob(os.path.join(path, "__bucket=*", "*.parquet"))
+    }
+
+
+def _live_files(view):
+    snap = view.store.latest()
+    return {rel for rels in snap["files"].values() for rel in rels}
+
+
+def _jobs(spark, fn):
+    """Run ``fn``; return its result and the number of Spark jobs the
+    application submitted meanwhile, counted over every job group."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    before = store.jobsList(None).size()
+    out = fn()
+    return out, store.jobsList(None).size() - before
+
+
+def test_crash_before_commit_keeps_previous_generation(spark, tmp_path, monkeypatch):
+    """Crash after the merge's files are written and before the manifest
+    link: readers keep the previous generation, the frontier does not
+    move, and redelivering the epoch converges to the state of a run
+    that never crashed."""
+    import pytest
+
+    path = str(tmp_path / "v")
+    first = _batch(spark, [(i, "insert", i, float(i)) for i in range(20)])
+    second = _batch(spark, [(100 + i, "update", i, -1.0) for i in range(0, 20, 3)])
+    mv = MaterializedView(spark, path, n_buckets=4)
+    mv.merge_batch(first, epoch_id=0)
+    before, gen = _rows(mv), mv.store.latest()["gen"]
+
+    _crash_once(monkeypatch, mv.store, "commit")
+    with pytest.raises(RuntimeError, match="injected crash in commit"):
+        mv.merge_batch(second, epoch_id=1)
+    assert _disk_files(path) > _live_files(mv)  # the new files were written
+    reopened = MaterializedView(spark, path)
+    assert reopened.store.latest()["gen"] == gen
+    assert reopened._last_epoch == 0
+    assert _rows(reopened) == before
+
+    reopened.merge_batch(second, epoch_id=1)  # redelivery
+    clean = MaterializedView(spark, str(tmp_path / "clean"), n_buckets=4)
+    clean.merge_batch(first, epoch_id=0)
+    clean.merge_batch(second, epoch_id=1)
+    assert _rows(mv) == _rows(clean)
+
+
+def test_crash_after_commit_before_gc(spark, tmp_path, monkeypatch):
+    """Crash after the manifest link and before GC: the merge is committed
+    with its frontier, so redelivery is a no-op, and the files it replaced
+    are deleted by a later commit once the grace period has passed."""
+    import pytest
+
+    from go_pq_cdc_elasticsearch_spark.sink import store as S
+
+    path = str(tmp_path / "v")
+    mv = MaterializedView(spark, path, n_buckets=1)
+    mv.merge_batch(_batch(spark, [(1, "insert", 1, 1.0)]), epoch_id=0)
+    second = _batch(spark, [(2, "update", 1, 2.0), (3, "insert", 2, 3.0)])
+    _crash_once(monkeypatch, mv.store, "_gc")
+    with pytest.raises(RuntimeError, match="injected crash in _gc"):
+        mv.merge_batch(second, epoch_id=1)
+    reopened = MaterializedView(spark, path)
+    assert reopened._last_epoch == 1
+    assert _rows(reopened) == {1: (2, 2.0), 2: (3, 3.0)}
+    gen = reopened.store.latest()["gen"]
+    retired = set(reopened.store.latest()["retired"])
+    assert retired and retired <= _disk_files(path)  # kept for readers
+
+    reopened.merge_batch(second, epoch_id=1)  # redelivery: skipped
+    assert reopened.store.latest()["gen"] == gen
+
+    monkeypatch.setattr(S, "GC_GRACE_S", 0.0)
+    reopened.merge_batch(_batch(spark, [(4, "update", 2, 4.0)]), epoch_id=2)
+    assert _disk_files(path) == _live_files(reopened)
+    assert os.listdir(os.path.join(path, "_manifest")) == [f"{gen + 1}.json"]
+    assert _rows(reopened) == {1: (2, 2.0), 2: (4, 4.0)}
+
+
+def test_rebucket_crash_keeps_old_layout(spark, tmp_path, monkeypatch):
+    """Crash mid-rebucket, after some of the re-hashed files were moved
+    into bucket dirs: rows move BETWEEN buckets, yet readers see the old
+    layout with every key exactly once, and a retried rebucket
+    completes."""
+    import pytest
+
+    path = str(tmp_path / "v")
+    mv = MaterializedView(spark, path, n_buckets=2)
+    mv.merge_batch(_batch(spark, [(i, "insert", i, float(i)) for i in range(30)]))
+    before = _rows(mv)
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", _rename_fails_after(1))
+        with pytest.raises(OSError, match="injected crash mid-write"):
+            mv.rebucket(8)
+    reopened = MaterializedView(spark, path)
+    assert reopened.n_buckets == 2
+    ids = [r["user_id"] for r in reopened.read().collect()]
+    assert len(ids) == len(set(ids))
+    assert _rows(reopened) == before
+    reopened.rebucket(8)
+    assert MaterializedView(spark, path).n_buckets == 8
+    assert _rows(reopened) == before
+
+
+def test_torn_manifest_temp_never_becomes_newest(spark, tmp_path, monkeypatch):
+    """A crash while the next manifest is being written leaves a torn
+    temp file that never becomes a generation: readers keep the previous
+    one, the next commit succeeds, and GC removes the temp."""
+    import json
+    import types
 
     import pytest
 
+    from go_pq_cdc_elasticsearch_spark.sink import store as S
+
+    path = str(tmp_path / "v")
+    mv = MaterializedView(spark, path, n_buckets=1)
+    mv.merge_batch(_batch(spark, [(1, "insert", 1, 1.0)]), epoch_id=0)
+    gen = mv.store.latest()["gen"]
+
+    def torn(obj, f):
+        f.write(json.dumps(obj)[:20])
+        raise OSError("injected crash mid-manifest")
+
+    second = _batch(spark, [(2, "update", 1, 2.0)])
+    with monkeypatch.context() as m:
+        m.setattr(S, "json", types.SimpleNamespace(dump=torn, load=json.load))
+        with pytest.raises(OSError, match="injected crash mid-manifest"):
+            mv.merge_batch(second, epoch_id=1)
+    mdir = os.path.join(path, "_manifest")
+    assert any(n.endswith(".tmp") for n in os.listdir(mdir))
+    reopened = MaterializedView(spark, path)
+    assert reopened.store.latest()["gen"] == gen
+    assert _rows(reopened) == {1: (1, 1.0)}
+
+    monkeypatch.setattr(S, "GC_GRACE_S", 0.0)
+    reopened.merge_batch(second, epoch_id=1)
+    assert os.listdir(mdir) == [f"{gen + 1}.json"]
+    assert _rows(reopened) == {1: (2, 2.0)}
+
+
+def test_failed_write_leaves_only_files_gc_removes(spark, tmp_path, monkeypatch):
+    """A write that dies part-way leaves no staging dir and only files no
+    manifest names; once the grace period has passed, the next commit
+    deletes them, and the store holds exactly the newest manifest's
+    files."""
+    import pytest
+
+    from go_pq_cdc_elasticsearch_spark.sink import store as S
+
+    path = str(tmp_path / "v")
+    mv = MaterializedView(spark, path, n_buckets=4)
+    mv.merge_batch(_batch(spark, [(i, "insert", i, float(i)) for i in range(20)]))
+    live = _live_files(mv)
+    update = _batch(spark, [(100 + i, "update", i, -1.0) for i in range(20)])
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", _rename_fails_after(2))
+        with pytest.raises(OSError, match="injected crash mid-write"):
+            mv.merge_batch(update, epoch_id=1)
+    staging = os.path.join(path, "_staging")
+    assert not os.path.isdir(staging) or os.listdir(staging) == []
+    assert _live_files(mv) == live
+    assert _disk_files(path) - live  # orphans of the failed write
+
+    monkeypatch.setattr(S, "GC_GRACE_S", 0.0)
+    mv.merge_batch(update, epoch_id=1)
+    assert _disk_files(path) == _live_files(mv)
+    assert {v for _e, v in _rows(mv).values()} == {-1.0}
+
+
+def test_takeover_mid_merge_fails_the_zombie_commit(spark, tmp_path, monkeypatch):
+    """A fenced writer already past its fence check when the takeover
+    lands loses its commit: the takeover consumed the generation the
+    zombie would link, so the zombie's files never become visible."""
+    import pytest
+
     from go_pq_cdc_elasticsearch_spark.sink.materialized import (
-        _META,
         FencedWriterError,
-        MaterializedView,
+        read_fence,
     )
 
     path = str(tmp_path / "v")
     a = MaterializedView(spark, path)
     a.acquire_fence()
     a.merge_batch(_batch(spark, [(1, "insert", 1, 10.0)]), epoch_id=7)
-
     b = MaterializedView(spark, path)
-    b.acquire_fence()  # takeover mid-flight
+    real_write = a.store.write
 
-    # the zombie's direct meta write (the tail end of a long merge) dies
-    # loudly and leaves the sidecar untouched
-    a._last_epoch = 99
-    with pytest.raises(FencedWriterError):
-        a._write_meta()
-    with open(_os.path.join(path, _META)) as f:
-        assert _json.load(f)["last_epoch"] == 7
+    def write_then_takeover(df, n_buckets):
+        out = real_write(df, n_buckets)
+        b.acquire_fence()
+        return out
 
-    # the new active's meta writes pass (epoch above the adopted
-    # frontier — at or below it the redelivery guard skips the merge)
-    b.merge_batch(_batch(spark, [(2, "update", 1, 11.0)]), epoch_id=8)
-    with open(_os.path.join(path, _META)) as f:
-        assert _json.load(f)["last_epoch"] == 8
+    monkeypatch.setattr(a.store, "write", write_then_takeover)
+    with pytest.raises(FencedWriterError, match="lost generation"):
+        a.merge_batch(_batch(spark, [(2, "update", 1, 666.0)]), epoch_id=8)
+    assert read_fence(path) == 2
+    assert _rows(b) == {1: (1, 10.0)}
+    assert MaterializedView(spark, path)._last_epoch == 7
+    b.merge_batch(_batch(spark, [(3, "update", 1, 11.0)]), epoch_id=8)
+    assert _rows(b) == {1: (3, 11.0)}
 
 
-def _jobs_of(spark, fn):
-    """Run ``fn`` under a fresh job group; return its result and the
-    number of Spark jobs it submitted."""
-    import uuid
+def test_stale_writer_fails_even_after_its_generation_was_pruned(
+    spark, tmp_path, monkeypatch
+):
+    """A writer whose base generation went stale while it wrote its files
+    cannot commit, whether the generation it would claim still exists
+    (the link fails) or GC already pruned it (the link succeeds, a newer
+    generation is found, the commit is withdrawn). The other writer's
+    state stays."""
+    import pytest
 
-    sc = spark.sparkContext
-    group = f"mv_probe_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "jobs of one call")
+    from go_pq_cdc_elasticsearch_spark.sink import store as S
+    from go_pq_cdc_elasticsearch_spark.sink.materialized import FencedWriterError
+
+    monkeypatch.setattr(S, "GC_GRACE_S", 0.0)
+    path = str(tmp_path / "v")
+    a = MaterializedView(spark, path)
+    a.merge_batch(_batch(spark, [(1, "insert", 1, 1.0)]))
+    b = MaterializedView(spark, path)
+    real_write = a.store.write
+    seq = iter(range(10, 100))
+
+    for overtakes in (1, 3):
+        base = a.store.latest()["gen"]
+
+        def write_then_overtaken(df, n_buckets, overtakes=overtakes):
+            out = real_write(df, n_buckets)
+            for _ in range(overtakes):
+                b.merge_batch(_batch(spark, [(next(seq), "update", 1, 2.0)]))
+            return out
+
+        with monkeypatch.context() as m:
+            m.setattr(a.store, "write", write_then_overtaken)
+            with pytest.raises(FencedWriterError):
+                a.merge_batch(_batch(spark, [(5, "update", 2, 666.0)]))
+        if overtakes > 1:  # the name the stale writer linked had been pruned
+            assert not os.path.exists(
+                os.path.join(path, "_manifest", f"{base + 1}.json")
+            )
+        assert b.store.latest()["gen"] == base + overtakes
+        assert set(_rows(b)) == {1}
+
+
+def test_reads_never_fail_while_merging(spark, tmp_path):
+    """1000 read().count() calls on a 4-bucket view while another thread
+    merges continuously: each read resolves one committed generation and
+    reads its explicit files, so none fails and every count is right."""
+    import threading
+
+    path = str(tmp_path / "v")
+    writer = MaterializedView(spark, path, n_buckets=4)
+    writer.merge_batch(_batch(spark, [(i, "insert", i, 0.0) for i in range(40)]))
+    stop = threading.Event()
+    merged, errors = [], []
+
+    def merge_loop():
+        epoch = 1
+        while not stop.is_set():
+            try:
+                writer.merge_batch(
+                    _batch(
+                        spark,
+                        [(1000 * epoch + i, "update", i, float(epoch))
+                         for i in range(epoch % 7, 40, 7)],
+                    ),
+                    epoch_id=epoch,
+                )
+            except Exception as exc:  # noqa: BLE001 - reported below
+                errors.append(exc)
+                return
+            merged.append(epoch)
+            epoch += 1
+
+    t = threading.Thread(target=merge_loop)
+    t.start()
+    reader = MaterializedView(spark, path)
     try:
-        out = fn()
+        counts = [reader.read().count() for _ in range(1000)]
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        stop.set()
+        t.join(timeout=120)
+    assert not t.is_alive()
+    assert not errors, errors
+    assert len(merged) >= 5
+    assert set(counts) == {40}
+
+
+def test_store_adds_no_spark_job(spark, tmp_path):
+    """Spark jobs per view operation, counted over every job group, are
+    no more than the directory-swap layout needed: a 1-bucket merge 4, a
+    4-bucket merge 7, an empty batch 1 / 3, read().count() 2. Reads pass
+    explicit files, and Spark lists more than 32 paths in a job, so each
+    bucket keeps one live file."""
+    budgets = {1: (4, 1, 2), 4: (7, 3, 2)}
+    for n_buckets, (merge_jobs, empty_jobs, count_jobs) in budgets.items():
+        mv = MaterializedView(
+            spark, str(tmp_path / f"v{n_buckets}"), n_buckets=n_buckets
+        )
+        mv.merge_batch(
+            _batch(spark, [(i, "insert", i, float(i)) for i in range(40)]), epoch_id=0
+        )
+        update = _batch(spark, [(100 + i, "update", i, 1.0) for i in range(0, 40, 3)])
+        _, jobs = _jobs(spark, lambda: mv.merge_batch(update, epoch_id=1))
+        assert jobs <= merge_jobs, (n_buckets, "merge", jobs)
+        _, jobs = _jobs(spark, lambda: mv.merge_batch(_batch(spark, []), epoch_id=2))
+        assert jobs <= empty_jobs, (n_buckets, "empty", jobs)
+        assert mv._last_epoch == 2
+        n, jobs = _jobs(spark, lambda: mv.read().count())
+        assert n == 40 and jobs <= count_jobs, (n_buckets, "count", jobs)
+        assert all(len(v) == 1 for v in mv.store.latest()["files"].values())
 
 
 def test_read_uses_recorded_schema_until_drift(spark, tmp_path):
-    """A view that never drifted is read with the schema its meta
-    records, so building read() submits no Spark job (no footer
-    inference); a drifted view still reconciles footers and shows its
-    new column; a meta without a schema (older layouts) still reads."""
-    import json as _json
-
-    from go_pq_cdc_elasticsearch_spark.sink.materialized import _META
-
+    """Every read uses the schema the manifest records, so building read()
+    submits no Spark job (no footer inference) — before and after a
+    drifted batch added a column to one bucket's file only. Files written
+    before the column existed read it as NULL, on the writer and on a
+    reopened view."""
     path = str(tmp_path / "v")
     mv = MaterializedView(spark, path, n_buckets=4)
     mv.merge_batch(_batch(spark, [(i, "insert", i, float(i)) for i in range(8)]))
     mv.merge_batch(_batch(spark, [(9, "update", 3, 33.0)]))
-    inferred = spark.read.option("basePath", path).parquet(path)
-
-    df, jobs = _jobs_of(spark, mv.read)
+    df, jobs = _jobs(spark, mv.read)
     assert jobs == 0
-    assert df.schema == inferred.drop("__bucket").schema
     assert {r["user_id"]: r["value"] for r in df.collect()} == {
         i: (33.0 if i == 3 else float(i)) for i in range(8)
     }
-    # a reopened view reads the same way
-    _df, jobs = _jobs_of(spark, MaterializedView(spark, path).read)
-    assert jobs == 0
 
-    # older layout: no schema in the meta -> inference, same rows
-    with open(os.path.join(path, _META)) as f:
-        meta = _json.load(f)
-    del meta["schema"]
-    with open(os.path.join(path, _META), "w") as f:
-        _json.dump(meta, f)
-    legacy = MaterializedView(spark, path)
-    assert sorted(r["user_id"] for r in legacy.read().collect()) == list(range(8))
-
-    # drift touching one bucket leaves non-uniform files: the new column
-    # still shows, on the writer and on a reopened view
     evolved = spark.createDataFrame(
         [(20, "insert", 100, 1.0, "eu-west")],
         "event_id long, event_type string, user_id long, value double, "
         "region string",
     )
-    legacy.merge_batch(evolved)
-    assert legacy._drifted
-    for v in (legacy, MaterializedView(spark, path)):
-        rows = {r["user_id"]: r["region"] for r in v.read().collect()}
+    mv.merge_batch(evolved)
+    for v in (mv, MaterializedView(spark, path)):
+        df, jobs = _jobs(spark, v.read)
+        assert jobs == 0
+        rows = {r["user_id"]: r["region"] for r in df.collect()}
         assert rows == {**{i: None for i in range(8)}, 100: "eu-west"}
+    # a later batch without the column keeps it in the schema
+    mv.merge_batch(_batch(spark, [(30, "insert", 101, 2.0)]))
+    rows = {r["user_id"]: r["region"] for r in mv.read().collect()}
+    assert rows[100] == "eu-west" and rows[101] is None

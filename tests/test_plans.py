@@ -197,7 +197,7 @@ def test_lsh_index_probe_partition_prunes(spark):
     idx.process_batch(
         docs.filter(F.col("doc_id") % 2 == 0), corpus=docs, epoch_id=0
     )
-    n_dirs = len(idx.view._bucket_dirs())
+    n_dirs = len(idx.view._live_buckets())
     assert n_dirs > 8  # a 2.5k-doc batch populates most of the 64 buckets
     # probe with the INDEX's band layout (k=16, bands=8) — a mismatched
     # family would prune to the wrong buckets and never hit state rows.
