@@ -213,8 +213,11 @@ def _read_once(inner):
     ``inner``, unpersist it (also when ``inner`` raises). Every action
     inside — the truncate probe, the merge's emptiness probe and merge,
     the metered counters — then reads the one materialization, so the
-    source (e.g. the pgwal segments) is scanned once per micro-batch
-    instead of once per action."""
+    batch's scan and transform run once per micro-batch instead of once
+    per action. That matters most for a file-replay source, and for a
+    pgwal batch replayed after a restart, which re-reads its segments in
+    a Python task per scan; a live pgwal batch's rows already sit in the
+    JVM (prefetched by the source runner)."""
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df = batch_df.persist()
@@ -229,10 +232,10 @@ def _read_once(inner):
 class Connector:
     """Start/WaitUntilReady/Close over the streaming CDC pipeline.
 
-    Each micro-batch is read from its source exactly once: the query's
+    Each micro-batch is scanned and transformed once: the query's
     foreachBatch function persists the batch before the view's writer
     (and the truncate and metrics wrappers around it) runs its several
-    actions over it, and unpersists it afterwards."""
+    actions over it, and unpersists it afterwards (``_read_once``)."""
 
     def __init__(
         self,

@@ -1759,6 +1759,9 @@ def forward_checkpoint_acks(
     return last_acked
 
 
+COMMITTED_ROTATE_BYTES = 8 * 1024 * 1024
+
+
 def run_live_consumer(
     client: ReplicationClient,
     segments_dir: str,
@@ -1807,6 +1810,7 @@ def run_live_consumer(
             client.last_stamp, committed_checkpoint_lsn(checkpoint_dir)
         )
 
+    committed_path = _os.path.join(segments_dir, "_committed")
     committed_offset = 0
 
     def ack_sweep(last: int) -> int:
@@ -1814,22 +1818,27 @@ def run_live_consumer(
         prev = last
         if checkpoint_dir is not None:
             last = forward_checkpoint_acks(client, checkpoint_dir, last)
+            # the source's commit() still appends to _committed, but this
+            # path acks from the checkpoint: all of the file is consumed
+            try:
+                committed_offset = _os.path.getsize(committed_path)
+            except OSError:
+                committed_offset = 0
         else:
             last, committed_offset = forward_committed_acks_tail(
                 client, segments_dir, last, committed_offset
             )
-            # the _committed record file grows one line per batch forever;
-            # once the consumed prefix passes 8 MB, rotate it (commit()
-            # opens per append, so a rename between sweeps is clean; any
-            # line appended in the race window is superseded by the next
-            # batch's strictly-larger cumulative frontier)
-            if committed_offset >= 8 * 1024 * 1024:
-                try:
-                    p = _os.path.join(segments_dir, "_committed")
-                    _os.replace(p, p + ".old")
-                    committed_offset = 0
-                except OSError:
-                    pass
+        # the _committed record file grows one line per batch forever;
+        # once the consumed prefix passes 8 MB, rotate it (commit() opens
+        # per append, so a rename between sweeps is clean; any line
+        # appended in the race window is superseded by the next batch's
+        # strictly-larger cumulative frontier)
+        if committed_offset >= COMMITTED_ROTATE_BYTES:
+            try:
+                _os.replace(committed_path, committed_path + ".old")
+                committed_offset = 0
+            except OSError:
+                pass
         if last > prev:
             # frontier advanced => segments wholly below it are consumed
             # for good (Spark never re-reads below a committed offset) —

@@ -11,8 +11,14 @@ Spark 4 Python streaming DataSource over an append-only directory of NDJSON
   "after": {...}, "ts": iso}`` with strictly increasing lsn;
 - the stream offset IS the lsn frontier (``{"lsn": N}``) — exactly the
   restart-LSN of a replication slot;
-- ``latestOffset`` scans segment metadata only; ``partitions(start, end)``
-  splits the lsn range by segment so Spark parallelizes a catch-up read;
+- the reader is a ``SimpleDataSourceStreamReader``: ``read(start)``
+  returns the staged rows in (start, newest staged lsn] and that lsn as
+  the end offset. Spark calls it at ``latestOffset`` inside the
+  long-lived python-streaming-source runner and ships the rows to the
+  JVM with the plan, so a live micro-batch's scan starts no Python
+  task. ``readBetweenOffsets`` serves a batch replayed after a restart
+  (the runner's prefetch cache is empty then). A catch-up backlog is
+  read by that one process, not split into per-segment tasks;
 - ``commit(offset)`` is the ack: it records to ``<path>/_committed``; the
   live consumer loop tails that file and sends the ``StandbyStatusUpdate``
   that advances the slot's restart LSN
@@ -23,8 +29,8 @@ Spark 4 Python streaming DataSource over an append-only directory of NDJSON
 The live producer is sources/pgoutput.py: a pgoutput slot consumer
 (CREATE_REPLICATION_SLOT / START_REPLICATION / keepalive / ack) pumps the
 socket into these segment files (``stream_to_segments``), so the file
-contract stays the single source of truth for offsets and partitions while
-the socket is just the producer.
+contract stays the single source of truth for offsets while the socket is
+just the producer.
 """
 
 from __future__ import annotations
@@ -32,11 +38,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 WAL_SCHEMA = (
     "lsn bigint, op string, table_schema string, table_name string, "
@@ -68,13 +70,12 @@ def max_segment_lsn(path: str) -> int:
     sort after every stamp already flushed — without it, an interleaved
     transaction redelivered after a crash could be stamped below the
     stream frontier and silently dropped by the (start, end] filter."""
-    # retry on FileNotFoundError: the live consumer's ack sweep can prune
-    # the listed tail segment between our listdir and open (its "newest
-    # segment is always kept" guarantee holds at PRUNE time, not at this
-    # reader's list time) — a fresh listing sees the surviving newer
-    # segment. Bounded attempts: with the pruner deleting at most once a
-    # second, two races in a row already needs adversarial timing (review
-    # r6 — the unguarded open aborted latestOffset and the whole stream).
+    # retry on FileNotFoundError: an ack sweep can prune the listed tail
+    # segment between our listdir and open (its "newest segment is always
+    # kept" guarantee holds at PRUNE time, not at this list time) — a fresh
+    # listing sees the surviving newer segment. Bounded attempts: with the
+    # pruner deleting at most once a second, two races in a row already
+    # needs adversarial timing.
     for _ in range(5):
         segs = list_segments(path)
         if not segs:
@@ -95,13 +96,13 @@ def max_segment_lsn(path: str) -> int:
 def prune_segments(path: str, committed_lsn: int) -> int:
     """Delete segments wholly consumed by the committed stream frontier —
     the WAL-retention analog of the slot's restart LSN advancing (without
-    it a long-running live stream grows the directory, and every
-    latestOffset()/partitions() listdir, without bound). A segment is
-    prunable exactly when its partition range is exhausted: its successor
-    starts at or below ``committed_lsn`` + 1 (partitions() bounds a segment
-    by successor.start - 1). The newest segment is always kept, and Spark
-    never re-reads below the newest COMMITTED batch's offset, so a reader
-    can't race a deletion. Returns the number of files removed."""
+    it a long-running live stream grows the directory, and every read()
+    listdir, without bound). A segment is prunable exactly when all its
+    rows are consumed: its successor starts at or below ``committed_lsn``
+    + 1 (a segment's rows lie below its successor's start). The newest
+    segment is always kept, and Spark never re-reads below the newest
+    COMMITTED batch's offset, so a reader never needs a pruned segment.
+    Returns the number of files removed."""
     removed = 0
     segs = list_segments(path)
     pruned_names = []
@@ -129,7 +130,7 @@ def write_wal_segment(path: str, messages: list[dict]) -> str:
 
     Written to a dot-prefixed temp name and renamed into place: the live
     producer (run_live_consumer's thread) races the Spark reader —
-    latestOffset()/read() scanning ``wal_*.ndjson`` must never observe a
+    the reader scanning ``wal_*.ndjson`` must never observe a
     half-flushed final line (json.loads on a truncated line killed the
     stream). rename() is atomic on one filesystem, and the ``wal_``
     prefix filter ignores the in-flight temp name."""
@@ -250,14 +251,29 @@ def staged_truncate_count(path: str) -> int:
     return total
 
 
-class _SegmentPartition(InputPartition):
-    def __init__(self, file_path: str, start_lsn: int, end_lsn: int):
-        self.file_path = file_path
-        self.start_lsn = start_lsn
-        self.end_lsn = end_lsn
+def _read_segment(fpath: str, lo: int, hi: int | None) -> list[tuple]:
+    """Rows of one segment with lsn in (lo, hi] (``hi`` None: no upper
+    bound), as WAL_SCHEMA tuples."""
+    rows = []
+    with open(fpath) as f:
+        for line in f:
+            m = json.loads(line)
+            lsn = m["lsn"]
+            if lsn <= lo or (hi is not None and lsn > hi):
+                continue
+            rows.append((
+                lsn,
+                m.get("op"),
+                m.get("table_schema", "public"),
+                m.get("table_name"),
+                m.get("before"),
+                m.get("after"),
+                m.get("ts"),
+            ))
+    return rows
 
 
-class WalStreamReader(DataSourceStreamReader):
+class WalStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict):
         self.path = options.get("path")
         if not self.path:
@@ -268,45 +284,35 @@ class WalStreamReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"lsn": -1}
 
-    def _segments(self) -> list[tuple[int, str]]:
-        return list_segments(self.path)
-
-    def _max_lsn(self) -> int:
-        return max_segment_lsn(self.path)
-
-    def latestOffset(self) -> dict:
-        return {"lsn": self._max_lsn()}
-
-    def partitions(self, start: dict, end: dict) -> list[_SegmentPartition]:
-        lo, hi = start["lsn"], end["lsn"]
-        parts = []
-        segs = self._segments()
+    def _rows(self, lo: int, hi: int | None) -> list[tuple]:
+        """Staged rows with lsn in (lo, hi], in lsn order. A segment's rows
+        lie below its successor's start, so segments wholly at or below
+        ``lo`` are skipped unopened."""
+        rows: list[tuple] = []
+        segs = list_segments(self.path)
         for i, (seg_start, fpath) in enumerate(segs):
-            seg_end = segs[i + 1][0] - 1 if i + 1 < len(segs) else hi
-            if seg_end <= lo or seg_start > hi:
+            if i + 1 < len(segs) and segs[i + 1][0] - 1 <= lo:
                 continue
-            parts.append(_SegmentPartition(fpath, max(lo, seg_start - 1), min(hi, seg_end)))
-        return parts or [_SegmentPartition("", lo, lo)]
+            if hi is not None and seg_start > hi:
+                break
+            try:
+                rows += _read_segment(fpath, lo, hi)
+            except FileNotFoundError:
+                # the ack sweep prunes only segments wholly at or below the
+                # committed frontier, which never passes ``lo``: a segment
+                # that vanished after the listing held no row we need
+                continue
+        return rows
 
-    def read(self, partition: _SegmentPartition):
-        if not partition.file_path:
-            return
-        with open(partition.file_path) as f:
-            for line in f:
-                m = json.loads(line)
-                lsn = m["lsn"]
-                # (start, end] frontier semantics
-                if lsn <= partition.start_lsn or lsn > partition.end_lsn:
-                    continue
-                yield (
-                    lsn,
-                    m.get("op"),
-                    m.get("table_schema", "public"),
-                    m.get("table_name"),
-                    m.get("before"),
-                    m.get("after"),
-                    m.get("ts"),
-                )
+    def read(self, start: dict):
+        rows = self._rows(start["lsn"], None)
+        end = {"lsn": rows[-1][0]} if rows else start
+        # a list iterator: the prefetch cache copy.copy()s what we return,
+        # which a generator does not survive
+        return iter(rows), end
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        return iter(self._rows(start["lsn"], end["lsn"]))
 
     def commit(self, end: dict) -> None:
         """The ack (R12): advance the restart LSN. Spark runs this in the
@@ -344,7 +350,7 @@ class WalDataSource(DataSource):
     def schema(self) -> str:
         return WAL_SCHEMA
 
-    def streamReader(self, schema) -> WalStreamReader:  # noqa: ARG002
+    def simpleStreamReader(self, schema) -> WalStreamReader:  # noqa: ARG002
         return WalStreamReader(self.options)
 
 

@@ -843,12 +843,12 @@ def test_staged_truncate_marker_gc_and_legacy_retirement():
 def test_connector_reads_each_segment_once(
     spark, tmp_path, monkeypatch, metric_port, on_truncate
 ):
-    """One source scan per micro-batch: with batch_size=1 every change is
-    its own segment, so a batch spans several of them, and the truncate
-    probe, the merge's emptiness probe and merge, and the metered counters
-    must all read the one persisted batch — every segment file is read by
-    exactly one task. Counted executor-side: the pgwal reader is wrapped
-    to log each partition it opens."""
+    """Each staged segment's rows are emitted once: with batch_size=1
+    every change is its own segment, so a batch spans several of them, and
+    the truncate probe, the merge's emptiness probe and merge, and the
+    metered counters must not make the source emit a segment again.
+    Counted in the process that runs the pgwal reader: the segment reader
+    is wrapped to log each segment whose rows it emits."""
     import time
 
     from go_pq_cdc_elasticsearch_spark.connector import ReplicationSettings
@@ -857,17 +857,18 @@ def test_connector_reads_each_segment_once(
     from go_pq_cdc_elasticsearch_spark.testing_utils import FakeReplicationServer
 
     log_path = str(tmp_path / "reads.log")
-    orig_read = wal.WalStreamReader.read
+    orig_read_segment = wal._read_segment
 
-    def counted_read(self, partition):
-        if partition.file_path:
+    def counted_read_segment(fpath, lo, hi):
+        rows = orig_read_segment(fpath, lo, hi)
+        if rows:
             import os as _os
 
             with open(log_path, "a") as f:
-                f.write(_os.path.basename(partition.file_path) + "\n")
-        yield from orig_read(self, partition)
+                f.write(_os.path.basename(fpath) + "\n")
+        return rows
 
-    monkeypatch.setattr(wal.WalStreamReader, "read", counted_read)
+    monkeypatch.setattr(wal, "_read_segment", counted_read_segment)
 
     rel = PG.encode_relation(7, "public", "users", ["id", "v"])
     txns = [

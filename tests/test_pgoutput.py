@@ -12,6 +12,8 @@ import struct
 import tempfile
 import threading
 
+import pytest
+
 from go_pq_cdc_elasticsearch_spark.sources import pgoutput as PG
 
 # ---- pure codec tests ------------------------------------------------------
@@ -776,6 +778,37 @@ def test_prune_segments_respects_frontier_and_keeps_newest():
     assert W.prune_segments(d, 30) == 1
     assert [s for s, _ in W.list_segments(d)] == [21]
     assert W.max_segment_lsn(d) == 30
+
+
+@pytest.mark.parametrize("with_checkpoint", [True, False], ids=["checkpoint", "committed_file"])
+def test_run_live_consumer_rotates_grown_committed_file(tmp_path, with_checkpoint):
+    """The source's commit() appends one ``_committed`` line per batch on
+    both ack paths; the ack sweep rotates the file once it passes the size
+    bound, also when the frontier is read from the checkpoint and nothing
+    reads the file."""
+    d = tmp_path / "seg"
+    d.mkdir()
+    committed = d / "_committed"
+    line = json.dumps({"lsn": 1}) + "\n"
+    committed.write_text(line * (PG.COMMITTED_ROTATE_BYTES // len(line) + 1))
+    grown = committed.stat().st_size
+    server = FakeReplicationServer(
+        [_txn(1, ["id", "v"], 100, [("I", ["9", "x"])])], keepalive_each_txn=False
+    )
+    sock = socket.create_connection(("127.0.0.1", server.port))
+    client = PG.ReplicationClient(sock, slot="s_rotate")
+    client.create_slot()
+    client.start()
+    try:
+        PG.run_live_consumer(
+            client, str(d),
+            checkpoint_dir=str(tmp_path / "ckpt") if with_checkpoint else None,
+            batch_size=1, ack_interval_sec=9, flush_interval_sec=9,
+        )
+    finally:
+        client.close()
+    assert not committed.exists()
+    assert (d / "_committed.old").stat().st_size == grown
 
 
 def test_run_live_consumer_seeds_stamps_above_existing_segments():

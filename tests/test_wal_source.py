@@ -1,10 +1,12 @@
-"""Custom pgwal streaming DataSource: LSN offsets, catch-up partitioning,
-commit-as-ack, end-to-end into the materialized view."""
+"""Custom pgwal streaming DataSource: LSN offsets, prefetched reads and
+replay after a restart, commit-as-ack, end-to-end into the materialized
+view."""
 
 import json
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from go_pq_cdc_elasticsearch_spark.sink.materialized import MaterializedView
@@ -84,18 +86,128 @@ def test_wal_stream_end_to_end_with_ack(spark):
     assert {"lsn": 4} in committed
 
 
-def test_wal_partitions_split_catchup_by_segment(spark):
+def test_wal_reader_serves_rows_up_to_newest_staged_lsn():
+    import copy
+
     work = tempfile.mkdtemp(prefix="wal_p_")
     wal_dir = os.path.join(work, "wal")
     W.write_wal_segment(wal_dir, [_msg(i, "INSERT", i, i) for i in range(1, 6)])
     W.write_wal_segment(wal_dir, [_msg(i, "INSERT", i, i) for i in range(6, 11)])
     r = W.WalStreamReader({"path": wal_dir})
-    assert r.latestOffset() == {"lsn": 10}
-    parts = r.partitions({"lsn": -1}, {"lsn": 10})
-    assert len(parts) == 2  # one per segment: parallel catch-up
-    rows = [row for p in parts for row in r.read(p)]
-    assert sorted(x[0] for x in rows) == list(range(1, 11))
-    # a resumed range reads only the tail
-    parts = r.partitions({"lsn": 7}, {"lsn": 10})
-    rows = [row for p in parts for row in r.read(p)]
-    assert sorted(x[0] for x in rows) == [8, 9, 10]
+    assert r.initialOffset() == {"lsn": -1}
+
+    # across the segment boundary: end is the newest staged lsn
+    it, end = r.read({"lsn": -1})
+    assert end == {"lsn": 10}
+    assert [x[0] for x in it] == list(range(1, 11))
+    # from a start inside a segment: only the tail of it, then the next
+    it, end = r.read({"lsn": 3})
+    assert end == {"lsn": 10}
+    assert [x[0] for x in it] == list(range(4, 11))
+    it, end = r.read({"lsn": 7})
+    assert end == {"lsn": 10}
+    assert [x[0] for x in it] == [8, 9, 10]
+
+    # nothing new: empty iterator, the offset does not move
+    it, end = r.read({"lsn": 10})
+    assert end == {"lsn": 10} and list(it) == []
+
+    # a replayed batch reads exactly (start, end]
+    assert [x[0] for x in r.readBetweenOffsets({"lsn": 3}, {"lsn": 7})] == [4, 5, 6, 7]
+    assert [x[0] for x in r.readBetweenOffsets({"lsn": -1}, {"lsn": 5})] == [1, 2, 3, 4, 5]
+    assert list(r.readBetweenOffsets({"lsn": 10}, {"lsn": 10})) == []
+
+    # the runner's prefetch cache copy.copy()s the iterator before reading
+    it, _ = r.read({"lsn": 8})
+    assert [x[0] for x in copy.copy(it)] == [9, 10]
+    assert [x[0] for x in it] == [9, 10]
+    row = next(r.readBetweenOffsets({"lsn": 0}, {"lsn": 1}))
+    assert row == (1, "INSERT", "public", "users", None, {"id": "1", "v": "1"},
+                   "2024-01-01T00:00:00")
+
+
+def test_wal_restart_replays_failed_batch_between_offsets(spark, tmp_path, monkeypatch):
+    """A live batch is served from the source runner's prefetch; only the
+    batch replayed after a restart (the prefetch cache is empty then) goes
+    through readBetweenOffsets. Epoch 2 fails once after the offset log
+    recorded it; the restart replays it and the view ends last-write-wins."""
+    import time
+
+    from go_pq_cdc_elasticsearch_spark.connector import _read_once
+
+    log_path = str(tmp_path / "between.log")
+    orig = W.WalStreamReader.readBetweenOffsets
+
+    def logged(self, start, end):
+        with open(log_path, "a") as f:
+            f.write(json.dumps([start["lsn"], end["lsn"]]) + "\n")
+        return orig(self, start, end)
+
+    monkeypatch.setattr(W.WalStreamReader, "readBetweenOffsets", logged)
+    W.register(spark)
+
+    wal_dir = str(tmp_path / "wal")
+    ckpt = str(tmp_path / "ckpt")
+    fail_flag = str(tmp_path / "fail_once")
+    open(fail_flag, "w").close()
+    view = MaterializedView(
+        spark, str(tmp_path / "view"), keys=("key",), seq_col="lsn",
+        op_col="op", delete_op="DELETE",
+    )
+    writer = view.foreach_batch_writer()
+
+    def fail_epoch_2_once(df, epoch_id):
+        if epoch_id == 2 and os.path.exists(fail_flag):
+            os.remove(fail_flag)
+            raise RuntimeError("injected failure in epoch 2")
+        writer(df, epoch_id)
+
+    def start(**trigger):
+        img = F.coalesce(F.col("after"), F.col("before"))
+        stream = spark.readStream.format("pgwal").option("path", wal_dir).load()
+        return (
+            stream.select("lsn", "op", img.getItem("id").alias("key"),
+                          img.getItem("v").alias("v"))
+            .writeStream.foreachBatch(_read_once(fail_epoch_2_once))
+            .option("checkpointLocation", ckpt)
+            .trigger(**trigger)
+            .start()
+        )
+
+    def committed(batch_id):
+        return os.path.exists(os.path.join(ckpt, "commits", str(batch_id)))
+
+    segments = [
+        [_msg(1, "INSERT", 1, "a"), _msg(2, "INSERT", 2, "b")],
+        [_msg(3, "UPDATE", 1, "a2"), _msg(4, "INSERT", 3, "c")],
+        [_msg(5, "DELETE", 2, 0), _msg(6, "UPDATE", 3, "c2"), _msg(7, "INSERT", 4, "d")],
+    ]
+    try:
+        q = start(processingTime="200 milliseconds")
+        for batch_id, seg in enumerate(segments[:2]):
+            W.write_wal_segment(wal_dir, seg)
+            deadline = time.time() + 120
+            while not committed(batch_id):
+                assert time.time() < deadline, f"batch {batch_id} did not commit"
+                assert q.isActive, q.exception()
+                time.sleep(0.1)
+        W.write_wal_segment(wal_dir, segments[2])
+        with pytest.raises(Exception, match="injected failure in epoch 2"):
+            q.awaitTermination(120)
+        assert os.path.exists(os.path.join(ckpt, "offsets", "2"))
+        assert not committed(2)
+        # batches 0-2 were all served from the prefetch
+        assert not os.path.exists(log_path)
+
+        q = start(availableNow=True)
+        q.awaitTermination(120)
+        assert committed(2)
+    finally:
+        monkeypatch.undo()
+        W.register(spark)  # later streams in this session get the plain reader
+
+    with open(log_path) as f:
+        calls = {tuple(json.loads(ln)) for ln in f}
+    assert calls == {(4, 7)}  # exactly the replayed batch's (start, end]
+    state = {r["key"]: r["v"] for r in view.read().collect()}
+    assert state == {"1": "a2", "3": "c2", "4": "d"}
