@@ -29,46 +29,52 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Schema cache, keyed on the source file fingerprint (r13). Measured: every
-# bare spark.read.parquet() launches a schema-INFERENCE Spark job — ~113 ms
-# and one driver-synced job per load vs ~20 ms and zero jobs with an
-# explicit schema — and the engine loads tables 1-3x per query invocation
+# Schema cache, keyed on the source path and checked against its file
+# fingerprint (r13). Measured: every bare spark.read.parquet() launches a
+# schema-INFERENCE Spark job — ~113 ms and one driver-synced job per load
+# vs ~20 ms and zero jobs with an explicit schema — and the engine loads
+# tables 1-3x per query invocation
 # (62 loads per EXT fold cycle alone), so re-inferring per invocation was
 # one of the largest fixed costs in every small query's wall. A real
 # deployment holds table schemas in a catalog/metastore and never re-infers
 # per query; this dict is that catalog. Scope and rules (the staged_events
 # convention): process-wide, in-memory only, deterministic metadata (column
-# names/types, never data or plans), keyed on (path, mtime, size) so an
-# in-place regeneration re-infers. Every action still lists, reads and
-# computes over the parquet bytes in full — only the per-invocation footer
-# re-inference job is gone.
-_SCHEMA_CACHE: dict[tuple, object] = {}
+# names/types, never data or plans). One entry per path: an in-place
+# regeneration changes the fingerprint, re-infers and replaces the entry.
+# Every action still lists, reads and computes over the parquet bytes in
+# full — only the per-invocation footer re-inference job is gone.
+_SCHEMA_CACHE: dict[str, tuple[tuple, object]] = {}
 
 
 def _source_fingerprint(p: str) -> tuple:
+    """One ``os.stat`` per file, subdirectories included: (name, mtime ns,
+    size, inode). The inode catches a same-size rewrite whose mtime did
+    not move (coarse filesystem clocks, or a copy that preserves it)."""
     try:
-        if os.path.isdir(p):
-            parts = sorted(
-                os.path.join(p, f)
-                for f in os.listdir(p)
-                if not f.startswith(".")
-            )
-            return tuple(
-                (f, os.path.getmtime(f), os.path.getsize(f)) for f in parts
-            )
-        return (p, os.path.getmtime(p), os.path.getsize(p))
+        if not os.path.isdir(p):
+            st = os.stat(p)
+            return ((p, st.st_mtime_ns, st.st_size, st.st_ino),)
+        out = []
+        for root, dirs, files in os.walk(p):
+            dirs[:] = sorted(d for d in dirs if not d.startswith("."))
+            for f in sorted(files):
+                if not f.startswith("."):
+                    st = os.stat(os.path.join(root, f))
+                    rel = os.path.relpath(os.path.join(root, f), p)
+                    out.append((rel, st.st_mtime_ns, st.st_size, st.st_ino))
+        return tuple(out)
     except OSError:
         return ("missing",)
 
 
 def _read_with_cached_schema(spark: SparkSession, p: str) -> DataFrame:
-    key = (p,) + _source_fingerprint(p)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(p)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(p)
+    fingerprint = _source_fingerprint(p)
+    hit = _SCHEMA_CACHE.get(p)
+    if hit is not None and hit[0] == fingerprint:
+        return spark.read.schema(hit[1]).parquet(p)
+    df = spark.read.parquet(p)
+    _SCHEMA_CACHE[p] = (fingerprint, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -47,6 +47,7 @@ from go_pq_cdc_elasticsearch_spark.sink.store import (
     BUCKET_COL,
     FencedWriterError,
     ManifestStore,
+    union_schema,
 )
 
 __all__ = ["FencedWriterError", "MaterializedView", "read_fence"]
@@ -57,17 +58,6 @@ def read_fence(path: str) -> int | None:
     has never been fenced)."""
     snap = ManifestStore(path).latest()
     return snap.get("fence") if snap else None
-
-
-def _union_schema(recorded: dict | None, schema: T.StructType) -> dict:
-    """The recorded schema plus the columns of ``schema`` it lacks: the
-    view's schema only grows, and files written before a column existed
-    read it as NULL."""
-    if recorded is None:
-        return schema.jsonValue()
-    names = {f["name"] for f in recorded["fields"]}
-    added = [f for f in schema.jsonValue()["fields"] if f["name"] not in names]
-    return {**recorded, "fields": recorded["fields"] + added}
 
 
 class MaterializedView:
@@ -168,6 +158,11 @@ class MaterializedView:
         manifest and validated on every open, like keys/seq are."""
         return {}
 
+    def _carried(self, snap: dict | None) -> dict:
+        """Subclass hook: manifest fields this view does not own, written
+        into every commit it makes (the deduper's corpus group)."""
+        return {}
+
     def _commit(
         self,
         snap: dict | None,
@@ -188,8 +183,9 @@ class MaterializedView:
         schema = snap["schema"] if snap else None
         if df is not None:
             files.update(self.store.write(df, self.n_buckets))
-            schema = _union_schema(schema, df.drop(BUCKET_COL).schema)
+            schema = union_schema(schema, df.drop(BUCKET_COL).schema)
         manifest = {
+            **self._carried(snap),
             "n_buckets": self.n_buckets,
             "files": files,
             "schema": schema,

@@ -5,11 +5,19 @@ deduper's kept view) and the band index (``_BandSegmentIndex``).
 Layout under ``path``::
 
     __bucket=<b>/<name>.parquet   immutable data files, never rewritten
+    __epoch=<seq>/<name>.parquet  the deduper's corpus text (kept view only)
     _manifest/<gen>.json          one full snapshot per commit
     _staging/<id>/                a Spark write in flight
 
+A manifest names its files in file groups, each mapping a key to
+relative paths: ``files`` (bucket -> the view's or the index's data) and,
+in the deduper's kept view, ``corpus`` (epoch seq -> the text of the rows
+that epoch kept, with its own ``corpus_schema``). Both groups commit in
+the same snapshot, so the kept ids, the corpus text and the frontier
+become visible together.
+
 A write lands in its own staging dir, and its files are then renamed
-into their bucket dirs under the unique names Spark gave them. Nothing
+into their group dirs under the unique names Spark gave them. Nothing
 is visible until a commit names the files. A commit writes the complete
 next snapshot to a temp file and ``os.link``s it to
 ``_manifest/<gen+1>.json``. ``link`` fails when the name exists, so of
@@ -43,12 +51,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 BUCKET_COL = "__bucket"
+EPOCH_COL = "__epoch"
 # seconds an unreferenced file (or manifest) outlives the commit that
 # dropped it: the longest a reader may hold a resolved snapshot
 GC_GRACE_S = 60.0
 
 _MANIFEST = "_manifest"
 _STAGING = "_staging"
+# file group -> the column whose value names its files' dirs (<col>=<key>/)
+_GROUPS = {"files": BUCKET_COL, "corpus": EPOCH_COL}
 
 
 class FencedWriterError(RuntimeError):
@@ -61,7 +72,8 @@ class FencedWriterError(RuntimeError):
 
 class ManifestStore:
     """Manifest commits, snapshot reads and GC for one store directory.
-    Manifests are plain dicts; ``files`` maps bucket -> relative paths."""
+    Manifests are plain dicts; each file group maps its key (a bucket, an
+    epoch seq) -> relative paths."""
 
     def __init__(self, path: str):
         self.path = path
@@ -90,7 +102,8 @@ class ManifestStore:
             except FileNotFoundError:
                 continue  # a stale writer withdrew its link: list again
             snap["gen"] = gens[-1]
-            snap["files"] = {int(b): v for b, v in snap["files"].items()}
+            for g in _GROUPS.keys() & snap.keys():
+                snap[g] = {int(k): v for k, v in snap[g].items()}
             return snap
 
     def commit(self, base: dict | None, snap: dict) -> dict:
@@ -99,14 +112,13 @@ class ManifestStore:
         become ``retired``."""
         gen = (base["gen"] if base else 0) + 1
         now = time.time()
-        live = {rel for rels in snap["files"].values() for rel in rels}
+        live = _live(snap)
         retired = {
             rel: t
             for rel, t in (base or {}).get("retired", {}).items()
             if now - t < GC_GRACE_S and rel not in live
         }
-        for rels in (base or {}).get("files", {}).values():
-            retired.update((rel, now) for rel in rels if rel not in live)
+        retired.update((rel, now) for rel in _live(base or {}) - live)
         snap = {**snap, "retired": retired}
         snap.pop("gen", None)
         os.makedirs(self._mdir, exist_ok=True)
@@ -138,22 +150,22 @@ class ManifestStore:
         self._gc(snap, now)
         return snap
 
-    def write(self, df: DataFrame, n_buckets: int) -> dict[int, list[str]]:
-        """Write ``df`` (carrying ``BUCKET_COL``) as new files, one per
-        bucket it holds rows for, and return their relative paths per
-        bucket. A 1-bucket store coalesces instead of shuffling: the hash
+    def write(
+        self, df: DataFrame, n_buckets: int, col: str = BUCKET_COL
+    ) -> dict[int, list[str]]:
+        """Write ``df`` (carrying the group column ``col``) as new files,
+        one per key it holds rows for, and return their relative paths per
+        key. A 1-bucket write coalesces instead of shuffling: the hash
         exchange would only collapse the rows to one task."""
         staging = os.path.join(self.path, _STAGING, uuid.uuid4().hex)
         aligned = (
-            df.coalesce(1)
-            if n_buckets == 1
-            else df.repartition(n_buckets, F.col(BUCKET_COL))
+            df.coalesce(1) if n_buckets == 1 else df.repartition(n_buckets, F.col(col))
         )
         try:
-            aligned.write.partitionBy(BUCKET_COL).parquet(staging)
+            aligned.write.partitionBy(col).parquet(staging)
             out: dict[int, list[str]] = {}
             for d in os.listdir(staging):
-                if not d.startswith(BUCKET_COL + "="):
+                if not d.startswith(col + "="):
                     continue
                 os.makedirs(os.path.join(self.path, d), exist_ok=True)
                 for name in os.listdir(os.path.join(staging, d)):
@@ -167,19 +179,25 @@ class ManifestStore:
         finally:
             shutil.rmtree(staging, ignore_errors=True)
 
+    def paths(
+        self, snap: dict, group: str = "files", keys: list[int] | None = None
+    ) -> list[str]:
+        """Absolute paths of the files ``group`` lists in ``snap`` (all, or
+        only those under ``keys``)."""
+        return [
+            os.path.join(self.path, rel)
+            for k, rels in snap.get(group, {}).items()
+            if keys is None or k in keys
+            for rel in rels
+        ]
+
     def read(
         self, spark: SparkSession, snap: dict, buckets: list[int] | None = None
     ) -> DataFrame | None:
         """The files of ``snap`` (all, or only ``buckets``) with the
         recorded schema plus ``BUCKET_COL``; None when there are none. A
         file missing a recorded column reads it as NULL."""
-        wanted = snap["files"].keys() if buckets is None else set(buckets)
-        files = [
-            os.path.join(self.path, rel)
-            for b, rels in snap["files"].items()
-            if b in wanted
-            for rel in rels
-        ]
+        files = self.paths(snap, keys=buckets)
         if not files:
             return None
         schema = T.StructType.fromJson(snap["schema"]).add(BUCKET_COL, T.IntegerType())
@@ -201,25 +219,42 @@ class ManifestStore:
         if self._swept_at is not None and now - self._swept_at < GC_GRACE_S:
             return
         self._swept_at = now
-        named = set(snap["retired"]) | {
-            rel for rels in snap["files"].values() for rel in rels
-        }
+        named = set(snap["retired"]) | _live(snap)
+        prefixes = tuple(c + "=" for c in _GROUPS.values())
         for d in os.listdir(self.path):
             p = os.path.join(self.path, d)
             if d == _STAGING:
                 for s in os.listdir(p):
                     if _older(os.path.join(p, s), now):
                         shutil.rmtree(os.path.join(p, s), ignore_errors=True)
-            elif d.startswith(BUCKET_COL + "="):
+            elif d.startswith(prefixes):
                 for name in os.listdir(p):
                     if f"{d}/{name}" not in named and _older(
                         os.path.join(p, name), now
                     ):
                         _remove(os.path.join(p, name))
                 try:
-                    os.rmdir(p)  # only succeeds once the bucket is empty
+                    os.rmdir(p)  # only succeeds once the dir is empty
                 except OSError:
                     pass
+
+
+def _live(snap: dict) -> set[str]:
+    """Every file any group of ``snap`` names."""
+    return {
+        rel for g in _GROUPS for rels in snap.get(g, {}).values() for rel in rels
+    }
+
+
+def union_schema(recorded: dict | None, schema: T.StructType) -> dict:
+    """The recorded schema plus the columns of ``schema`` it lacks: a
+    group's schema only grows, and files written before a column existed
+    read it as NULL."""
+    if recorded is None:
+        return schema.jsonValue()
+    names = {f["name"] for f in recorded["fields"]}
+    added = [f for f in schema.jsonValue()["fields"] if f["name"] not in names]
+    return {**recorded, "fields": recorded["fields"] + added}
 
 
 def _older(p: str, now: float) -> bool:

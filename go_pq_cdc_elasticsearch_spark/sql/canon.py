@@ -55,7 +55,7 @@ def _spark_cell_sql(field: T.StructField) -> str:
     All numeric literals carry the ``D`` suffix: bare ``10000.0`` parses
     as DECIMAL in Spark SQL, which would change the arithmetic the float
     ladder's portability proof depends on (exact double ops only)."""
-    c = f"`{field.name}`"
+    c = "`" + field.name.replace("`", "``") + "`"
     t = field.dataType
     if isinstance(t, (T.FloatType, T.DoubleType)):
         d = f"CAST({c} AS DOUBLE)"
@@ -141,8 +141,10 @@ def spark_canon_summary(df: DataFrame, part: str) -> DataFrame:
         f"CAST(conv(substring(md5(concat_ws('|', {cells})), 1, 8), 16, 10) "
         f"AS BIGINT)"
     )
+    # Spark string literals take backslash escapes
+    literal = part.replace("\\", "\\\\").replace("'", "\\'")
     return df.selectExpr(f"{h} AS h").selectExpr(
-        f"'{part}' AS part",
+        f"'{literal}' AS part",
         "count(1) AS n_rows",
         "CAST(coalesce(sum(h), 0) AS BIGINT) AS checksum",
     )
@@ -150,7 +152,7 @@ def spark_canon_summary(df: DataFrame, part: str) -> DataFrame:
 
 def _duck_cell(name: str, duck_type: str) -> str:
     t = duck_type.upper()
-    col = f'"{name}"'
+    col = '"' + name.replace('"', '""') + '"'
     if t in ("DOUBLE", "FLOAT", "REAL"):
         d = f"CAST({col} AS DOUBLE)"
         s = (
@@ -203,8 +205,9 @@ def duckdb_canon_sql(inner_sql: str, part: str, col_types: list[tuple[str, str]]
         _duck_cell(n, t) for n, t in sorted(col_types, key=lambda x: x[0])
     )
     h = "CAST(concat('0x', substr(md5(concat_ws('|', " + cells + ")), 1, 8)) AS BIGINT)"
+    literal = part.replace("'", "''")
     return (
-        f"SELECT '{part}' AS part, count(*) AS n_rows, "
+        f"SELECT '{literal}' AS part, count(*) AS n_rows, "
         f"CAST(coalesce(sum(h), 0) AS BIGINT) AS checksum "
         f"FROM (SELECT {h} AS h FROM ({inner_sql}))"
     )

@@ -40,6 +40,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from go_pq_cdc_elasticsearch_spark.operators.dedup import (
     doc_ngram_sets,
@@ -47,7 +48,13 @@ from go_pq_cdc_elasticsearch_spark.operators.dedup import (
     minhash_band_rows,
 )
 from go_pq_cdc_elasticsearch_spark.sink.materialized import MaterializedView
-from go_pq_cdc_elasticsearch_spark.sink.store import BUCKET_COL, ManifestStore
+from go_pq_cdc_elasticsearch_spark.sink.store import (
+    BUCKET_COL,
+    EPOCH_COL,
+    FencedWriterError,
+    ManifestStore,
+    union_schema,
+)
 
 
 class LazyResultsOutstandingError(RuntimeError):
@@ -61,19 +68,6 @@ class LazyResultsOutstandingError(RuntimeError):
     lazy results, call ``settle_lazy_results()``, then compact — or pass
     ``force=True`` if you know every lazy frame is already materialized
     (e.g. via an eager localCheckpoint)."""
-
-
-def _atomic_json_dump(path: str, obj) -> None:
-    """tmp + os.replace: every meta file here is load-bearing — opens
-    json.load it with no recovery path — so a crash mid-dump must never
-    leave torn JSON that bricks the deduper until manual repair."""
-    import json
-
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)
 
 
 class _BandSegmentIndex:
@@ -119,6 +113,10 @@ class _BandSegmentIndex:
     count runs on the caller's already-checkpointed band frame — one
     cheap job, no recompute. ``max_buckets`` (65_536) only bounds
     pathological layouts; ``ceil(rows/target)`` is the operative size.
+
+    ``extra`` is the hash family the rows were built with. It is pinned
+    in the manifest on first open, by one layout-less commit, and
+    validated on every open like ``MaterializedView``'s ``extra``.
     """
 
     def __init__(
@@ -128,20 +126,52 @@ class _BandSegmentIndex:
         n_buckets: int | None = None,
         target_rows_per_bucket: int = 100_000,
         max_buckets: int = 65_536,
+        extra: dict | None = None,
     ):
         self.spark = spark
         self.path = path
         self.n_buckets = n_buckets
         self.target_rows_per_bucket = target_rows_per_bucket
         self.max_buckets = max_buckets
+        self.extra = extra
         self.store = ManifestStore(path)
         self._last_epoch: int | None = None
-        self._load()
+        while self._load() is None and extra is not None:
+            # shaped like MaterializedView.acquire_fence: of racing first
+            # opens one commits, the others validate against it
+            try:
+                self.store.commit(
+                    None,
+                    {
+                        "n_buckets": None,
+                        "files": {},
+                        "schema": None,
+                        "last_epoch": None,
+                        "extra": extra,
+                    },
+                )
+            except FencedWriterError:
+                pass
 
     def _load(self) -> dict | None:
         snap = self.store.latest()
         self._last_epoch = snap["last_epoch"] if snap else None
-        if snap is not None:
+        if snap is None:
+            return None
+        stored = snap.get("extra")
+        if self.extra is not None and stored is not None and stored != self.extra:
+            drift = {
+                key: (stored.get(key), val)
+                for key, val in self.extra.items()
+                if stored.get(key) != val
+            }
+            raise ValueError(
+                f"LSH band index at {self.path} was built with a different "
+                f"hash family/config: {drift} (stored vs requested). "
+                f"Reopen with the stored parameters or rebuild the index — "
+                f"mixing families silently leaks duplicates."
+            )
+        if snap["n_buckets"] is not None:
             self.n_buckets = snap["n_buckets"]
         return snap
 
@@ -162,7 +192,7 @@ class _BandSegmentIndex:
             and epoch_id <= self._last_epoch
         ):
             return
-        if snap is None and self.n_buckets is None:
+        if (snap is None or snap["n_buckets"] is None) and self.n_buckets is None:
             # auto-size the layout to the data
             n_rows = bands.count()
             if n_rows == 0:
@@ -186,9 +216,10 @@ class _BandSegmentIndex:
         self.store.commit(
             snap,
             {
+                **(snap or {}),
                 "n_buckets": self.n_buckets,
                 "files": files,
-                "schema": snap["schema"] if snap else bands.schema.jsonValue(),
+                "schema": (snap or {}).get("schema") or bands.schema.jsonValue(),
                 "last_epoch": last_epoch,
             },
         )
@@ -285,49 +316,25 @@ class LshDedupIndex:
         self.k = k
         self.bands = bands
         self.jaccard_threshold = jaccard_threshold
-        # n_buckets=None => first-append auto-sizing (see _BandSegmentIndex)
+        # n_buckets=None => first-append auto-sizing (see _BandSegmentIndex).
+        # The hash family is pinned in the band index (the
+        # ContinuousAggregate merge-contract rule): reopening with
+        # different k/bands silently mixes incompatible families — new
+        # probes never match a stored row's band hash, so every near-dup
+        # of a previously indexed doc is kept — and different columns
+        # re-key the rows. Threshold is a per-query policy knob, not index
+        # state: changing it is fine.
         self.view = _BandSegmentIndex(
-            spark, os.path.join(path, "bands"), n_buckets=n_buckets
+            spark,
+            os.path.join(path, "bands"),
+            n_buckets=n_buckets,
+            extra={"k": k, "bands": bands, "text_col": text_col, "id_col": id_col},
         )
         # epochs of eager=False process_batch results not yet declared
         # materialized — compact() refuses while any are outstanding (r13,
         # VERDICT r11 item 1: the contract-only footgun is now a named
         # error). In-process tracking matches the single-writer model.
         self._outstanding_lazy: list[int | None] = []
-        # Hash-family pinning (review r6, the ContinuousAggregate
-        # merge-contract rule): reopening an existing index with different
-        # k/bands silently mixes incompatible families — new probes can
-        # never match any stored row's band hash, so every near-dup of a
-        # previously indexed doc is kept (duplicate leak) while the new
-        # family's rows pollute the segments. Columns matter the same way
-        # (a different text_col/id_col re-keys the rows). Threshold is a
-        # per-query policy knob, not index state — changing it is fine.
-        import json
-
-        family = {
-            "k": self.k,
-            "bands": self.bands,
-            "text_col": self.text_col,
-            "id_col": self.id_col,
-        }
-        meta_path = os.path.join(path, "_LSH_META.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                stored = json.load(f)
-            drift = {
-                key: (stored.get(key), val)
-                for key, val in family.items()
-                if stored.get(key) != val
-            }
-            if drift:
-                raise ValueError(
-                    f"LshDedupIndex at {path} was built with a different "
-                    f"hash family/config: {drift} (stored vs requested). "
-                    f"Reopen with the stored parameters or rebuild the "
-                    f"index — mixing families silently leaks duplicates."
-                )
-        else:
-            _atomic_json_dump(meta_path, family)
 
     # -- probing -------------------------------------------------------------
 
@@ -529,6 +536,30 @@ class LshDedupIndex:
         self.view.compact(min_files=min_files)
 
 
+class _KeptView(MaterializedView):
+    """The deduper's kept-id view. Its manifest also carries the corpus
+    group (epoch seq -> the files of the full rows that epoch kept), the
+    corpus schema, and the epoch base of the feeding query, so the one
+    commit of a merge publishes them with the kept ids and the frontier.
+    Every other commit (vacuum, rebucket, fence) carries them forward."""
+
+    # (seq, corpus files, kept-rows schema, epoch base) of the epoch being
+    # merged; set by the foreachBatch writer around that one merge
+    pending: tuple | None = None
+
+    def _carried(self, snap: dict | None) -> dict:
+        snap = snap or {}
+        corpus = dict(snap.get("corpus", {}))
+        schema = snap.get("corpus_schema")
+        base = snap.get("epoch_base", 0)
+        if self.pending is not None:
+            seq, rels, kept_schema, base = self.pending
+            if rels:
+                corpus[seq] = rels
+                schema = union_schema(schema, kept_schema)
+        return {"corpus": corpus, "corpus_schema": schema, "epoch_base": base}
+
+
 class IncrementalDeduper(LshDedupIndex):
     """LshDedupIndex plus a DISTRIBUTED keep/drop fold — the end-to-end
     "only keep novel documents" pipeline with no driver-side state.
@@ -543,12 +574,14 @@ class IncrementalDeduper(LshDedupIndex):
 
     Kept ids live in a second hash-bucketed view, so the whole fold is
     joins + the existing distributed CC: nothing driver-side, per-batch
-    cost scales with the batch and its candidates.
+    cost scales with the batch and its candidates. The streaming writer
+    also keeps the kept rows' text, in the same view's manifest
+    (``corpus()``).
     """
 
     def __init__(self, spark: SparkSession, path: str, **kwargs):
         super().__init__(spark, path, **kwargs)
-        self.kept = MaterializedView(
+        self.kept = _KeptView(
             spark,
             os.path.join(path, "kept"),
             keys=(self.id_col,),
@@ -556,19 +589,20 @@ class IncrementalDeduper(LshDedupIndex):
             op_col="op",
             delete_op="delete",
         )
+        self._batches_since_compact = 0
 
     def acquire_fence(self) -> int:
         """Fence this deduper's output against a zombie predecessor (same
         token discipline as MaterializedView.acquire_fence, which the
         Connector applies automatically on takeover; a streaming deduper
-        deployment calls this at start). Only the KEPT view — the
-        authoritative output — needs the fence for correctness: a zombie
-        still appending band segments or corpus epoch dirs adds redundant
-        candidate state that exact-Jaccard verification filters out
-        (wasted probe work, cleaned by compact()), and its corpus epochs
-        are deterministic re-writes of content the fold already fixed —
-        but a zombie MERGING the kept view could resurrect dropped docs,
-        which the fence makes a loud FencedWriterError instead."""
+        deployment calls this at start). The fence covers the kept view
+        and, since the corpus commits in the kept view's manifest, the
+        corpus too: a zombie's merge, corpus commit or consolidation
+        raises FencedWriterError instead of resurrecting dropped docs or
+        publishing text. Band segments stay unfenced: a zombie still
+        appending them adds redundant candidate state that exact-Jaccard
+        verification filters out (wasted probe work, cleaned by
+        compact())."""
         return self.kept.acquire_fence()
 
     def dedup_batch(
@@ -590,9 +624,9 @@ class IncrementalDeduper(LshDedupIndex):
         epoch_id: int | None = None,
     ) -> DataFrame:
         """Detect + fold WITHOUT advancing the kept-view frontier: the
-        foreachBatch adapter needs the kept rows before the frontier
-        commit so the corpus append can be ordered crash-safely (append
-        first, frontier last — see ``foreach_batch_writer``)."""
+        foreachBatch adapter writes the kept rows' corpus files before the
+        one commit that publishes them with the frontier (see
+        ``foreach_batch_writer``)."""
         from go_pq_cdc_elasticsearch_spark.operators.dedup import (
             connected_components,
         )
@@ -691,181 +725,111 @@ class IncrementalDeduper(LshDedupIndex):
             lineage=lineage,
         )
 
-    def compact(
-        self,
-        min_files: int = 2,
-        corpus_path: str | None = None,
-        force: bool = False,
-    ) -> None:
-        """Band-index segment merge plus (when ``corpus_path`` names the
-        store this deduper's writer feeds) consolidation of the committed
-        per-epoch corpus directories — both growth axes of a long-running
-        ingestion loop, bounded in one maintenance call. Only epochs at
-        or below the kept-view frontier are merged: an in-flight epoch's
-        partial dir must keep its own name so redelivery's overwrite
-        replaces it wholesale. Run between batches (see
-        ``LshDedupIndex.compact`` for the lazy-result guard)."""
+    def compact(self, min_files: int = 2, force: bool = False) -> None:
+        """Band-index segment merge plus consolidation of the committed
+        corpus into one file — both growth axes of a long-running
+        ingestion loop, bounded in one maintenance call. The corpus swap
+        is one fenced commit of the kept view that replaces the corpus
+        group's file list under its newest epoch key, so a consolidation
+        that dies before it keeps the previous list. Run between batches
+        (see ``LshDedupIndex.compact`` for the lazy-result guard)."""
         super().compact(min_files=min_files, force=force)
-        if corpus_path is not None:
-            self.kept._load()
-            if self.kept._last_epoch is not None:
-                consolidate_corpus_epochs(
-                    self.spark, corpus_path, upto_seq=int(self.kept._last_epoch)
-                )
+        snap = self.kept._begin()
+        corpus = (snap or {}).get("corpus", {})
+        if sum(map(len, corpus.values())) < max(2, min_files):
+            return
+        merged = self._read_corpus(snap).withColumn(EPOCH_COL, F.lit(max(corpus)))
+        self.kept.store.commit(
+            snap, {**snap, "corpus": self.kept.store.write(merged, 1, EPOCH_COL)}
+        )
 
-    def foreach_batch_writer(
-        self, corpus_path: str, auto_compact_batches: int | None = 64
-    ):
+    def _read_corpus(
+        self, snap: dict | None, below: int | None = None
+    ) -> DataFrame | None:
+        """The corpus text the kept-view manifest ``snap`` lists (only
+        epochs < ``below`` when given): its explicit files, read with its
+        recorded schema. None when it lists none."""
+        corpus = (snap or {}).get("corpus", {})
+        keys = [e for e in corpus if below is None or e < below]
+        if not keys:
+            return None
+        schema = T.StructType.fromJson(snap["corpus_schema"])
+        return self.spark.read.schema(schema).parquet(
+            *self.kept.store.paths(snap, "corpus", keys)
+        )
+
+    def corpus(self) -> DataFrame | None:
+        """The committed corpus: the full rows every committed epoch of
+        ``foreach_batch_writer`` kept, as of the kept view's newest
+        manifest. None before the first epoch with a kept row commits."""
+        return self._read_corpus(self.kept.store.latest())
+
+    def _epoch_base(self, snap: dict | None, qid: str | None) -> int:
+        """The offset that makes the feeding query's epoch ids globally
+        monotone. ``qid=None`` (caller identity unknown) keeps the
+        recorded base: resetting would re-issue a plain checkpoint
+        resume's epochs. A new lineage starts past every frontier,
+        including the band index's, which a crash between the band append
+        and the kept commit leaves one epoch ahead."""
+        base = (snap or {}).get("epoch_base", 0)
+        if qid is None or qid == (snap or {}).get("lineage"):
+            return base
+        self.view._load()
+        frontiers = [
+            e for e in (self.view._last_epoch, self.kept._last_epoch) if e is not None
+        ]
+        return max([base] + [e + 1 for e in frontiers])
+
+    def foreach_batch_writer(self, auto_compact_batches: int | None = 64):
         """Adapter for ``writeStream.foreachBatch`` — the full streaming
         ingestion loop: dedup the arriving micro-batch against everything
-        ingested so far, append the kept rows to the corpus store at
-        ``corpus_path``, index the batch. The corpus store doubles as the
-        verification text source, so the pipeline is self-contained:
-        stream in, deduplicated corpus out.
+        ingested so far, keep the kept rows as the epoch's corpus text,
+        index the batch. The corpus doubles as the verification text
+        source, so the pipeline is self-contained: stream in,
+        deduplicated corpus out (``corpus()``).
+
+        Exactly-once through one commit. The epoch's corpus files are
+        written first; then the kept-view merge commits the kept ids, the
+        corpus group's new entry, the frontier and the lineage with its
+        epoch base in ONE manifest commit (``sink/store.py``). A crash
+        before it leaves nothing visible — the written files are orphans
+        that GC deletes after ``GC_GRACE_S`` — and redelivery recomputes
+        the identical kept set (deterministic fold); a crash after it is
+        caught by the frontier guard. Each batch reads the corpus from
+        the newest manifest's explicit file list, epochs < its own only,
+        so no uncommitted file is ever read: not a partial attempt's and
+        not a crashed, never-resumed query's.
+
+        Lineage: foreachBatch epoch ids restart at 0 for a NEW streaming
+        query (fresh checkpoint) feeding the same store, and raw
+        comparison against the recorded frontier would silently drop the
+        new query's first batches. The kept view records the feeding
+        query id with an EPOCH BASE; on a lineage change the base jumps
+        past every frontier (``_epoch_base``), making the effective epoch
+        (base + foreachBatch id) globally monotone across queries — which
+        serves the kept-view guard, the band-index guard and the corpus
+        keys with no change to any downstream frontier logic.
 
         Auto-compaction (r13, VERDICT r11 item 1): every
         ``auto_compact_batches`` committed epochs the writer runs
-        ``compact(min_files=2, corpus_path=corpus_path)`` between batches
-        — nothing depends on an operator remembering the maintenance
-        call. Each batch appends at most ONE segment file per touched
-        band bucket and exactly one corpus epoch dir, so the counter IS
-        the file-count bound: segment files per bucket and prior-epoch
-        dirs are both capped at ~``auto_compact_batches`` between merges,
-        which is what keeps the per-batch probe listing cost flat over
-        months of micro-batches (probe: tools/probe_compact_r13.py —
-        per-batch wall flat over 60 batches with zero manual calls).
-        ``min_files=2`` keeps each merge proportional to what actually
-        grew. The counter is in-memory; a restart just defers the next
-        merge by up to one interval. ``None``/0 disables. Safe here by
-        construction: the foreachBatch path materializes every result
-        eagerly (no outstanding lazy probes — the compact guard would
-        raise loudly if that ever changed).
-
-        Exactly-once, with the corpus append ordered BEFORE the kept-view
-        frontier commit (the commit point). Each epoch's kept rows land in
-        their own ``epoch=<id>`` directory written with overwrite — the
-        append is idempotent under redelivery, so every crash window is
-        safe: a crash before/during the corpus write leaves the frontier
-        unadvanced and redelivery recomputes the identical kept set
-        (deterministic fold) and overwrites the partial directory; a crash
-        after ``merge_batch`` is caught by the frontier guard with the
-        corpus already durable. The earlier ordering (merge first, append
-        after) could permanently LOSE an epoch's text: the frontier guard
-        skipped the redelivered epoch, so later near-dups of those docs
-        could never be verified against them. The in-flight epoch's
-        directory is excluded from the corpus read (only ``epoch < seq``),
-        so a partial previous attempt can neither corrupt the read nor
-        feed the batch's own rows back into its verification corpus.
-
-        Lineage: foreachBatch epoch ids restart at 0 for a NEW streaming
-        query (fresh checkpoint) feeding the same store — raw comparison
-        against the recorded frontier would silently drop the new query's
-        first batches, and its ``epoch=N`` dirs would overwrite the prior
-        query's same-numbered corpus text. The corpus meta records the
-        feeding query id and an EPOCH BASE; on a lineage change the base
-        jumps past every existing epoch dir, making the effective epoch
-        (base + foreachBatch id) globally monotone across queries — which
-        simultaneously fixes the kept-view guard, the band-index guard,
-        and the corpus dir naming, with no change to any downstream
-        frontier logic. (Residual edge, accepted: an epoch dir written by
-        a crashed, never-resumed query whose commit never landed stays in
-        prior reads — its docs can shadow later near-dups; over-drop, not
-        a duplicate leak. Single-writer is the declared model, SURVEY §7.)"""
-        import json
-        import os
-
-        meta_path = os.path.join(corpus_path, "_CORPUS_META.json")
-
-        def _existing_epochs() -> list:
-            if not os.path.isdir(corpus_path):
-                return []
-            out = []
-            for name in os.listdir(corpus_path):
-                if name.startswith("epoch="):
-                    try:
-                        out.append(int(name.split("=", 1)[1]))
-                    except ValueError:
-                        continue
-            return out
-
-        def _epoch_base(qid: str | None) -> int:
-            meta = None
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    meta = json.load(f)
-            if meta is not None and (
-                qid is None or meta.get("lineage") in (None, qid)
-            ):
-                return int(meta.get("base", 0))
-            if qid is None:
-                # unknown caller identity and no (matching) meta: assume
-                # the same feeder — resetting on unknown would collide a
-                # plain checkpoint resume's in-flight epoch dir
-                return 0
-            if meta is None:
-                # first metadata write. Existing dirs = a corpus from the
-                # pre-meta layout: treat the current query as its feeder
-                # (status-quo behavior for a checkpoint resume)
-                base = 0
-            else:
-                # genuinely different feeding query: start past everything.
-                # "Everything" must include the BAND INDEX and KEPT-VIEW
-                # frontiers, not just the corpus epoch dirs: a prior query
-                # that crashed after the band append but before the corpus
-                # write left _last_epoch durable with NO epoch dir, and a
-                # base computed from dirs alone would re-issue that epoch
-                # number — append_batch's guard would then silently skip
-                # indexing the new query's first batch (its docs never
-                # become cross-batch candidates: a permanent duplicate
-                # leak).
-                existing = _existing_epochs()
-                frontiers = [
-                    e
-                    for e in (self.view._last_epoch, self.kept._last_epoch)
-                    if e is not None
-                ]
-                base = max(
-                    int(meta.get("base", 0)),
-                    (max(existing) + 1) if existing else 0,
-                    (max(frontiers) + 1) if frontiers else 0,
-                )
-            _atomic_json_dump(meta_path, {"lineage": qid, "base": base})
-            return base
-
-        def _prior_epoch_dirs(seq: int) -> list:
-            if not os.path.isdir(corpus_path):
-                return []
-            out = []
-            flat = []
-            for name in os.listdir(corpus_path):
-                if name.startswith("epoch="):
-                    try:
-                        e = int(name.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if e < seq:
-                        out.append(os.path.join(corpus_path, name))
-                elif name.endswith(".parquet"):
-                    flat.append(name)
-            if flat:
-                # a corpus written by the pre-epoch-dir flat-append layout:
-                # silently ignoring it would drop every previously ingested
-                # doc from the verification corpus and leak their near-dups
-                # — refuse loudly with the one-line migration instead
-                raise ValueError(
-                    f"legacy flat corpus layout at {corpus_path} "
-                    f"({len(flat)} bare parquet files): move them into an "
-                    f"'epoch=-1' subdirectory (mkdir epoch=-1 && mv "
-                    f"*.parquet epoch=-1/) to keep them in the corpus read"
-                )
-            return sorted(out)
+        ``compact(min_files=2)`` between batches — nothing depends on an
+        operator remembering the maintenance call. Each batch appends at
+        most ONE segment file per touched band bucket and one corpus
+        file, so the counter IS the file-count bound: both are capped at
+        ~``auto_compact_batches`` between merges, which keeps the
+        per-batch probe and corpus read cost flat over months of
+        micro-batches (probe: tools/probe_compact_r13.py). The counter is
+        in-memory; a restart just defers the next merge by up to one
+        interval. ``None``/0 disables. Safe here by construction: the
+        foreachBatch path materializes every result eagerly (no
+        outstanding lazy probes — the compact guard would raise loudly
+        if that ever changed)."""
 
         def write(batch_df: DataFrame, epoch_id: int) -> None:
             if epoch_id is None:
                 # foreachBatch always supplies an int epoch; a None here is
-                # an ad-hoc caller that the top guard below would silently
-                # drop once any epoch has committed (None used to mean
-                # "always process" before the crash-safe reordering)
+                # an ad-hoc caller that the frontier guard below would
+                # silently drop once any epoch has committed
                 raise TypeError(
                     "foreach_batch_writer requires an integer epoch_id; "
                     "for ad-hoc (non-stream) batches call dedup_batch()"
@@ -873,13 +837,14 @@ class IncrementalDeduper(LshDedupIndex):
             qid = batch_df.sparkSession.sparkContext.getLocalProperty(
                 "sql.streaming.queryId"
             )
-            seq = _epoch_base(qid) + int(epoch_id)
+            snap = self.kept._begin()
+            base = self._epoch_base(snap, qid)
+            seq = base + int(epoch_id)
             if (
                 self.kept._last_epoch is not None
                 and seq <= self.kept._last_epoch
             ):
                 return  # fully-committed epoch redelivered: nothing to do
-            spark = batch_df.sparkSession
             # exact-id drop BEFORE the fold: doc ids are immutable content
             # handles (module contract), so a batch row whose id is already
             # in the kept view is the same document redelivered — e.g. a
@@ -887,28 +852,19 @@ class IncrementalDeduper(LshDedupIndex):
             # replaying the same source into this store. Without it, every
             # already-kept unique id re-survives the pair fold (a doc never
             # pairs with ITSELF: the cross probe requires a.id != o.id) and
-            # gets re-appended — duplicate corpus text for every downstream
+            # gets re-kept — duplicate corpus text for every downstream
             # reader. Scoped HERE, not in _compute_kept: the ad-hoc
             # dedup_batch API documents idempotent recompute (re-running a
-            # committed wave returns that wave's kept rows), and the real
-            # crash-window redelivery (corpus written, merge not landed)
-            # reaches _compute_kept with the kept view still lacking these
-            # ids — identical recompute either way. In normal streaming an
-            # id arrives once and this anti-join matches nothing.
-            if self.kept._live_buckets():
+            # committed wave returns that wave's kept rows). In normal
+            # streaming an id arrives once and this anti-join matches
+            # nothing.
+            if snap is not None and snap["files"]:
                 # PRIOR epochs only (seq < this epoch): the frontier and
-                # the kept rows commit together, so the top guard already
-                # skipped any epoch whose rows are in the view; the filter
-                # keeps that true should the two ever diverge. Anti-
-                # joining this epoch's rows away would make a redelivered
-                # recompute diverge — the epoch's kept docs drop out of
-                # their own wave, and the idempotent corpus overwrite at
-                # the end would replace epoch=seq with a kept set that no
-                # longer carries their text: permanent loss, plus their
-                # future near-dups verify against nothing.
-                # seq rows > this epoch cannot exist: the frontier is
-                # monotone, so a committed later epoch implies the top
-                # guard already returned.
+                # the kept rows commit together, so the guard above
+                # already skipped any epoch whose rows are in the view; the
+                # filter keeps that true should the two ever diverge —
+                # anti-joining this epoch's own rows away would make a
+                # redelivered recompute drop them from their own wave.
                 batch_df = batch_df.join(
                     self.kept.read()
                     .filter(F.col("seq") < F.lit(seq))
@@ -916,138 +872,34 @@ class IncrementalDeduper(LshDedupIndex):
                     on=self.id_col,
                     how="left_anti",
                 )
-            # finish any corpus consolidation interrupted mid-swap before
-            # listing: a half-merged corpus read is missing text (duplicate
-            # leak); a bare exists() check when no maintenance ran
-            recover_corpus_compaction(corpus_path)
-            prior = _prior_epoch_dirs(seq)
-            if prior:
-                # explicit partition-dir paths: files sit directly under
-                # each path, so the read carries the batch schema (no
-                # discovered `epoch` column leaks into the text corpus).
-                # PRIOR dirs only — not ∪ batch_df: every batch doc's
-                # grams come from the staged new_grams side (priority 1
-                # in the verification max_by), so corpus copies of batch
-                # docs were tokenized once per batch only to be discarded
-                # (review r6)
-                corpus = spark.read.parquet(*prior)
-            else:
-                # schema-bearing empty frame: the verification side still
-                # unions against `corpus` even when nothing is indexed yet
-                corpus = batch_df.limit(0)
-            kept = self._compute_kept(batch_df, corpus=corpus, epoch_id=seq)
-            # corpus first (idempotent overwrite), frontier commit last
-            kept.write.mode("overwrite").parquet(
-                os.path.join(corpus_path, f"epoch={seq}")
+            # PRIOR epochs' text only — not ∪ batch_df: every batch doc's
+            # grams come from the staged new_grams side (priority 1 in the
+            # verification max_by). The schema-bearing empty frame stands
+            # in before anything is committed: verification still unions
+            # against it.
+            corpus = self._read_corpus(snap, below=seq)
+            kept = self._compute_kept(
+                batch_df,
+                corpus=batch_df.limit(0) if corpus is None else corpus,
+                epoch_id=seq,
             )
-            self._merge_kept(kept, epoch_id=seq, lineage=qid)
+            rels = self.kept.store.write(
+                kept.withColumn(EPOCH_COL, F.lit(seq)), 1, EPOCH_COL
+            )
+            self.kept.pending = (seq, rels.get(seq, []), kept.schema, base)
+            try:
+                self._merge_kept(kept, epoch_id=seq, lineage=qid)
+            finally:
+                self.kept.pending = None
             if auto_compact_batches:
-                self._batches_since_compact = (
-                    getattr(self, "_batches_since_compact", 0) + 1
-                )
+                self._batches_since_compact += 1
                 if self._batches_since_compact >= auto_compact_batches:
-                    # between batches, after the frontier commit: the
-                    # epoch is fully durable, a band compaction is one
-                    # manifest commit, and corpus consolidation rolls
-                    # forward from its own manifest
-                    self.compact(min_files=2, corpus_path=corpus_path)
+                    # between batches, after the epoch's commit: band and
+                    # corpus compaction are one manifest commit each
+                    self.compact(min_files=2)
                     self._batches_since_compact = 0
 
         return write
-
-
-_CORPUS_COMPACT_MANIFEST = "_CORPUS_COMPACT.json"
-_CORPUS_COMPACT_STAGING = ".corpus_compact_staging"
-
-
-def recover_corpus_compaction(corpus_path: str) -> None:
-    """Roll a consolidate_corpus_epochs interrupted after its commit point
-    forward (manifest present = the staged consolidated dir is complete
-    and authoritative for every epoch it lists). Cheap no-op when no
-    manifest exists — the foreachBatch writer calls this per epoch."""
-    import json
-    import shutil
-
-    manifest_path = os.path.join(corpus_path, _CORPUS_COMPACT_MANIFEST)
-    if not os.path.exists(manifest_path):
-        return
-    with open(manifest_path) as f:
-        manifest = json.load(f)
-    staging = os.path.join(corpus_path, _CORPUS_COMPACT_STAGING)
-    target = os.path.join(corpus_path, f"epoch={manifest['target']}")
-    if os.path.isdir(staging):
-        # crash between commit point and final rename: finish removing the
-        # merged inputs (the target name is one of them), then swap in
-        for e in manifest["merged"]:
-            shutil.rmtree(
-                os.path.join(corpus_path, f"epoch={e}"), ignore_errors=True
-            )
-        os.rename(staging, target)
-    # staging gone = the rename landed; only the manifest cleanup was lost
-    os.remove(manifest_path)
-
-
-def consolidate_corpus_epochs(
-    spark: SparkSession, corpus_path: str, upto_seq: int, min_dirs: int = 2
-) -> int:
-    """Merge the per-epoch corpus directories at or below ``upto_seq``
-    into ONE ``epoch=<max merged>`` directory — the corpus-store analog of
-    the band index's segment compaction. ``foreach_batch_writer`` writes
-    one ``epoch=<id>`` dir per micro-batch (the idempotent-redelivery
-    unit), and every later batch LISTS all of them and reads them as an
-    explicit path list: at months of micro-batches the directory count —
-    not the text volume — dominates the per-batch corpus read. Returns
-    the number of directories merged (0 = nothing to do).
-
-    ``upto_seq`` must not exceed the committed kept-view frontier: an
-    in-flight (uncommitted) epoch's partial dir must stay out of the
-    merge so its redelivery overwrite still replaces it wholesale
-    (IncrementalDeduper.compact passes the frontier). Filter semantics
-    are preserved because the merged dir's epoch is the max merged id —
-    still strictly below every future batch's seq.
-
-    Crash protocol (manifest roll-forward, the _atomic_json_dump
-    commit-point discipline): the consolidated copy is fully staged, the
-    manifest write commits, then inputs are removed and the staging dir
-    renamed in. A crash before the manifest leaves the inputs untouched
-    (staging is garbage, cleaned next run); after it,
-    ``recover_corpus_compaction`` finishes the swap — which the writer
-    runs before every epoch, so an interrupted maintenance op can never
-    make a batch read a half-merged corpus (missing text = duplicate
-    leak). Run between batches, like the band-index compact."""
-    import json
-    import shutil
-
-    recover_corpus_compaction(corpus_path)
-    if not os.path.isdir(corpus_path):
-        return 0
-    merged: list[int] = []
-    for name in os.listdir(corpus_path):
-        if name.startswith("epoch="):
-            try:
-                e = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if e <= upto_seq:
-                merged.append(e)
-    if len(merged) < min_dirs:
-        return 0
-    merged.sort()
-    staging = os.path.join(corpus_path, _CORPUS_COMPACT_STAGING)
-    shutil.rmtree(staging, ignore_errors=True)  # abandoned pre-commit stage
-    dirs = [os.path.join(corpus_path, f"epoch={e}") for e in merged]
-    # one consolidated copy; duplicate ids across epochs cannot exist
-    # (the writer's exact-id drop keeps each kept id in exactly one
-    # epoch), and even a crash-window stray collapses in the reader's
-    # grams groupBy — no distinct() needed over text rows
-    spark.read.parquet(*dirs).write.mode("overwrite").parquet(staging)
-    _atomic_json_dump(
-        os.path.join(corpus_path, _CORPUS_COMPACT_MANIFEST),
-        {"merged": merged, "target": merged[-1]},
-    )
-    # commit point passed: from here recovery completes the swap
-    recover_corpus_compaction(corpus_path)
-    return len(merged)
 
 
 def greedy_keep_filter(pairs_by_batch, batch_ids_in_order):

@@ -219,22 +219,19 @@ def test_streaming_foreach_batch_end_to_end(spark, sf_dir):
         os.utime(dst, (t, t))
 
     dd = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
-    corpus_path = os.path.join(work, "corpus")
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
     q = (
-        stream.writeStream.foreachBatch(dd.foreach_batch_writer(corpus_path))
+        stream.writeStream.foreachBatch(dd.foreach_batch_writer())
         .option("checkpointLocation", os.path.join(work, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(300)
-    store_ids = {
-        r["doc_id"] for r in spark.read.parquet(corpus_path).select("doc_id").collect()
-    }
+    store_ids = {r["doc_id"] for r in dd.corpus().select("doc_id").collect()}
     kept_view_ids = {
         r["doc_id"] for r in dd.kept.read().select("doc_id").collect()
     }
@@ -253,57 +250,133 @@ def test_streaming_foreach_batch_end_to_end(spark, sf_dir):
     assert store_ids == kept2
 
 
-def test_foreach_batch_crash_between_corpus_write_and_frontier(spark, sf_dir):
-    """ADVICE r3 regression: a crash AFTER the corpus append but BEFORE the
-    kept-view frontier commit must lose nothing and duplicate nothing on
-    redelivery. (The inverse ordering — frontier first — permanently lost
-    the epoch's corpus text: the guard skipped the redelivered epoch, so
-    later near-dups of those docs could never be verified.)"""
+def _ids(df):
+    return sorted(r["doc_id"] for r in df.select("doc_id").collect())
+
+
+def test_foreach_batch_crash_before_link_commits_nothing(spark, sf_dir):
+    """A crash after the epoch's corpus and kept files are written and
+    before the manifest link publishes nothing: the kept view, its
+    frontier and the corpus stay at the previous generation, and
+    redelivery converges to the kept set and corpus of a run that never
+    crashed."""
     from go_pq_cdc_elasticsearch_spark.streaming.incremental_dedup import (
         IncrementalDeduper,
     )
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 200)
-    work = tempfile.mkdtemp(prefix="dd_crash_")
-    dd = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
-    corpus_path = os.path.join(work, "corpus")
-    write = dd.foreach_batch_writer(corpus_path)
-
     w0 = docs.filter(F.col("doc_id") % 2 == 0)
-    w1 = docs.filter(F.col("doc_id") % 2 == 1)
+    w1 = docs.filter(F.col("doc_id") % 3 == 0)  # overlaps w0: some re-fed
+    work = tempfile.mkdtemp(prefix="dd_crash_")
+    clean = IncrementalDeduper(
+        spark, os.path.join(work, "clean"), jaccard_threshold=TAU
+    )
+    write_clean = clean.foreach_batch_writer()
+    write_clean(w0, 0)
+    write_clean(w1, 1)
+
+    dd = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
+    write = dd.foreach_batch_writer()
     write(w0, 0)
+    corpus_0, kept_0 = _ids(dd.corpus()), _ids(dd.kept.read())
+    files_0 = set(os.listdir(os.path.join(work, "dd", "kept")))
+    real_commit = dd.kept.store.commit
 
-    # crash window: corpus for epoch 1 is written, frontier commit dies
-    real_merge = dd._merge_kept
-    calls = {"n": 0}
+    def die_before_link(base, snap):
+        dd.kept.store.commit = real_commit
+        raise RuntimeError("injected crash before the manifest link")
 
-    def dying_merge(kept, epoch_id, lineage=None):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("injected crash before frontier commit")
-        real_merge(kept, epoch_id=epoch_id, lineage=lineage)
-
-    dd._merge_kept = dying_merge
-    try:
+    dd.kept.store.commit = die_before_link
+    with pytest.raises(RuntimeError, match="injected crash"):
         write(w1, 1)
-        raise AssertionError("injected crash did not surface")
-    except RuntimeError:
-        pass
-    assert dd.kept._last_epoch == 0  # frontier NOT advanced
-    # epoch-1 corpus dir exists from the failed attempt (the window)
-    assert os.path.isdir(os.path.join(corpus_path, "epoch=1"))
+    # the files were written, yet nothing is visible
+    assert set(os.listdir(os.path.join(work, "dd", "kept"))) > files_0
+    reopened = IncrementalDeduper(
+        spark, os.path.join(work, "dd"), jaccard_threshold=TAU
+    )
+    assert reopened.kept._last_epoch == 0
+    assert _ids(reopened.corpus()) == corpus_0
+    assert _ids(reopened.kept.read()) == kept_0
 
-    # redelivery of epoch 1: overwrite-idempotent append + frontier commit
-    write(w1, 1)
-    dd._merge_kept = real_merge
-    # a second redelivery after full commit is a no-op
-    write(w1, 1)
+    write(w1, 1)  # redelivery
+    write(w1, 1)  # a second redelivery after the commit is a no-op
+    assert _ids(dd.kept.read()) == _ids(clean.kept.read())
+    corpus_rows = sorted(tuple(r) for r in dd.corpus().collect())
+    assert corpus_rows == sorted(tuple(r) for r in clean.corpus().collect())
+    assert _ids(dd.corpus()) == _ids(dd.kept.read())  # no loss, no duplicate
 
-    store = spark.read.parquet(corpus_path).select("doc_id")
-    store_ids = [r["doc_id"] for r in store.collect()]
-    kept_ids = {r["doc_id"] for r in dd.kept.read().select("doc_id").collect()}
-    assert len(store_ids) == len(set(store_ids))  # no duplicates
-    assert set(store_ids) == kept_ids and kept_ids  # no loss
+
+def test_crashed_never_resumed_query_text_is_never_read(spark, sf_dir, monkeypatch):
+    """A query that dies before its epoch's commit and never resumes
+    leaves only unnamed files: a new lineage neither reads that text nor
+    publishes it, and GC deletes the files once GC_GRACE_S has passed."""
+    from go_pq_cdc_elasticsearch_spark.sink import store as S
+    from go_pq_cdc_elasticsearch_spark.streaming.incremental_dedup import (
+        IncrementalDeduper,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 150)
+    a0 = docs.filter(F.col("doc_id") <= 50)
+    crashed = docs.filter((F.col("doc_id") > 50) & (F.col("doc_id") <= 100))
+    b0 = docs.filter(F.col("doc_id") > 100)
+    work = tempfile.mkdtemp(prefix="dd_zombie_text_")
+    path = os.path.join(work, "dd")
+    sc = spark.sparkContext
+
+    a = IncrementalDeduper(spark, path, jaccard_threshold=TAU)
+    write_a = a.foreach_batch_writer()
+    real_commit = a.kept.store.commit
+
+    def die_before_link(base, snap):
+        raise RuntimeError("query A dies before its epoch-1 commit")
+
+    sc.setLocalProperty("sql.streaming.queryId", "query-A")
+    try:
+        write_a(a0, 0)
+        a.kept.store.commit = die_before_link
+        with pytest.raises(RuntimeError, match="query A dies"):
+            write_a(crashed, 1)
+    finally:
+        a.kept.store.commit = real_commit
+        sc.setLocalProperty("sql.streaming.queryId", None)
+    kept_dir = os.path.join(path, "kept")
+
+    def corpus_files():
+        return {
+            f"{d}/{n}"
+            for d in os.listdir(kept_dir)
+            if d.startswith("__epoch=")
+            for n in os.listdir(os.path.join(kept_dir, d))
+        }
+
+    committed = set(a.kept.store.latest()["retired"]) | {
+        rel for rels in a.kept.store.latest()["corpus"].values() for rel in rels
+    }
+    orphans = corpus_files() - committed
+    assert orphans  # query A's epoch-1 text is on disk
+
+    b = IncrementalDeduper(spark, path, jaccard_threshold=TAU)
+    seen = []
+    real_compute = b._compute_kept
+
+    def spy(batch, corpus, epoch_id=None):
+        seen.extend(_ids(corpus))
+        return real_compute(batch, corpus, epoch_id=epoch_id)
+
+    b._compute_kept = spy
+    write_b = b.foreach_batch_writer()
+    crashed_ids = set(_ids(crashed))
+    monkeypatch.setattr(S, "GC_GRACE_S", 0.0)
+    sc.setLocalProperty("sql.streaming.queryId", "query-B")
+    try:
+        write_b(b0.filter(F.col("doc_id") % 2 == 0), 0)
+        write_b(b0.filter(F.col("doc_id") % 2 == 1), 1)
+    finally:
+        sc.setLocalProperty("sql.streaming.queryId", None)
+    assert seen and not crashed_ids & set(seen)
+    assert not crashed_ids & set(_ids(b.corpus()))
+    assert _ids(b.corpus()) == _ids(b.kept.read())
+    assert not orphans & corpus_files()  # GC deleted the crashed text
 
 
 def test_foreach_batch_rejects_none_epoch(spark, sf_dir):
@@ -317,48 +390,9 @@ def test_foreach_batch_rejects_none_epoch(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 50)
     work = tempfile.mkdtemp(prefix="dd_none_")
     dd = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
-    write = dd.foreach_batch_writer(os.path.join(work, "corpus"))
+    write = dd.foreach_batch_writer()
     with pytest.raises(TypeError, match="dedup_batch"):
         write(docs, None)
-
-
-def test_foreach_batch_legacy_flat_corpus_refused_and_migratable(spark, sf_dir):
-    """A corpus written by the pre-epoch-dir flat-append layout must be
-    refused loudly (silently ignoring it would leak near-dups of every
-    previously ingested doc), and the documented migration (move the bare
-    files into epoch=-1) must bring it back into the corpus read."""
-    from go_pq_cdc_elasticsearch_spark.streaming.incremental_dedup import (
-        IncrementalDeduper,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 100)
-    old = docs.filter(F.col("doc_id") <= 60)
-    new = docs.filter(F.col("doc_id") > 60)
-    work = tempfile.mkdtemp(prefix="dd_legacy_")
-    corpus_path = os.path.join(work, "corpus")
-    # legacy layout: bare part files directly under corpus_path
-    old.coalesce(1).write.mode("overwrite").parquet(corpus_path)
-
-    dd = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
-    write = dd.foreach_batch_writer(corpus_path)
-    with pytest.raises(ValueError, match="legacy flat corpus"):
-        write(new, 0)
-
-    # documented migration: mv *.parquet epoch=-1/
-    legacy_dir = os.path.join(corpus_path, "epoch=-1")
-    os.makedirs(legacy_dir)
-    for name in os.listdir(corpus_path):
-        if name.endswith(".parquet"):
-            os.rename(
-                os.path.join(corpus_path, name), os.path.join(legacy_dir, name)
-            )
-    write(new, 0)  # epoch=-1 now participates as prior corpus
-    store_ids = {
-        r["doc_id"] for r in spark.read.parquet(corpus_path).select("doc_id").collect()
-    }
-    # migrated docs still present; the new epoch's kept rows were appended
-    assert {r["doc_id"] for r in old.select("doc_id").collect()} <= store_ids
-    assert os.path.isdir(os.path.join(corpus_path, "epoch=0"))
 
 
 def test_foreach_batch_new_query_lineage_not_dropped(spark, sf_dir):
@@ -376,8 +410,7 @@ def test_foreach_batch_new_query_lineage_not_dropped(spark, sf_dir):
     b = docs.filter(F.col("doc_id") > 60)
     work = tempfile.mkdtemp(prefix="dd_lin_")
     dd = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
-    corpus_path = os.path.join(work, "corpus")
-    write = dd.foreach_batch_writer(corpus_path)
+    write = dd.foreach_batch_writer()
     sc = spark.sparkContext
 
     # query A: epochs 0 and 1
@@ -385,10 +418,7 @@ def test_foreach_batch_new_query_lineage_not_dropped(spark, sf_dir):
     try:
         write(a.filter(F.col("doc_id") % 2 == 0), 0)
         write(a.filter(F.col("doc_id") % 2 == 1), 1)
-        a_store = {
-            r["doc_id"]
-            for r in spark.read.parquet(corpus_path).select("doc_id").collect()
-        }
+        a_store = {r["doc_id"] for r in dd.corpus().select("doc_id").collect()}
         assert a_store  # A's corpus text landed
 
         # query B (fresh checkpoint): epochs restart at 0
@@ -398,10 +428,7 @@ def test_foreach_batch_new_query_lineage_not_dropped(spark, sf_dir):
     finally:
         sc.setLocalProperty("sql.streaming.queryId", None)
 
-    store_ids = [
-        r["doc_id"]
-        for r in spark.read.parquet(corpus_path).select("doc_id").collect()
-    ]
+    store_ids = [r["doc_id"] for r in dd.corpus().select("doc_id").collect()]
     kept_ids = {r["doc_id"] for r in dd.kept.read().select("doc_id").collect()}
     # B's batches were processed (not skipped), nothing of A's was
     # overwritten, and the store matches the kept view with no duplicates
@@ -416,17 +443,17 @@ def test_foreach_batch_new_query_lineage_not_dropped(spark, sf_dir):
         write(b.filter(F.col("doc_id") % 2 == 1), 1)
     finally:
         sc.setLocalProperty("sql.streaming.queryId", None)
-    assert spark.read.parquet(corpus_path).count() == n_before
+    assert dd.corpus().count() == n_before
 
 
 def test_band_crash_window_then_new_lineage_still_indexes(spark, sf_dir):
     """Crash window (review r5): query A dies AFTER the band append but
-    BEFORE the corpus write — the band index's _last_epoch=0 is durable
-    with NO epoch dir. A new query B's epoch base computed from corpus
-    dirs alone would re-issue epoch 0 and append_batch would silently
-    skip indexing B's first batch (its docs never become cross-batch
-    candidates: a permanent duplicate leak). The base must jump past the
-    band/kept frontiers too."""
+    BEFORE the kept-view commit — the band index's _last_epoch=0 is
+    durable with nothing committed in the kept view. A new query B's
+    epoch base computed from the kept view alone would re-issue epoch 0
+    and append_batch would silently skip indexing B's first batch (its
+    docs never become cross-batch candidates: a permanent duplicate
+    leak). The base must jump past the band frontier too."""
     from go_pq_cdc_elasticsearch_spark.streaming.incremental_dedup import (
         IncrementalDeduper,
     )
@@ -434,7 +461,6 @@ def test_band_crash_window_then_new_lineage_still_indexes(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 40)
     work = tempfile.mkdtemp(prefix="dd_bw_")
     dd = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
-    corpus_path = os.path.join(work, "corpus")
     sc = spark.sparkContext
 
     # simulate query A's crash mid-write: bands appended (epoch 0), no
@@ -442,11 +468,11 @@ def test_band_crash_window_then_new_lineage_still_indexes(spark, sf_dir):
     # write() up to the crash point
     dd.process_batch(docs, corpus=docs, epoch_id=0)
     assert dd.view._last_epoch == 0
-    assert not os.path.isdir(corpus_path)
+    assert dd.corpus() is None
 
     # fresh deduper objects (a restart re-reads manifests from disk)
     dd2 = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
-    write = dd2.foreach_batch_writer(corpus_path)
+    write = dd2.foreach_batch_writer()
     sc.setLocalProperty("sql.streaming.queryId", "query-B")
     try:
         write(docs, 0)
@@ -460,7 +486,7 @@ def test_band_crash_window_then_new_lineage_still_indexes(spark, sf_dir):
         kept2 = write(dup, 1)
     finally:
         sc.setLocalProperty("sql.streaming.queryId", None)
-    store = [r["doc_id"] for r in spark.read.parquet(corpus_path).collect()]
+    store = [r["doc_id"] for r in dd2.corpus().collect()]
     assert 1_000_000 not in {i % 2_000_000 for i in store} or all(
         i < 1_000_000 for i in store
     )
@@ -483,14 +509,13 @@ def test_replay_same_source_new_lineage_does_not_duplicate_corpus(spark, sf_dir)
     b = docs.filter(F.col("doc_id") % 2 == 1)
     work = tempfile.mkdtemp(prefix="dd_replay_")
     dd = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
-    corpus_path = os.path.join(work, "corpus")
-    write = dd.foreach_batch_writer(corpus_path)
+    write = dd.foreach_batch_writer()
     sc = spark.sparkContext
     sc.setLocalProperty("sql.streaming.queryId", "query-A")
     try:
         write(a, 0)
         write(b, 1)
-        n_store = spark.read.parquet(corpus_path).count()
+        n_store = dd.corpus().count()
         kept_before = {
             r["doc_id"] for r in dd.kept.read().select("doc_id").collect()
         }
@@ -500,7 +525,7 @@ def test_replay_same_source_new_lineage_does_not_duplicate_corpus(spark, sf_dir)
         write(b, 1)
     finally:
         sc.setLocalProperty("sql.streaming.queryId", None)
-    assert spark.read.parquet(corpus_path).count() == n_store
+    assert dd.corpus().count() == n_store
     kept_after = {r["doc_id"] for r in dd.kept.read().select("doc_id").collect()}
     assert kept_after == kept_before
 
@@ -547,8 +572,7 @@ def test_foreach_batch_crash_between_kept_swap_and_frontier(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 200)
     work = tempfile.mkdtemp(prefix="dd_swapcrash_")
     dd = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
-    corpus_path = os.path.join(work, "corpus")
-    write = dd.foreach_batch_writer(corpus_path)
+    write = dd.foreach_batch_writer()
 
     w0 = docs.filter(F.col("doc_id") % 2 == 0)
     w1 = docs.filter(F.col("doc_id") % 2 == 1)
@@ -556,6 +580,7 @@ def test_foreach_batch_crash_between_kept_swap_and_frontier(spark, sf_dir):
     kept_after_0 = {
         r["doc_id"] for r in dd.kept.read().select("doc_id").collect()
     }
+    corpus_after_0 = {r["doc_id"] for r in dd.corpus().collect()}
 
     # crash point: epoch-1 kept files written, manifest commit dies
     real_commit = dd.kept.store.commit
@@ -574,27 +599,18 @@ def test_foreach_batch_crash_between_kept_swap_and_frontier(spark, sf_dir):
     assert dd.kept._load()["last_epoch"] == 0
     kept_mid = {r["doc_id"] for r in dd.kept.read().select("doc_id").collect()}
     assert kept_mid == kept_after_0
-    epoch1_expected = {
-        r["doc_id"]
-        for r in spark.read.parquet(
-            os.path.join(corpus_path, "epoch=1")
-        ).select("doc_id").collect()
-    }
+    assert {r["doc_id"] for r in dd.corpus().collect()} == corpus_after_0
 
     # redelivery: must recompute the IDENTICAL kept set (not strip this
-    # epoch's own ids), leave the corpus text intact, and commit
+    # epoch's own ids), keep the epoch's corpus text, and commit
     write(w1, 1)
     assert dd.kept._last_epoch is not None and dd.kept._last_epoch >= 1
-    epoch1_after = {
-        r["doc_id"]
-        for r in spark.read.parquet(
-            os.path.join(corpus_path, "epoch=1")
-        ).select("doc_id").collect()
+    epoch1_kept = {
+        r["doc_id"] for r in dd.kept.read().filter(F.col("seq") == 1).collect()
     }
-    assert epoch1_after == epoch1_expected  # no text lost on redelivery
-    store_ids = [
-        r["doc_id"] for r in spark.read.parquet(corpus_path).select("doc_id").collect()
-    ]
+    assert epoch1_kept  # the odd wave keeps docs of its own
+    store_ids = [r["doc_id"] for r in dd.corpus().select("doc_id").collect()]
+    assert set(store_ids) - corpus_after_0 == epoch1_kept  # no text lost
     kept_ids = {r["doc_id"] for r in dd.kept.read().select("doc_id").collect()}
     assert len(store_ids) == len(set(store_ids))  # no duplicates
     assert set(store_ids) == kept_ids and kept_ids  # no loss
@@ -654,14 +670,14 @@ def test_crash_window_redelivery_identical_on_transitive_chain(spark):
     # clean baseline: the deterministic fold keeps only the chain min
     work_a = tempfile.mkdtemp(prefix="dd_chain_a_")
     dd_a = IncrementalDeduper(spark, os.path.join(work_a, "dd"), **kw)
-    dd_a.foreach_batch_writer(os.path.join(work_a, "corpus"))(chain, 0)
+    dd_a.foreach_batch_writer()(chain, 0)
     kept_clean = {r["doc_id"] for r in dd_a.kept.read().select("doc_id").collect()}
     assert kept_clean == {1}
 
     # crash point: kept files written, the manifest commit dies
     work_b = tempfile.mkdtemp(prefix="dd_chain_b_")
     dd_b = IncrementalDeduper(spark, os.path.join(work_b, "dd"), **kw)
-    write_b = dd_b.foreach_batch_writer(os.path.join(work_b, "corpus"))
+    write_b = dd_b.foreach_batch_writer()
     real_commit = dd_b.kept.store.commit
 
     def die_before_commit(base, snap):
@@ -682,56 +698,6 @@ def test_crash_window_redelivery_identical_on_transitive_chain(spark):
         f"crash-window redelivery diverged: {kept_redelivered} vs clean "
         f"{kept_clean} — transitive duplicate leaked"
     )
-
-
-def test_meta_writes_are_atomic(spark, sf_dir):
-    """The deduper's JSON metas (_LSH_META/_CORPUS_META) are load-bearing
-    (every open json.loads them with no recovery path), so a crash
-    mid-write must never leave torn JSON. Kill the writer between the tmp
-    write and the rename: the prior meta must be intact and the deduper
-    must reopen cleanly."""
-    import json
-
-    from go_pq_cdc_elasticsearch_spark.streaming import incremental_dedup as ID
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 40)
-    work = tempfile.mkdtemp(prefix="dd_atomic_")
-    dd = ID.IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
-    corpus = os.path.join(work, "corpus")
-    sc = spark.sparkContext
-    sc.setLocalProperty("sql.streaming.queryId", "query-A")
-    try:
-        dd.foreach_batch_writer(corpus)(docs, 0)
-    finally:
-        sc.setLocalProperty("sql.streaming.queryId", None)
-    metas = [
-        os.path.join(corpus, "_CORPUS_META.json"),
-        os.path.join(work, "dd", "_LSH_META.json"),
-    ]
-    before = [open(m).read() for m in metas]
-    for text in before:
-        json.loads(text)  # valid
-
-    real_replace = os.replace
-
-    def die_before_rename(src, dst):
-        if dst.endswith("_META.json"):
-            raise RuntimeError("injected crash between tmp write and rename")
-        return real_replace(src, dst)
-
-    ID.os.replace = die_before_rename
-    try:
-        for m in metas:
-            with pytest.raises(RuntimeError, match="injected crash"):
-                ID._atomic_json_dump(m, {"torn": True})
-    finally:
-        ID.os.replace = real_replace
-    # the live metas are untouched and still valid JSON; reopen works
-    assert [open(m).read() for m in metas] == before
-    reopened = ID.IncrementalDeduper(
-        spark, os.path.join(work, "dd"), jaccard_threshold=TAU
-    )
-    assert reopened.kept._last_epoch == dd.kept._last_epoch == 0
 
 
 def test_band_compact_crash_keeps_segments(spark, sf_dir, monkeypatch):
@@ -878,11 +844,12 @@ def test_process_batch_lazy_equals_eager(spark, sf_dir):
 
 
 def test_corpus_consolidation_and_min_files(spark, sf_dir):
-    """IncrementalDeduper.compact(corpus_path=...) (r11, VERDICT r10 item
-    1): the committed per-epoch corpus dirs merge into ONE dir, band
-    buckets collapse to one segment file, corpus content is unchanged,
-    and a later wave still deduplicates against ALL consolidated text.
-    min_files=2 then leaves already-single-file buckets untouched."""
+    """IncrementalDeduper.compact() (r11, VERDICT r10 item 1): the
+    committed per-epoch corpus files merge into ONE file under the newest
+    epoch key, band buckets collapse to one segment file, corpus content
+    is unchanged, and a later wave still deduplicates against ALL
+    consolidated text. min_files=2 then leaves already-single-file
+    buckets untouched."""
     from go_pq_cdc_elasticsearch_spark.streaming.incremental_dedup import (
         IncrementalDeduper,
     )
@@ -890,25 +857,23 @@ def test_corpus_consolidation_and_min_files(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 300)
     work = tempfile.mkdtemp(prefix="dd_ccomp_")
     dd = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
-    corpus_path = os.path.join(work, "corpus")
-    write = dd.foreach_batch_writer(corpus_path)
+    write = dd.foreach_batch_writer()
     for i, m in enumerate((0, 1, 2)):
         write(docs.filter(F.col("doc_id") % 4 == m), i)
     before_rows = {
         (r["doc_id"], r["text"])
-        for r in spark.read.parquet(corpus_path).select("doc_id", "text").collect()
+        for r in dd.corpus().select("doc_id", "text").collect()
     }
-    epoch_dirs = [n for n in os.listdir(corpus_path) if n.startswith("epoch=")]
-    assert len(epoch_dirs) == 3
+    assert sorted(dd.kept.store.latest()["corpus"]) == [0, 1, 2]
     assert any(n > 1 for n in dd.view.segment_counts().values())
 
-    dd.compact(corpus_path=corpus_path)
+    dd.compact()
 
-    epoch_dirs = [n for n in os.listdir(corpus_path) if n.startswith("epoch=")]
-    assert epoch_dirs == ["epoch=2"]  # one consolidated dir, max merged id
+    corpus = dd.kept.store.latest()["corpus"]
+    assert list(corpus) == [2] and len(corpus[2]) == 1  # one file, max id
     after_rows = {
         (r["doc_id"], r["text"])
-        for r in spark.read.parquet(corpus_path).select("doc_id", "text").collect()
+        for r in dd.corpus().select("doc_id", "text").collect()
     }
     assert after_rows == before_rows
     counts = dd.view.segment_counts()
@@ -922,7 +887,7 @@ def test_corpus_consolidation_and_min_files(spark, sf_dir):
     }
     write(docs.filter(F.col("doc_id") % 4 == 3), 3)
     grew = {b for b, n in dd.view.segment_counts().items() if n > 1}
-    dd.compact(corpus_path=corpus_path)
+    dd.compact()
     for b in dd.view._live_buckets():
         if b not in grew and b in untouched_before:
             assert (
@@ -936,8 +901,7 @@ def test_corpus_consolidation_and_min_files(spark, sf_dir):
     w4 = docs.filter(F.col("doc_id") % 2 == 0).limit(50)
     kept4 = {r["doc_id"] for r in write_wave(dd, write, w4)}
     dd2 = IncrementalDeduper(spark, os.path.join(work, "dd2"), jaccard_threshold=TAU)
-    corpus2 = os.path.join(work, "corpus2")
-    write2 = dd2.foreach_batch_writer(corpus2)
+    write2 = dd2.foreach_batch_writer()
     for i, m in enumerate((0, 1, 2)):
         write2(docs.filter(F.col("doc_id") % 4 == m), i)
     write2(docs.filter(F.col("doc_id") % 4 == 3), 3)
@@ -947,7 +911,7 @@ def test_corpus_consolidation_and_min_files(spark, sf_dir):
 
 def write_wave(dd, write, wave_df):
     """Run one more epoch through the writer and return the kept rows it
-    appended (the new epoch dir's content)."""
+    appended (the new epoch's corpus content)."""
     seq_before = dd.kept._last_epoch
     write(wave_df, (seq_before if seq_before is not None else -1) + 1)
     return dd.kept.read().filter(
@@ -955,59 +919,49 @@ def write_wave(dd, write, wave_df):
     ).collect()
 
 
-def test_corpus_consolidation_crash_recovery(spark, sf_dir):
-    """A consolidation killed after its commit point (manifest written,
-    swap not finished) must be rolled forward by the next writer call —
-    a half-merged corpus read would miss text and leak duplicates."""
-    import json
-
+def test_corpus_consolidation_crash_keeps_previous_list(spark, sf_dir):
+    """A consolidation that dies after writing the merged file and before
+    its commit publishes nothing: the manifest keeps the previous corpus
+    list, the next epoch reads the complete corpus, and a retried
+    consolidation completes."""
     from go_pq_cdc_elasticsearch_spark.streaming.incremental_dedup import (
-        _CORPUS_COMPACT_MANIFEST,
-        _CORPUS_COMPACT_STAGING,
         IncrementalDeduper,
     )
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 200)
     work = tempfile.mkdtemp(prefix="dd_crec_")
     dd = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
-    corpus_path = os.path.join(work, "corpus")
-    write = dd.foreach_batch_writer(corpus_path)
+    write = dd.foreach_batch_writer()
     write(docs.filter(F.col("doc_id") % 2 == 0), 0)
     write(docs.filter(F.col("doc_id") % 2 == 1), 1)
-    want = {
-        (r["doc_id"], r["text"])
-        for r in spark.read.parquet(corpus_path).select("doc_id", "text").collect()
-    }
+    want = {(r["doc_id"], r["text"]) for r in dd.corpus().collect()}
+    before = dd.kept.store.latest()["corpus"]
+    assert sorted(before) == [0, 1]
 
-    # hand-build the crash state: staging complete + manifest committed,
-    # inputs not yet removed, rename not done
-    staging = os.path.join(corpus_path, _CORPUS_COMPACT_STAGING)
-    spark.read.parquet(
-        os.path.join(corpus_path, "epoch=0"), os.path.join(corpus_path, "epoch=1")
-    ).write.mode("overwrite").parquet(staging)
-    with open(os.path.join(corpus_path, _CORPUS_COMPACT_MANIFEST), "w") as f:
-        json.dump({"merged": [0, 1], "target": 1}, f)
+    real_commit = dd.kept.store.commit
 
-    # the next epoch's writer call must recover, then dedup correctly
-    w2 = docs.filter(F.col("doc_id") % 2 == 0).limit(30)  # all dups of epoch 0
-    write(w2, 2)
-    assert not os.path.exists(os.path.join(corpus_path, _CORPUS_COMPACT_MANIFEST))
-    assert not os.path.isdir(staging)
-    dirs = sorted(n for n in os.listdir(corpus_path) if n.startswith("epoch="))
-    assert dirs[0] == "epoch=1"  # 0 and 1 merged into 1
-    got = {
-        (r["doc_id"], r["text"])
-        for r in spark.read.parquet(
-            *(os.path.join(corpus_path, d) for d in dirs)
-        ).select("doc_id", "text").collect()
-    }
-    assert got == want  # nothing lost, nothing duplicated (w2 were all dups)
+    def die_before_commit(base, snap):
+        dd.kept.store.commit = real_commit
+        raise RuntimeError("injected crash before the consolidation commit")
+
+    dd.kept.store.commit = die_before_commit
+    with pytest.raises(RuntimeError, match="injected crash"):
+        dd.compact()
+    assert dd.kept.store.latest()["corpus"] == before
+    assert {(r["doc_id"], r["text"]) for r in dd.corpus().collect()} == want
+
+    # the next epoch dedups against the complete corpus: all dups of epoch 0
+    write(docs.filter(F.col("doc_id") % 2 == 0).limit(30), 2)
+    assert {(r["doc_id"], r["text"]) for r in dd.corpus().collect()} == want
+    dd.compact()
+    assert list(dd.kept.store.latest()["corpus"]) == [1]
+    assert {(r["doc_id"], r["text"]) for r in dd.corpus().collect()} == want
 
 
 def test_deduper_fence_blocks_zombie_kept_merges(spark, tmp_path):
     """r11: a fenced IncrementalDeduper's kept view dies loudly when a
     successor acquires the fence — a zombie streaming deduper cannot
-    resurrect dropped docs by merging behind the takeover. Segment/corpus
+    resurrect dropped docs by merging behind the takeover. Segment
     appends are deliberately unfenced (redundant candidate state, filtered
     by exact-Jaccard verification; see acquire_fence docstring)."""
     import pytest
@@ -1037,6 +991,90 @@ def test_deduper_fence_blocks_zombie_kept_merges(spark, tmp_path):
         a.dedup_batch(
             docs.withColumn("doc_id", docs.doc_id + 1), empty, epoch_id=1
         )
+
+
+def test_zombie_corpus_commit_is_fenced(spark, tmp_path):
+    """The corpus commits in the kept view's manifest, under its fence: a
+    zombie's next epoch and its consolidation raise FencedWriterError, and
+    the successor's corpus never shows the zombie's text."""
+    from go_pq_cdc_elasticsearch_spark.sink.materialized import (
+        FencedWriterError,
+    )
+    from go_pq_cdc_elasticsearch_spark.streaming.incremental_dedup import (
+        IncrementalDeduper,
+    )
+
+    path = str(tmp_path / "idx")
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "pack my box with five dozen liquor jugs"),
+            (3, "how vexingly quick daft zebras jump today"),
+        ],
+        "doc_id long, text string",
+    )
+    a = IncrementalDeduper(spark, path)
+    a.acquire_fence()
+    write_a = a.foreach_batch_writer()
+    write_a(docs.filter("doc_id = 1"), 0)
+
+    # the takeover lands after the zombie wrote its epoch-1 corpus files
+    b = IncrementalDeduper(spark, path)
+    real_write = a.kept.store.write
+
+    def write_then_takeover(*args):
+        a.kept.store.write = real_write
+        out = real_write(*args)
+        b.acquire_fence()
+        return out
+
+    a.kept.store.write = write_then_takeover
+    with pytest.raises(FencedWriterError):
+        write_a(docs.filter("doc_id = 2"), 1)
+    with pytest.raises(FencedWriterError):
+        write_a(docs.filter("doc_id = 3"), 2)
+    with pytest.raises(FencedWriterError):
+        a.compact()
+    assert _ids(b.corpus()) == [1]
+    assert list(b.kept.store.latest()["corpus"]) == [0]
+
+
+def test_vacuum_and_fence_carry_the_corpus_group(spark, tmp_path):
+    """Commits of the kept view that do not touch the corpus — a vacuum,
+    a fence takeover — carry its file list, schema and epoch base
+    forward unchanged."""
+    from go_pq_cdc_elasticsearch_spark.streaming.incremental_dedup import (
+        IncrementalDeduper,
+    )
+
+    path = str(tmp_path / "idx")
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "pack my box with five dozen liquor jugs"),
+        ],
+        "doc_id long, text string",
+    )
+    dd = IncrementalDeduper(spark, path)
+    write = dd.foreach_batch_writer()
+    write(docs.filter("doc_id = 1"), 0)
+    write(docs.filter("doc_id = 2"), 1)
+
+    def corpus_fields():
+        snap = dd.kept.store.latest()
+        return snap["gen"], {
+            k: snap[k] for k in ("corpus", "corpus_schema", "epoch_base")
+        }
+
+    gen, fields = corpus_fields()
+    assert sorted(fields["corpus"]) == [0, 1]
+    rows = sorted(tuple(r) for r in dd.corpus().collect())
+    dd.kept.vacuum(watermark_seq=1)
+    IncrementalDeduper(spark, path).acquire_fence()
+    gen_after, fields_after = corpus_fields()
+    assert gen_after == gen + 2 and fields_after == fields
+    assert sorted(tuple(r) for r in dd.corpus().collect()) == rows
+    assert dd.corpus().columns == ["doc_id", "text"]
 
 
 def test_band_index_autosize_scales_past_old_cap(spark):
@@ -1111,18 +1149,15 @@ def test_compact_guard_names_outstanding_lazy_results(spark, sf_dir):
 def test_foreach_writer_auto_compacts(spark, sf_dir):
     """The streaming writer must bound both growth axes with no manual
     maintenance call: after auto_compact_batches epochs, band segment
-    files per bucket collapse to 1 and prior corpus epoch dirs merge."""
-    import glob
-
+    files per bucket collapse to 1 and prior corpus epochs merge."""
     from go_pq_cdc_elasticsearch_spark.streaming.incremental_dedup import (
         IncrementalDeduper,
     )
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 160)
     work = tempfile.mkdtemp(prefix="dedup_autoc_")
-    corpus_path = os.path.join(work, "corpus")
     d = IncrementalDeduper(spark, os.path.join(work, "idx"), jaccard_threshold=TAU)
-    write = d.foreach_batch_writer(corpus_path, auto_compact_batches=2)
+    write = d.foreach_batch_writer(auto_compact_batches=2)
     for i, m in enumerate((0, 1, 2, 3)):
         write(docs.filter(F.col("doc_id") % 4 == m), epoch_id=i)
     # compaction fired at epochs 1 and 3: every band bucket is one file
@@ -1130,15 +1165,10 @@ def test_foreach_writer_auto_compacts(spark, sf_dir):
     assert counts and max(counts.values()) == 1
     # corpus epochs at/below the frontier merged into one dir (the last
     # in-flight epoch keeps its own name only until the NEXT compact)
-    epoch_dirs = [
-        p for p in glob.glob(os.path.join(corpus_path, "epoch=*"))
-    ]
+    epoch_dirs = list(d.kept.store.latest()["corpus"])
     assert len(epoch_dirs) <= 2
     # the kept corpus content is intact through the merges
-    kept_ids = {
-        r["doc_id"]
-        for r in spark.read.parquet(*epoch_dirs).select("doc_id").collect()
-    }
+    kept_ids = {r["doc_id"] for r in d.corpus().select("doc_id").collect()}
     assert kept_ids == {
         r["doc_id"] for r in d.kept.read().select("doc_id").collect()
     }

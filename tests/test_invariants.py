@@ -230,3 +230,30 @@ def test_load_table_schema_cache_invalidates_on_regeneration(
     again = load_table(spark, str(d), "region")
     assert "zz_new" in again.columns  # stale schema would miss it
     assert again.select("zz_new").first()[0] == "y"
+
+
+def test_load_table_schema_cache_sees_same_size_rewrite(spark, tmp_path):
+    """A same-size in-place rewrite within one second of the original —
+    on a coarse-mtime filesystem its mtime does not move, modelled here by
+    restoring the old mtime — must still re-infer: the fingerprint
+    carries each file's inode."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    p = str(d / "region.parquet")
+    t = pa.table({"r_regionkey": [0, 1], "r_name": ["AFRICA", "AMERICA"]})
+    pq.write_table(t, p)
+    assert load_table(spark, str(d), "region").columns == ["r_regionkey", "r_name"]
+    st = os.stat(p)
+    tmp = str(d / "region.tmp")
+    pq.write_table(t.rename_columns(["r_regionkeZ", "r_namZ"]), tmp)
+    assert os.path.getsize(tmp) == st.st_size
+    os.utime(tmp, ns=(st.st_atime_ns, st.st_mtime_ns))
+    os.replace(tmp, p)
+    again = load_table(spark, str(d), "region")
+    assert again.columns == ["r_regionkeZ", "r_namZ"]
+    assert again.count() == 2

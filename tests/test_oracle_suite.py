@@ -159,6 +159,38 @@ def test_canon_double_form_is_engine_portable_on_ties(spark, con):
     assert got_spark == got_duck
 
 
+def test_canon_summary_escapes_quotes_in_names_and_part(spark, con):
+    # column names and the part name carrying each quote character of
+    # both dialects (backtick, double quote, single quote, backslash):
+    # both summaries must parse and agree on part, row count and checksum
+    import pandas as pd
+
+    from go_pq_cdc_elasticsearch_spark.sql.canon import (
+        duckdb_canon_sql,
+        spark_canon_summary,
+    )
+
+    names = ["a`b", 'c"d', "e'f", "g\\h"]
+    rows = [(1, "x", 0.5, "p"), (2, "y'z", -1.25, 'q"r')]
+    sdf = spark.createDataFrame(
+        rows, ", ".join(f"`{n.replace('`', '``')}` {t}" for n, t in
+                        zip(names, ("long", "string", "double", "string")))
+    )
+    part = "q`x\"y'z\\w"
+    got_spark = tuple(spark_canon_summary(sdf, part).collect()[0])
+
+    con.register("canon_quote_probe", pd.DataFrame(rows, columns=names))
+    col_types = [
+        (r[0], r[1])
+        for r in con.execute("DESCRIBE SELECT * FROM canon_quote_probe").fetchall()
+    ]
+    got_duck = con.execute(
+        duckdb_canon_sql("SELECT * FROM canon_quote_probe", part, col_types)
+    ).fetchone()
+    assert got_spark[0] == part
+    assert got_spark == tuple(got_duck)
+
+
 def test_pround_parity_random_and_adversarial(spark, con):
     # pround must produce the identical double in both engines for the
     # same input — random values plus adversarial near-tie constructions

@@ -5,8 +5,8 @@ auto-compaction wired into foreach_batch_writer is the only maintenance.
 60 synthetic batches of 40 docs each (some cross-batch near-dups) are
 driven through IncrementalDeduper.foreach_batch_writer(auto_compact_batches
 =16). Without compaction, per-batch probe cost grows with the segment-file
-and epoch-dir counts (the r11 finding: 3072 files -> 5.57 s probes);
-with it, the listing stays bounded. Writes probe_compact_r13.json.
+and corpus-file counts (the r11 finding: 3072 files -> 5.57 s probes);
+with it, both stay bounded. Writes probe_compact_r13.json.
 
 Usage: python tools/probe_compact_r13.py  [n_batches]
 """
@@ -34,11 +34,10 @@ def main() -> int:
     )
 
     work = tempfile.mkdtemp(prefix="probe_compact_r13_")
-    corpus_path = os.path.join(work, "corpus")
     d = IncrementalDeduper(
         spark, os.path.join(work, "idx"), jaccard_threshold=0.7
     )
-    write = d.foreach_batch_writer(corpus_path, auto_compact_batches=16)
+    write = d.foreach_batch_writer(auto_compact_batches=16)
 
     def batch_df(i: int):
         # 40 docs per batch; every 4th doc repeats the previous batch's
@@ -76,11 +75,7 @@ def main() -> int:
         "last10_avg": round(last10, 3),
         "last_over_first": round(last10 / first10, 3) if first10 else None,
         "final_max_segments_per_bucket": max(seg.values()) if seg else 0,
-        "final_corpus_epoch_dirs": sum(
-            1
-            for n in os.listdir(corpus_path)
-            if n.startswith("epoch=")
-        ),
+        "final_corpus_epochs": len(d.kept.store.latest()["corpus"]),
     }
     dst = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "probe_compact_r13.json"
