@@ -700,6 +700,68 @@ def test_crash_window_redelivery_identical_on_transitive_chain(spark):
     )
 
 
+def test_meta_writes_are_atomic(spark, sf_dir, monkeypatch):
+    """The deduper's metadata is load-bearing: the corpus entry and the
+    frontier live in the kept view's manifest, the hash family in the
+    band index's, and every open reads them with no recovery path. A
+    crash mid-write of the next manifest (first open's family pin or an
+    epoch's commit) must leave torn JSON only in a temp file: the newest
+    manifests stay intact and the deduper reopens with its corpus,
+    frontier and hash family."""
+    import json
+    import types
+
+    from go_pq_cdc_elasticsearch_spark.sink import store as S
+    from go_pq_cdc_elasticsearch_spark.streaming.incremental_dedup import (
+        IncrementalDeduper,
+    )
+
+    def torn(obj, f):
+        f.write(json.dumps(obj)[:20])
+        raise OSError("injected crash mid-manifest")
+
+    tear = types.SimpleNamespace(dump=torn, load=json.load)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 40)
+    work = tempfile.mkdtemp(prefix="dd_atomic_")
+    path = os.path.join(work, "dd")
+    family = {"k": 16, "bands": 8, "text_col": "text", "id_col": "doc_id"}
+
+    # first open: the family pin is torn, so no generation exists yet
+    with monkeypatch.context() as m:
+        m.setattr(S, "json", tear)
+        with pytest.raises(OSError, match="injected crash mid-manifest"):
+            IncrementalDeduper(spark, path, jaccard_threshold=TAU)
+    assert S.ManifestStore(os.path.join(path, "bands")).latest() is None
+
+    dd = IncrementalDeduper(spark, path, jaccard_threshold=TAU)
+    write = dd.foreach_batch_writer()
+    write(docs.filter(F.col("doc_id") <= 20), 0)
+    mdirs = [os.path.join(path, sub, "_manifest") for sub in ("kept", "bands")]
+
+    def newest(mdir):
+        gen = max(int(n[:-5]) for n in os.listdir(mdir) if n.endswith(".json"))
+        with open(os.path.join(mdir, f"{gen}.json")) as f:
+            return f.read()
+
+    before = [newest(m) for m in mdirs]
+    for text in before:
+        json.loads(text)  # valid
+    corpus_0 = sorted(tuple(r) for r in dd.corpus().collect())
+
+    with monkeypatch.context() as m:
+        m.setattr(S, "json", tear)
+        with pytest.raises(OSError, match="injected crash mid-manifest"):
+            write(docs.filter(F.col("doc_id") > 20), 1)
+    # the torn text is only in a temp file; the live manifests are
+    # untouched and still valid JSON; reopen works
+    assert any(n.endswith(".tmp") for m in mdirs for n in os.listdir(m))
+    assert [newest(m) for m in mdirs] == before
+    reopened = IncrementalDeduper(spark, path, jaccard_threshold=TAU)
+    assert reopened.kept._last_epoch == dd.kept._last_epoch == 0
+    assert reopened.view.store.latest()["extra"] == family
+    assert sorted(tuple(r) for r in reopened.corpus().collect()) == corpus_0
+
+
 def test_band_compact_crash_keeps_segments(spark, sf_dir, monkeypatch):
     """A compaction that dies part-way (after moving one rewritten file
     into its bucket dir) commits nothing: the index keeps its segments
