@@ -42,8 +42,11 @@ def table_path(sf_dir: str, name: str) -> str:
 # names/types, never data or plans). One entry per path: an in-place
 # regeneration changes the fingerprint, re-infers and replaces the entry.
 # Every action still lists, reads and computes over the parquet bytes in
-# full — only the per-invocation footer re-inference job is gone.
-_SCHEMA_CACHE: dict[str, tuple[tuple, object]] = {}
+# full — only the per-invocation footer re-inference job is gone. The
+# events entry also records whether its ``ts`` column is TIMESTAMP(NANOS),
+# read once from a parquet footer.
+_SCHEMA_CACHE: dict[str, tuple[tuple, object, bool]] = {}
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def _source_fingerprint(p: str) -> tuple:
@@ -67,77 +70,96 @@ def _source_fingerprint(p: str) -> tuple:
         return ("missing",)
 
 
-def _read_with_cached_schema(spark: SparkSession, p: str) -> DataFrame:
+def _ts_is_nanos(fingerprint: tuple, p: str) -> bool:
+    """True when the first parquet file of ``p`` stores ``ts`` as
+    TIMESTAMP(NANOS), read from its footer with pyarrow (no Spark job).
+    Only the logical type counts: an INT96 timestamp also surfaces as ns
+    in arrow, but Spark reads it as a timestamp without the conf."""
+    import pyarrow.parquet as pq
+
+    files = [
+        os.path.join(p, f[0]) if os.path.isdir(p) else f[0]
+        for f in fingerprint
+        if f != "missing" and f[0].endswith(".parquet")
+    ]
+    if not files:
+        return False
+    schema = pq.ParquetFile(files[0]).schema
+    for i in range(len(schema)):
+        col = schema.column(i)
+        if col.path == "ts":
+            return '"timeUnit": "nanoseconds"' in col.logical_type.to_json()
+    return False
+
+
+def _read_with_cached_schema(
+    spark: SparkSession, p: str, probe_ts: bool = False
+) -> tuple[DataFrame, bool]:
+    """The table at ``p`` with its cached schema, and whether its ``ts``
+    is TIMESTAMP(NANOS) (looked up only with ``probe_ts``). A cache miss
+    decides that from the footer first, so an ns file's schema is
+    inferred under the conf it is read with."""
     fingerprint = _source_fingerprint(p)
     hit = _SCHEMA_CACHE.get(p)
-    if hit is not None and hit[0] == fingerprint:
-        return spark.read.schema(hit[1]).parquet(p)
-    df = spark.read.parquet(p)
-    _SCHEMA_CACHE[p] = (fingerprint, df.schema)
-    return df
+    if hit is None or hit[0] != fingerprint:
+        nanos = probe_ts and _ts_is_nanos(fingerprint, p)
+        if nanos:
+            spark.conf.set(_NANOS_CONF, "true")
+        hit = (fingerprint, spark.read.parquet(p).schema, nanos)
+        _SCHEMA_CACHE[p] = hit
+    elif hit[2]:
+        spark.conf.set(_NANOS_CONF, "true")
+    return spark.read.schema(hit[1]).parquet(p), hit[2]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # events.ts has shipped as TIMESTAMP(NANOS) (round 1) and as plain
-        # timestamp[us] (round 2 regeneration). Spark has no ns type: set the
-        # runtime conf so a NANOS column reads as long-ns (the conf is a
-        # no-op for us-precision columns), then branch on the dtype actually
-        # read — long means ns, floor-truncate to micros exactly like
-        # DuckDB's read-time ns->us conversion so oracle comparisons agree;
-        # timestamp passes through untouched.
-        from pyspark.sql import functions as F
+    df, nanos = _read_with_cached_schema(
+        spark, table_path(sf_dir, name), probe_ts=name == "events"
+    )
+    if name != "events":
+        return df
+    # events.ts has shipped as TIMESTAMP(NANOS) (round 1) and as plain
+    # timestamp[us] (round 2 regeneration). Spark has no ns type: an ns
+    # file is read with nanosAsLong set, so ts arrives as long-ns, and is
+    # floor-truncated to micros exactly like DuckDB's read-time ns->us
+    # conversion so oracle comparisons agree. The conf must STAY set
+    # (execution re-reads footers under the current conf). A us file
+    # never touches the conf: load_table runs on many threads at once,
+    # and a set/unset pair per call would flip the session conf under a
+    # concurrent read.
+    from pyspark.sql import functions as F
 
-        prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # cache-miss inference runs under the conf just set, so the cached
-        # schema is the conf-true shape either way (long for ns files,
-        # timestamp_ntz for us files); execution-time decoding of ns files
-        # needs the conf too, which the ns branch below keeps set exactly
-        # as before
-        df = _read_with_cached_schema(spark, table_path(sf_dir, name))
-        if dict(df.dtypes).get("ts") in ("bigint", "long"):
-            # genuinely NANOS data: the conf must STAY set (execution
-            # re-reads footers under the current conf). Reassemble to
-            # TIMESTAMP_NTZ with pure integer/field arithmetic — the
-            # earlier timestamp_micros() gave an INSTANT, so this branch
-            # disagreed in type with the us branch (which infers NTZ), and
-            # any later cast('timestamp_ntz') converted through the
-            # SESSION zone: ns-shaped data under a non-UTC session shifted
-            # every wall time vs the oracle (review r5). The testdata
-            # epoch is post-1970, so the div/mod split needs no negative
-            # handling.
-            micros = F.expr("ts div 1000")
-            days = F.expr("(ts div 1000) div 86400000000")
-            rem = micros - days * F.lit(86_400_000_000)
-            d = F.date_add(F.to_date(F.lit("1970-01-01")), days.cast("int"))
-            df = df.withColumn(
-                "ts",
-                F.make_timestamp_ntz(
-                    F.year(d),
-                    F.month(d),
-                    F.dayofmonth(d),
-                    (rem / F.lit(3_600_000_000)).cast("int"),
-                    ((rem / F.lit(60_000_000)) % 60).cast("int"),
-                    (rem % F.lit(60_000_000)).cast("decimal(16,6)")
-                    / F.lit(1_000_000),
-                ),
-            )
-        elif prev is None:
-            # us-precision data: restore the session conf — leaving it set
-            # would make UNRELATED parquet reads in this session decode
-            # TIMESTAMP(NANOS) columns as raw longs
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-        # normalize the declared columns first, but PASS THROUGH any extra
-        # trailing columns a regeneration added (the wide_rel contract:
-        # DuckDB reads the raw file, so dropping unknowns here would
-        # diverge the two engines on any future whole-row projection)
-        known = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-        extras = [c for c in df.columns if c not in known]
-        return df.select(*known, *extras)
-    return _read_with_cached_schema(spark, table_path(sf_dir, name))
+    if nanos:
+        # Reassemble to TIMESTAMP_NTZ with pure integer/field arithmetic —
+        # the earlier timestamp_micros() gave an INSTANT, so this branch
+        # disagreed in type with the us branch (which infers NTZ), and any
+        # later cast('timestamp_ntz') converted through the SESSION zone:
+        # ns-shaped data under a non-UTC session shifted every wall time
+        # vs the oracle (review r5). The testdata epoch is post-1970, so
+        # the div/mod split needs no negative handling.
+        micros = F.expr("ts div 1000")
+        days = F.expr("(ts div 1000) div 86400000000")
+        rem = micros - days * F.lit(86_400_000_000)
+        d = F.date_add(F.to_date(F.lit("1970-01-01")), days.cast("int"))
+        df = df.withColumn(
+            "ts",
+            F.make_timestamp_ntz(
+                F.year(d),
+                F.month(d),
+                F.dayofmonth(d),
+                (rem / F.lit(3_600_000_000)).cast("int"),
+                ((rem / F.lit(60_000_000)) % 60).cast("int"),
+                (rem % F.lit(60_000_000)).cast("decimal(16,6)")
+                / F.lit(1_000_000),
+            ),
+        )
+    # normalize the declared columns first, but PASS THROUGH any extra
+    # trailing columns a regeneration added (the wide_rel contract:
+    # DuckDB reads the raw file, so dropping unknowns here would
+    # diverge the two engines on any future whole-row projection)
+    known = ["event_id", "ts", "user_id", "event_type", "value", "props"]
+    extras = [c for c in df.columns if c not in known]
+    return df.select(*known, *extras)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -29,8 +29,13 @@ from go_pq_cdc_elasticsearch_spark.sink.materialized import MaterializedView
 from go_pq_cdc_elasticsearch_spark.sources.replay import read_event_stream
 
 # reserved op value carrying a decoded TRUNCATE through the transform to
-# the truncating foreachBatch wrapper (never merged as a row op)
+# the Connector's foreachBatch body (never merged as a row op)
 TRUNCATE_MARKER = "__truncate__"
+
+# seconds between the live consumer's partial-segment flushes: a change
+# waits for staging half of this on average. Acks keep their own ticker
+# (ReplicationSettings.ack_interval_sec).
+STAGE_INTERVAL_SEC = 0.1
 
 
 @dataclass
@@ -41,10 +46,12 @@ class ReplicationSettings:
     the Connector — single connection per slot, like the reference.
 
     Staging cadence: the consumer writes a segment for the stream once
-    ``batch_size`` changes have arrived or on the ack ticker
-    (``ack_interval_sec``), whichever comes first, and forwards the
-    committed frontier as a slot ack on the same ticker — the
-    reference's bulk flushes on batchTickerDuration, then acks."""
+    ``batch_size`` changes have arrived or every 0.1 s
+    (``STAGE_INTERVAL_SEC``), whichever comes first, and forwards the
+    committed frontier as a slot ack every ``ack_interval_sec``. The
+    reference's bulk flushes on batchTickerDuration and acks after the
+    flush; here the ack always follows the merge that committed the
+    frontier, so a faster flush cadence changes no delivery guarantee."""
 
     host: str
     port: int
@@ -128,6 +135,12 @@ class ReplicationSettings:
 
 @dataclass
 class ConnectorConfig:
+    """Where the pipeline stages, merges and checkpoints, the view's merge
+    contract, and the stream's trigger. ``processing_time`` defaults to
+    100 ms: a staged change waits for the next trigger, so a longer
+    interval adds to freshness, while a shorter one polls an idle stream
+    more often (idle CPU per setting in PERF.md, "Live freshness")."""
+
     staged_dir: str
     view_path: str
     checkpoint_dir: str
@@ -138,7 +151,7 @@ class ConnectorConfig:
     op_col: str = "event_type"
     delete_op: str = "delete"
     max_files_per_trigger: int = 1
-    processing_time: str = "1 second"
+    processing_time: str = "100 milliseconds"
     replication: ReplicationSettings | None = None  # live pgoutput upstream
     # reference cdc.metric.port (README.md:245-274): when set, the
     # Connector serves GET /metrics (Prometheus exposition, the reference's
@@ -211,13 +224,13 @@ def wal_to_view_transform(cfg: ConnectorConfig):
 def _read_once(inner):
     """Outermost foreachBatch wrapper: persist the micro-batch, run
     ``inner``, unpersist it (also when ``inner`` raises). Every action
-    inside — the truncate probe, the merge's emptiness probe and merge,
-    the metered counters — then reads the one materialization, so the
-    batch's scan and transform run once per micro-batch instead of once
-    per action. That matters most for a file-replay source, and for a
-    pgwal batch replayed after a restart, which re-reads its segments in
-    a Python task per scan; a live pgwal batch's rows already sit in the
-    JVM (prefetched by the source runner)."""
+    inside — the Connector's pre-merge aggregate and the merge — then
+    reads the one materialization, so the batch's scan and transform run
+    once per micro-batch instead of once per action. That matters most
+    for a file-replay source, and for a pgwal batch replayed after a
+    restart, which re-reads its segments in a Python task per scan; a
+    live pgwal batch's rows already sit in the JVM (prefetched by the
+    source runner)."""
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df = batch_df.persist()
@@ -233,9 +246,10 @@ class Connector:
     """Start/WaitUntilReady/Close over the streaming CDC pipeline.
 
     Each micro-batch is scanned and transformed once: the query's
-    foreachBatch function persists the batch before the view's writer
-    (and the truncate and metrics wrappers around it) runs its several
-    actions over it, and unpersists it afterwards (``_read_once``)."""
+    foreachBatch function persists the batch, runs ``_write_batch``'s
+    actions over it, and unpersists it afterwards (``_read_once``). A
+    live batch into a 1-bucket view costs three Spark jobs: two for the
+    pre-merge aggregate, one for the merge."""
 
     def __init__(
         self,
@@ -428,9 +442,10 @@ class Connector:
                     stop_event=self._repl_stop,
                     batch_size=rs.batch_size,
                     ack_interval_sec=rs.ack_interval_sec,
-                    # a partial segment is staged on the ack ticker, like
-                    # the reference's bulk flushing on batchTickerDuration
-                    flush_interval_sec=rs.ack_interval_sec,
+                    # a partial segment is staged on its own short ticker,
+                    # like the reference's bulk flushing on
+                    # batchTickerDuration; acks keep ack_interval_sec
+                    flush_interval_sec=STAGE_INTERVAL_SEC,
                 )
             except BaseException as e:  # noqa: BLE001 — record, never vanish
                 self.consumer_error = e
@@ -691,19 +706,10 @@ class Connector:
             )
             if self.transform is not None:
                 stream = self.transform(stream)
-        batch_fn = self.view.foreach_batch_writer()
         if self.cfg.metric_port is not None:
             self._start_metrics_endpoint()
-            batch_fn = self._metered_writer(batch_fn)
-        if (
-            self.cfg.replication is not None
-            and self.cfg.replication.on_truncate == "tombstone_table"
-        ):
-            # tombstone rows are intercepted before the metered counters
-            # and the keyed merge ever see them
-            batch_fn = self._truncating_writer(batch_fn)
         writer = (
-            stream.writeStream.foreachBatch(_read_once(batch_fn))
+            stream.writeStream.foreachBatch(_read_once(self._write_batch))
             .option("checkpointLocation", self.cfg.checkpoint_dir)
         )
         if available_now:
@@ -718,13 +724,12 @@ class Connector:
         """cfg.metric_port wiring (reference cdc.metric.port + the metrics
         listener README.md:245-274): serve GET /metrics + GET /status and
         register a StreamingQueryListener feeding the latency gauges from
-        each progress event. The COUNTERS are fed by ``_metered_writer``
-        (an Observation riding the merge's own actions inside
-        foreachBatch) — NOT from progress observedMetrics: under
-        foreachBatch the batch plan is cached/evaluated by the user
-        callback's actions, and the epoch's observedMetrics were seen to
-        repeat the previous batch's values (stale accumulators), which
-        would both miscount and double-book.
+        each progress event. The COUNTERS are fed by ``_write_batch``'s
+        pre-merge aggregate inside foreachBatch — NOT from progress
+        observedMetrics: under foreachBatch the batch plan is
+        cached/evaluated by the user callback's actions, and the epoch's
+        observedMetrics were seen to repeat the previous batch's values
+        (stale accumulators), which would both miscount and double-book.
 
         Labels: slot_name = the replication slot (live mode) or the
         checkpoint dir's basename (replay mode — the checkpoint IS the
@@ -794,94 +799,95 @@ class Connector:
             status_fn=healthy,
         )
 
-    def _metered_writer(self, inner):
-        """Wrap the view's foreachBatch writer so each merged epoch books
-        its op counters with ONE explicit aggregate over the micro-batch
-        (the persisted copy ``_read_once`` holds, not the source).
+    def _write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """The query's foreachBatch body, run on the persisted micro-batch
+        (``_read_once``): apply a TRUNCATE tombstone if the batch carries
+        one, merge, and book the op counters.
 
-        Not an Observation riding the merge's own actions: Observation.get
-        captures the FIRST completed action's flow, and merge_batch's
-        first action is a limit-style emptiness/bucket probe — the
-        observed counts came back as 1 per epoch (proven by execution,
-        r10). Counters are booked only when the epoch actually advanced
-        the view frontier, so a redelivered (skipped) epoch books nothing
-        — counters stay exactly-once like the merge itself."""
+        One aggregate job answers everything the merge needs to know up
+        front: the row count, the op counters (with a metrics endpoint)
+        and the latest truncate seq (under on_truncate='tombstone_table').
+        It runs over ``coalesce(1)``: as the first action on a persisted
+        frame, a plain aggregate costs a cache stage, a shuffle map and a
+        result job; the coalesced one costs two. The count reaches the
+        merge through ``view._batch_rows``, so the merge runs no emptiness
+        probe of its own. Without metrics or the tombstone policy there
+        is nothing to aggregate, and the merge probes emptiness itself.
+
+        TRUNCATE (tombstone_table): view rows at or below the batch's
+        latest truncate seq are dropped and in-batch rows before it are
+        discarded (they were truncated at the source before this batch
+        committed); rows after it merge normally. Idempotent under
+        redelivery: the wipe only touches sub-truncate state, which a
+        replayed epoch re-wipes to the same result, and the merge's epoch
+        frontier guard stays authoritative for the row ops. Multiple
+        truncates in one batch collapse to the latest. The wipe must come
+        before the merge, so a batch that carries one recounts its
+        remaining rows for the counters (one more job, on a rare
+        administrative op).
+
+        Counters are booked only when this call advanced the view
+        frontier, so a redelivered (skipped) epoch books nothing. The
+        frontier is loaded from disk BEFORE capturing ``before``: on a
+        standby's first batch the view object is fresh while the manifest
+        already carries ``epoch_id``, and reading the raw field would book
+        a merge that never ran. Not an Observation riding the merge's
+        actions: ``Observation.get`` captures the first completed action,
+        which is a limit-style probe (counts of 1 per epoch, r10)."""
         import os
 
-        from go_pq_cdc_elasticsearch_spark.metrics import (
-            _action_counter_cols,
-        )
-
-        targets = set(self.cfg.table_index_mapping.values())
-        index_label = (
-            next(iter(targets))
-            if len(targets) == 1
-            else os.path.basename(self.cfg.view_path.rstrip("/"))
-        )
-        registry = self.metrics
-        view = self.view
-
-        def write(batch_df: DataFrame, epoch_id: int) -> None:
-            # book only when THIS call advanced the frontier: after a crash
-            # between merge commit and checkpoint commit, the redelivered
-            # epoch arrives with the frontier ALREADY at epoch_id (adopted
-            # from the manifest) and merge_batch skips — a bare equality
-            # check would double-book the whole batch. Load the on-disk
-            # frontier BEFORE capturing `before`: on a standby's first
-            # batch the view object is fresh (in-object frontier None)
-            # while the manifest already carries epoch_id — reading the
-            # raw field saw before=None, merge_batch skipped inside
-            # inner(), and counters were booked for a merge that never ran
-            view._load()
-            before = view._last_epoch
-            inner(batch_df, epoch_id)
-            if view._last_epoch == epoch_id and before != epoch_id:
-                row = batch_df.agg(
-                    *_action_counter_cols(
-                        self.cfg.op_col, self.cfg.delete_op, None, ()
-                    )
-                ).first()
-                registry.observe_result(row.asDict(), index=index_label)
-
-        return write
-
-    def _truncating_writer(self, inner):
-        """foreachBatch wrapper applying TRUNCATE tombstones
-        (on_truncate='tombstone_table'): view rows at or below the
-        batch's latest truncate position are dropped, in-batch rows
-        before it are discarded (they were truncated at the source before
-        this batch committed), rows after it merge normally. Idempotent
-        under redelivery: the wipe only touches sub-truncate state, which
-        a replayed epoch re-wipes to the same result, and the inner
-        merge's epoch frontier guard stays authoritative for the row
-        ops. Multiple truncates in one batch collapse to the latest —
-        the earlier ones' effects are a subset. Cost note: the tombstone
-        probe is one extra small aggregate job per epoch even when no
-        truncate is present — the accepted price of the opt-in policy (it
-        cannot ride the merge's own actions: the wipe must happen BEFORE
-        them). It reads the persisted batch (``_read_once``), so the
-        merge after it does not scan the source again."""
         from pyspark.sql import functions as F
 
-        seq_col, op_col = self.cfg.seq_col, self.cfg.op_col
-        view = self.view
+        from go_pq_cdc_elasticsearch_spark.metrics import _action_counter_cols
 
-        def write(batch_df: DataFrame, epoch_id: int) -> None:
-            is_t = F.col(op_col) == F.lit(TRUNCATE_MARKER)
-            t_max = (
-                batch_df.filter(is_t).agg(F.max(F.col(seq_col))).first()[0]
+        cfg, view = self.cfg, self.view
+        tombstones = (
+            cfg.replication is not None
+            and cfg.replication.on_truncate == "tombstone_table"
+        )
+        counters = (
+            _action_counter_cols(cfg.op_col, cfg.delete_op, None, ())
+            if self.metrics is not None
+            else []
+        )
+        is_t = F.col(cfg.op_col) == F.lit(TRUNCATE_MARKER)
+        row: dict = {}
+        if counters or tombstones:
+            cols = [F.count(F.lit(1)).alias("__rows"), *counters]
+            if tombstones:
+                cols.append(F.max(F.when(is_t, F.col(cfg.seq_col))).alias("__t"))
+            row = batch_df.coalesce(1).agg(*cols).first().asDict()
+        t_max = row.pop("__t", None)
+        n_rows = row.pop("__rows", None)
+        if t_max is not None:
+            view.truncate_upto(int(t_max))
+            # null-safe not-truncate: a NULL op row is a (malformed) row op
+            # for the merge to judge, not a tombstone
+            batch_df = batch_df.filter(
+                (F.col(cfg.op_col).isNull() | ~is_t)
+                & (F.col(cfg.seq_col) > F.lit(int(t_max)))
             )
-            if t_max is not None:
-                view.truncate_upto(int(t_max))
-                # null-safe not-truncate: a NULL op row is a (malformed)
-                # row op for the merge to judge, not a tombstone
-                batch_df = batch_df.filter(
-                    (F.col(op_col).isNull() | (F.col(op_col) != F.lit(TRUNCATE_MARKER)))
-                    & (F.col(seq_col) > F.lit(int(t_max)))
-                )
-            inner(batch_df, epoch_id)
-
-        return write
+            n_rows = None
+            if counters:
+                row = batch_df.agg(*counters).first().asDict()
+        view._load()
+        before = view._last_epoch
+        view._batch_rows = n_rows
+        view.merge_batch(
+            batch_df,
+            epoch_id=epoch_id,
+            lineage=batch_df.sparkSession.sparkContext.getLocalProperty(
+                "sql.streaming.queryId"
+            ),
+        )
+        if counters and view._last_epoch == epoch_id and before != epoch_id:
+            targets = set(cfg.table_index_mapping.values())
+            index = (
+                next(iter(targets))
+                if len(targets) == 1
+                else os.path.basename(cfg.view_path.rstrip("/"))
+            )
+            self.metrics.observe_result(row, index=index)
 
     def wait_until_ready(self, timeout_sec: float = 60.0) -> bool:
         """Reference WaitUntilReady: returns once the pipeline is live

@@ -98,6 +98,11 @@ class MaterializedView:
         self._last_epoch: int | None = None
         self._lineage: str | None = None
         self._fence_token: int | None = None
+        # rows of the batch the next merge_batch call receives, when its
+        # caller already counted them (the Connector's pre-merge
+        # aggregate): the merge then skips its own emptiness probe job.
+        # merge_batch consumes it on entry.
+        self._batch_rows: int | None = None
         self._load()
 
     def _load(self) -> dict | None:
@@ -282,6 +287,15 @@ class MaterializedView:
         override for other merge semantics (e.g. additive aggregates)."""
         return cdc_dedup(batch, keys=self.keys, seq_col=self.seq_col)
 
+    def _one(self, df: DataFrame) -> DataFrame:
+        """``df`` in one partition when the view has one bucket. Its write
+        is one task (``ManifestStore.write`` coalesces a 1-bucket write),
+        and that task also runs whatever narrow work precedes it, so the
+        hash exchanges ``_compact_batch`` and ``_resolve`` would plan add
+        no parallelism: each costs a stage job and shuffle I/O. One
+        partition satisfies their clustering, so Spark plans none."""
+        return df.coalesce(1) if self.n_buckets == 1 else df
+
     def _resolve(self, merged: DataFrame) -> DataFrame:
         """Combine (touched state ∪ compacted batch) rows — both carrying
         the bucket column — to the new per-key state."""
@@ -323,6 +337,7 @@ class MaterializedView:
         hashes into a bucket outside the probed set on that second
         evaluation is silently discarded by the commit. Pin a
         non-deterministic frame with localCheckpoint() before merging."""
+        counted, self._batch_rows = self._batch_rows, None
         if BUCKET_COL in batch.columns:
             # same reserved-name discipline as asof_join/cdc_dedup: the
             # withColumn below would silently overwrite the caller's
@@ -346,8 +361,12 @@ class MaterializedView:
             "last_epoch": last_epoch if epoch_id is None else epoch_id,
             "lineage": lineage,
         }
+
+        def empty() -> bool:
+            return batch.isEmpty() if counted is None else counted == 0
+
         if snap is None or snap["n_buckets"] is None:
-            compact = self._compact_batch(batch)
+            compact = self._compact_batch(self._one(batch))
             persisted = False
             try:
                 if self.n_buckets is None:  # auto-size the layout to the data
@@ -374,7 +393,7 @@ class MaterializedView:
                             -(-n_rows // self.target_rows_per_bucket),
                         ),
                     )
-                elif batch.isEmpty():
+                elif empty():
                     # fixed layout, same rule: don't initialize a view on
                     # an empty feed (read() keeps raising 'not
                     # initialized', the documented empty-feed contract)
@@ -395,21 +414,17 @@ class MaterializedView:
         # therefore the bucket set — is identical pre/post dedup). A
         # 1-bucket view skips the probe: its answer is a foregone
         # conclusion, and at toy scale the probe job costs more than the
-        # merge it would prune.
+        # merge it would prune. It still needs to know whether the batch
+        # is empty, so an idle processing-time tick does not rewrite the
+        # view: one limit-1 job, or none when the caller counted the rows.
         persisted = False
+        compact = self._compact_batch(self._one(batch)).withColumn(
+            BUCKET_COL, self._bucket_expr()
+        )
         if self.n_buckets == 1:
-            # still probe emptiness (one cheap limit-1 job), so an idle
-            # processing-time tick does not rewrite the view
-            touched = [] if batch.isEmpty() else [0]
-            compact = self._compact_batch(batch).withColumn(
-                BUCKET_COL, self._bucket_expr()
-            )
+            touched = [] if empty() else [0]
         else:
-            compact = (
-                self._compact_batch(batch)
-                .withColumn(BUCKET_COL, self._bucket_expr())
-                .persist()
-            )
+            compact = compact.persist()
             persisted = True
         try:
             if persisted:
@@ -435,7 +450,9 @@ class MaterializedView:
                 if existing
                 else compact
             )
-            self._commit(snap, self._resolve(merged), touched, **frontier)
+            self._commit(
+                snap, self._resolve(self._one(merged)), touched, **frontier
+            )
         finally:
             # a failing probe or write (executor loss, malformed row) must
             # not leak the cache: foreachBatch redelivery persists a FRESH

@@ -18,7 +18,8 @@ Spark 4 Python streaming DataSource over an append-only directory of NDJSON
   JVM with the plan, so a live micro-batch's scan starts no Python
   task. ``readBetweenOffsets`` serves a batch replayed after a restart
   (the runner's prefetch cache is empty then). A catch-up backlog is
-  read by that one process, not split into per-segment tasks;
+  read by that one process, not split into per-segment tasks. A poll
+  that finds no new segment opens no file;
 - ``commit(offset)`` is the ack: it records to ``<path>/_committed``; the
   live consumer loop tails that file and sends the ``StandbyStatusUpdate``
   that advances the slot's restart LSN
@@ -278,6 +279,11 @@ class WalStreamReader(SimpleDataSourceStreamReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("pgwal source requires option 'path'")
+        # (name, size, inode) of the newest segment -> a bound on its max
+        # lsn. No successor bounds the newest segment, so without this
+        # every poll of an idle stream would open and parse it again.
+        # Segments are immutable once renamed into place.
+        self._tail: tuple[tuple, int] | None = None
 
     # -- offset management (== slot restart LSN) ----------------------------
 
@@ -296,12 +302,30 @@ class WalStreamReader(SimpleDataSourceStreamReader):
             if hi is not None and seg_start > hi:
                 break
             try:
-                rows += _read_segment(fpath, lo, hi)
+                if i + 1 < len(segs):
+                    rows += _read_segment(fpath, lo, hi)
+                else:
+                    rows += self._read_tail(fpath, lo, hi)
             except FileNotFoundError:
                 # the ack sweep prunes only segments wholly at or below the
                 # committed frontier, which never passes ``lo``: a segment
                 # that vanished after the listing held no row we need
                 continue
+        return rows
+
+    def _read_tail(self, fpath: str, lo: int, hi: int | None) -> list[tuple]:
+        """``_read_segment`` for the newest segment, which is skipped
+        unopened while it is the one last read and its max lsn is at or
+        below ``lo``."""
+        st = os.stat(fpath)
+        key = (fpath, st.st_size, st.st_ino)
+        if self._tail is not None and self._tail[0] == key and self._tail[1] <= lo:
+            return []
+        rows = _read_segment(fpath, lo, hi)
+        if hi is None:
+            # lsn rises through a segment: its max is the last row read,
+            # or at most ``lo`` when none was above it
+            self._tail = (key, rows[-1][0] if rows else lo)
         return rows
 
     def read(self, start: dict):

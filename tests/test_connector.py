@@ -451,14 +451,17 @@ def test_metered_writer_books_once_under_frontier_redelivery(spark):
     """Review r10: a redelivered epoch that the view's frontier guard
     SKIPS (crash between merge commit and checkpoint commit — on restart
     _last_epoch already equals the redelivered epoch id) must book
-    nothing; only the call that actually advanced the frontier books."""
+    nothing; only the call that actually advanced the frontier books.
+    Driven through the Connector's foreachBatch function, whose one
+    pre-merge aggregate computes the counters before the merge runs."""
+    from go_pq_cdc_elasticsearch_spark.connector import _read_once
     from go_pq_cdc_elasticsearch_spark.metrics import PrometheusRegistry
 
     work = tempfile.mkdtemp(prefix="conn_meter_")
     cfg = _cfg(work, keys=("user_id",))
     c = Connector(spark, cfg)
     c.metrics = PrometheusRegistry(slot_name="s")
-    writer = c._metered_writer(c.view.foreach_batch_writer())
+    writer = _read_once(c._write_batch)
     batch = spark.createDataFrame(
         [(1, "insert", 7), (2, "delete", 7), (3, "update", 8)],
         "event_id long, event_type string, user_id long",
@@ -482,6 +485,7 @@ def test_metered_writer_adopts_frontier_before_booking(spark):
     that captured `before` from the raw field saw None, the merge
     skipped (frontier already at epoch_id), and counters were booked for
     a merge that never ran. The writer must adopt before capturing."""
+    from go_pq_cdc_elasticsearch_spark.connector import _read_once
     from go_pq_cdc_elasticsearch_spark.metrics import PrometheusRegistry
 
     work = tempfile.mkdtemp(prefix="conn_meter_sb_")
@@ -501,7 +505,7 @@ def test_metered_writer_adopts_frontier_before_booking(spark):
     active.view.merge_batch(batch, epoch_id=0)
     # the standby's first delivered batch is the REDELIVERY of that epoch
     standby.metrics = PrometheusRegistry(slot_name="s")
-    writer = standby._metered_writer(standby.view.foreach_batch_writer())
+    writer = _read_once(standby._write_batch)
     writer(batch, 0)
     assert standby.metrics.index_total == {}  # skipped merge books nothing
     assert standby.metrics.delete_total == {}
@@ -509,6 +513,38 @@ def test_metered_writer_adopts_frontier_before_booking(spark):
     writer(batch.withColumn("event_id", F.col("event_id") + 10), 1)
     assert standby.metrics.index_total == {"view": 1.0}
     assert standby.metrics.delete_total == {"view": 1.0}
+
+
+def test_live_batch_costs_three_spark_jobs(spark):
+    """A metered micro-batch into a 1-bucket view, driven through the
+    Connector's foreachBatch function on a persisted batch: one coalesced
+    pre-merge aggregate (2 jobs) hands the row count to the merge, which
+    then runs no emptiness probe and merges in 1 job. Counted over every
+    job group with the status store."""
+    from go_pq_cdc_elasticsearch_spark.connector import _read_once
+    from go_pq_cdc_elasticsearch_spark.metrics import PrometheusRegistry
+
+    work = tempfile.mkdtemp(prefix="conn_jobs_")
+    c = Connector(spark, _cfg(work, keys=("user_id",)))
+    c.metrics = PrometheusRegistry(slot_name="s")
+    writer = _read_once(c._write_batch)
+    schema = "event_id long, event_type string, user_id long, value double"
+    writer(spark.createDataFrame(
+        [(i, "insert", i, float(i)) for i in range(40)], schema), 0)
+    assert c.view.n_buckets == 1
+    store = spark.sparkContext._jsc.sc().statusStore()
+    for epoch in (1, 2):
+        batch = spark.createDataFrame(
+            [(100 * epoch + i, "update", i, 1.0) for i in range(0, 40, 3)]
+            + [(100 * epoch + 50, "delete", 39, None)],
+            schema,
+        )
+        before = store.jobsList(None).size()
+        writer(batch, epoch)
+        assert store.jobsList(None).size() - before <= 3, epoch
+    assert c.view._last_epoch == 2
+    assert c.metrics.delete_total == {"view": 2.0}
+    assert c.view.read().count() == 39
 
 
 def test_staged_truncate_marker_and_start_warning(spark, caplog):
@@ -845,8 +881,8 @@ def test_connector_reads_each_segment_once(
 ):
     """Each staged segment's rows are emitted once: with batch_size=1
     every change is its own segment, so a batch spans several of them, and
-    the truncate probe, the merge's emptiness probe and merge, and the
-    metered counters must not make the source emit a segment again.
+    the pre-merge aggregate and the merge must not make the source emit
+    a segment again.
     Counted in the process that runs the pgwal reader: the segment reader
     is wrapped to log each segment whose rows it emits."""
     import time

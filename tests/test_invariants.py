@@ -232,6 +232,50 @@ def test_load_table_schema_cache_invalidates_on_regeneration(
     assert again.select("zz_new").first()[0] == "y"
 
 
+def test_load_table_events_concurrent_us_never_touches_conf(
+    spark, tmp_path, sf_dir
+):
+    """The fold runs ``load_table("events")`` on 16 threads at once. On
+    us-precision data no call may set the session's nanosAsLong conf,
+    not even for a moment: an observer polling the conf while the loads
+    run never sees it, it is unset afterwards, and every call returns the
+    same schema. Whether ``ts`` is ns is decided once per file, from its
+    parquet footer."""
+    import shutil
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    d = tmp_path / "sf"
+    d.mkdir()
+    shutil.copy(f"{sf_dir}/events.parquet", str(d))
+    spark.conf.unset(conf)
+    seen = []
+    done = threading.Event()
+
+    def observe():
+        while not done.is_set():
+            seen.append(spark.conf.get(conf, None))
+
+    watcher = threading.Thread(target=observe)
+    watcher.start()
+    try:
+        with ThreadPoolExecutor(16) as ex:
+            schemas = list(
+                ex.map(lambda _: load_table(spark, str(d), "events").schema, range(48))
+            )
+    finally:
+        done.set()
+        watcher.join(timeout=60)
+    assert not watcher.is_alive()
+    assert spark.conf.get(conf, None) is None
+    assert seen and set(seen) == {None}
+    assert all(s == schemas[0] for s in schemas)
+    assert dict((f.name, f.dataType.typeName()) for f in schemas[0].fields)["ts"] == (
+        "timestamp_ntz"
+    )
+
+
 def test_load_table_schema_cache_sees_same_size_rewrite(spark, tmp_path):
     """A same-size in-place rewrite within one second of the original —
     on a coarse-mtime filesystem its mtime does not move, modelled here by

@@ -389,7 +389,7 @@ def test_observe_stream_counters_per_microbatch(spark):
     regular sink: each progress event's observedMetrics carries THAT
     micro-batch's counters, and they sum to the staged op counts. (Under
     foreachBatch the engine books counters in-batch instead — see
-    Connector._metered_writer — because user-callback actions leave
+    Connector._write_batch — because user-callback actions leave
     observedMetrics stale; this test pins the path where the named
     observe IS reliable.)"""
     import os

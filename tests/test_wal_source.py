@@ -126,6 +126,48 @@ def test_wal_reader_serves_rows_up_to_newest_staged_lsn():
                    "2024-01-01T00:00:00")
 
 
+def test_wal_reader_idle_polls_open_no_file(monkeypatch):
+    """Spark polls ``read`` on every trigger. With no new segment, the
+    newest segment (the one no successor bounds) is skipped unopened: the
+    reader remembers its max lsn, keyed by name, size and inode. A new
+    segment, or the newest one rewritten under its name, is read again."""
+    import builtins
+
+    work = tempfile.mkdtemp(prefix="wal_idle_")
+    wal_dir = os.path.join(work, "wal")
+    W.write_wal_segment(wal_dir, [_msg(i, "INSERT", i, i) for i in range(1, 6)])
+    W.write_wal_segment(wal_dir, [_msg(i, "INSERT", i, i) for i in range(6, 11)])
+    r = W.WalStreamReader({"path": wal_dir})
+    it, end = r.read({"lsn": -1})
+    assert end == {"lsn": 10} and len(list(it)) == 10
+
+    opened = []
+
+    def counting_open(path, *args, **kwargs):
+        opened.append(os.path.basename(path))
+        return builtins.open(path, *args, **kwargs)
+
+    monkeypatch.setattr(W, "open", counting_open, raising=False)
+    for _ in range(5):
+        it, again = r.read(end)
+        assert again == end and list(it) == []
+    assert opened == []
+
+    W.write_wal_segment(wal_dir, [_msg(11, "INSERT", 11, 11), _msg(12, "INSERT", 12, 12)])
+    opened.clear()
+    it, end = r.read(end)
+    assert end == {"lsn": 12} and [x[0] for x in it] == [11, 12]
+    assert opened == ["wal_0000000000000011.ndjson"]
+    opened.clear()
+    it, _ = r.read(end)
+    assert list(it) == [] and opened == []
+
+    # the newest segment rewritten under its name (a new inode) is re-read
+    W.write_wal_segment(wal_dir, [_msg(i, "INSERT", i, i) for i in range(11, 14)])
+    it, end = r.read(end)
+    assert end == {"lsn": 13} and [x[0] for x in it] == [13]
+
+
 def test_wal_restart_replays_failed_batch_between_offsets(spark, tmp_path, monkeypatch):
     """A live batch is served from the source runner's prefetch; only the
     batch replayed after a restart (the prefetch cache is empty then) goes
