@@ -31,7 +31,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 from go_pq_cdc_elasticsearch_spark.session import get_spark
 from go_pq_cdc_elasticsearch_spark.sources import pgoutput as PG
-from go_pq_cdc_elasticsearch_spark.sources.wal import register
+from go_pq_cdc_elasticsearch_spark.sources.wal import list_segments, register
 
 # ---- a scripted "Postgres" -------------------------------------------------
 
@@ -119,6 +119,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:  # noqa: ARG001
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="ex_live_")
     seg_dir = os.path.join(work, "segments")
+    ckpt = os.path.join(work, "ckpt")
 
     # 1. "Postgres": two transactions on public.users
     cols = ["user_id", "name"]
@@ -156,7 +157,10 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:  # noqa: ARG001
                                   proto_version=2)
     client.create_slot()
     client.start()
-    n = PG.stream_to_segments(client, seg_dir, batch_size=2)
+    # the production consumer loop; it returns when the server ends the
+    # stream (a Connector runs it in a supervised thread instead)
+    PG.run_live_consumer(client, seg_dir, ckpt, batch_size=2)
+    n = sum(1 for _, p in list_segments(seg_dir) for _ in open(p))
     print(f"consumed {n} changes from the replication socket")
 
     # 3. "Elasticsearch" with version auto-detect (ES6 => _type emitted)
@@ -200,7 +204,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:  # noqa: ARG001
     def drain():
         q = (
             stream.writeStream.foreachBatch(ship)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
@@ -208,10 +212,12 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:  # noqa: ARG001
 
     drain()
 
-    # 5. more WAL arrives; the next drain picks up ONLY lsn > frontier and
-    # triggers the commit of the previous batch (flush-then-ack lag, same
-    # as the reference bulk/bulk.go:271-276) — which the consumer loop
-    # forwards to the slot as a StandbyStatusUpdate
+    # 5. more WAL arrives; the next drain picks up ONLY lsn > frontier.
+    # The ack is the checkpoint's commit log: once a batch's sink
+    # completes, its end offset is the consumed frontier (flush-then-ack,
+    # like the reference bulk/bulk.go:271-276), which the consumer loop
+    # forwards to the slot as a StandbyStatusUpdate. The staged dir holds
+    # only the segments.
     from go_pq_cdc_elasticsearch_spark.sources.wal import write_wal_segment
 
     write_wal_segment(seg_dir, [{
@@ -220,11 +226,12 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:  # noqa: ARG001
         "after": {"user_id": "3", "name": "grace"}, "ts": None,
     }])
     drain()
-    last = PG.forward_committed_acks(client, seg_dir)
+    seen = len(pg_acks)
+    last = PG.forward_checkpoint_acks(client, ckpt)
     import time
 
     for _ in range(50):  # let the server thread register the ack frame
-        if pg_acks:
+        if len(pg_acks) > seen:
             break
         time.sleep(0.1)
     print(f"acked restart LSN: {last} (server saw {len(pg_acks)} status updates, "

@@ -48,7 +48,9 @@ class ReplicationSettings:
     Staging cadence: the consumer writes a segment for the stream once
     ``batch_size`` changes have arrived or every 0.1 s
     (``STAGE_INTERVAL_SEC``), whichever comes first, and forwards the
-    committed frontier as a slot ack every ``ack_interval_sec``. The
+    frontier in the Spark checkpoint's commit log as a slot ack every
+    ``ack_interval_sec``. The staged dir holds nothing but those
+    segments; the checkpoint is the only consumed-offset record. The
     reference's bulk flushes on batchTickerDuration and acks after the
     flush; here the ack always follows the merge that committed the
     frontier, so a faster flush cadence changes no delivery guarantee."""
@@ -112,8 +114,8 @@ class ReplicationSettings:
     # keep 'ignore'. Replay parity: segments staged under
     # 'tombstone_table' contain TRUNCATE tombstone rows — replaying them
     # through a connector that reverted to 'ignore' drops the tombstones
-    # (the view keeps rows the source truncated); start() detects the
-    # staged-truncate marker and logs a warning with the count, but the
+    # (the view keeps rows the source truncated); start() counts the
+    # tombstones in the live segments and logs a warning, but the
     # policy must STAY 'tombstone_table' for the staged dir's lifetime
     # to preserve parity (review r11).
     on_truncate: str = "ignore"
@@ -271,6 +273,8 @@ class Connector:
             delete_op=cfg.delete_op,
         )
         self._query = None
+        # (writer, newest staged lsn) of a pgwal availableNow drain
+        self._drain = None
         self._repl_client = None
         self._repl_thread = None
         self._repl_stop = None
@@ -674,10 +678,10 @@ class Connector:
                 # the policy reverted to 'ignore', have their TRUNCATE
                 # tombstones silently dropped by the default transform —
                 # the replayed view keeps rows the live view truncated.
-                # The staging producer counts tombstones into a sidecar
-                # marker; warn loudly here instead of diverging in
-                # silence (review r11). Parity requires the policy to
-                # STAY 'tombstone_table' for the life of the staged dir.
+                # Count them in the live segments and warn loudly here
+                # instead of diverging in silence (review r11). Parity
+                # requires the policy to STAY 'tombstone_table' for the
+                # life of the staged dir.
                 staged = staged_truncate_count(self.cfg.staged_dir)
                 if staged:
                     import logging
@@ -713,6 +717,12 @@ class Connector:
             .option("checkpointLocation", self.cfg.checkpoint_dir)
         )
         if available_now:
+            if self.cfg.replication is not None:
+                from go_pq_cdc_elasticsearch_spark.sources.wal import (
+                    max_segment_lsn,
+                )
+
+                self._drain = (writer, max_segment_lsn(self.cfg.staged_dir))
             self._query = writer.trigger(availableNow=True).start()
         else:
             self._query = writer.trigger(
@@ -920,9 +930,29 @@ class Connector:
         return True
 
     def await_drained(self) -> None:
-        """Block until an availableNow run finishes (snapshot_only drain)."""
-        if self._query is not None:
+        """Block until an availableNow run finishes (snapshot_only drain).
+
+        pgwal: a restart whose newest offset-log batch never committed
+        replays only that batch and stops, so the query is re-run until
+        the checkpoint's commit log reaches the newest lsn staged when
+        the drain started (or a run commits nothing new)."""
+        if self._query is None:
+            return
+        self._query.awaitTermination()
+        if self._drain is None:
+            return
+        from go_pq_cdc_elasticsearch_spark.sources.pgoutput import (
+            committed_checkpoint_lsn,
+        )
+
+        writer, target = self._drain
+        done = committed_checkpoint_lsn(self.cfg.checkpoint_dir)
+        while done < target:
+            self._query = writer.trigger(availableNow=True).start()
             self._query.awaitTermination()
+            prev, done = done, committed_checkpoint_lsn(self.cfg.checkpoint_dir)
+            if done <= prev:
+                break
 
     def close(self) -> None:
         """Reference Close (connector.go:120-127): stop the source, flush the
@@ -938,7 +968,7 @@ class Connector:
             # final ack sweep while the socket is still alive (the consumer
             # thread may be blocked reading; _send is lock-protected) — the
             # checkpoint's commits/ dir is the durable frontier, covering
-            # the last batch (commit() callbacks lag one batch)
+            # the last batch
             # (OSError, ValueError): the sweep on an ALREADY-closed file
             # object raises ValueError — close() must be re-enterable like
             # the reference's Close, and a failed sweep must never skip

@@ -1557,7 +1557,7 @@ class ReplicationClient:
             )
 
     def ack_frontier(self, stamp: int) -> int:
-        """Ack a SEGMENT-FRONTIER stamp (what Spark's commit()/checkpoint
+        """Ack a SEGMENT-FRONTIER stamp (what the Spark checkpoint
         records) by translating it to a real WAL position: the commit-record
         end_lsn of the newest transaction whose every change carries a stamp
         <= ``stamp``. Stamps can be clamped delivery ordinals (see
@@ -1648,60 +1648,13 @@ class ReplicationClient:
         self.decoder.discard_streams()
 
 
-def stream_to_segments(
-    client: ReplicationClient,
-    segments_dir: str,
-    batch_size: int = 500,
-    max_changes: int | None = None,
-    flush_interval_sec: float = 5.0,
-) -> int:
-    """Pump the live stream into wal-segment files — the BOUNDED bridge
-    between the socket consumer and the ``pgwal`` Spark DataSource
-    (sources/wal.py) for demos/tests/backfills: the file contract stays
-    the single source of truth for offsets/partitions, the socket is just
-    the producer. Returns #changes written. Flushes on ``batch_size`` OR
-    ``flush_interval_sec`` (via poll's select-paced heartbeat — without
-    the time flush, a low-traffic table left up to batch_size-1 changes
-    stranded in the buffer indefinitely). This helper does NOT forward
-    acks: the production loop is ``run_live_consumer``, which adds ack
-    forwarding, segment pruning and stop-event housekeeping on the same
-    cadence machinery."""
-    import time
-
-    from go_pq_cdc_elasticsearch_spark.sources.wal import write_wal_segment
-
-    buf: list[dict] = []
-    n = 0
-    last_flush = time.time()
-    for change in client.poll(
-        heartbeat=True, idle_timeout=max(0.05, flush_interval_sec / 2)
-    ):
-        if change is not None:
-            buf.append(change)
-            n += 1
-        now = time.time()
-        if buf and (
-            len(buf) >= batch_size or now - last_flush >= flush_interval_sec
-        ):
-            write_wal_segment(segments_dir, buf)
-            buf = []
-            last_flush = now
-        if max_changes is not None and n >= max_changes:
-            break
-    if buf:
-        write_wal_segment(segments_dir, buf)
-    return n
-
-
 def committed_checkpoint_lsn(checkpoint_dir: str) -> int:
     """The durably-committed stream frontier, read from the Structured
     Streaming checkpoint: the newest batch N present in ``commits/`` has
     its end offset in ``offsets/N`` (the pgwal offset json ``{"lsn": L}``).
-    This is the CORRECT ack source for a live slot — ``commit()``
-    callbacks lag one batch and never fire for the final batch of a
-    stream, but commits/N is written the moment batch N's sink completes
-    (== the reference's flush-then-ack point). Returns -1 if nothing is
-    committed yet."""
+    This is the one ack record of a live slot: commits/N is written the
+    moment batch N's sink completes (== the reference's flush-then-ack
+    point). Returns -1 if nothing is committed yet."""
     import json
     import os
 
@@ -1759,13 +1712,10 @@ def forward_checkpoint_acks(
     return last_acked
 
 
-COMMITTED_ROTATE_BYTES = 8 * 1024 * 1024
-
-
 def run_live_consumer(
     client: ReplicationClient,
     segments_dir: str,
-    checkpoint_dir: str | None = None,
+    checkpoint_dir: str,
     stop_event=None,
     batch_size: int = 200,
     ack_interval_sec: float = 1.0,
@@ -1774,9 +1724,8 @@ def run_live_consumer(
 ) -> int:
     """The long-running consumer loop a live Connector runs in a thread:
     pump changes into segment files AND periodically forward the Spark
-    stream's committed frontier as StandbyStatusUpdates (from the stream
-    checkpoint when ``checkpoint_dir`` is given — the durable source —
-    else from the _committed record file). Returns the last acked LSN.
+    stream's committed frontier, read from its checkpoint, as
+    StandbyStatusUpdates. Returns the last acked LSN.
     Exits when the server ends the stream, the socket breaks, or
     ``stop_event`` is set.
 
@@ -1787,7 +1736,6 @@ def run_live_consumer(
     yield at that cadence even when the socket is silent — keepalives
     alone arrive only every ~wal_sender_timeout/2 (~30 s), which would
     stretch the documented flush/ack/stop latencies 6-30x."""
-    import os as _os
     import time
 
     from go_pq_cdc_elasticsearch_spark.sources.wal import (
@@ -1804,41 +1752,15 @@ def run_live_consumer(
     # while the checkpoint survives — seeding from segments alone would
     # restart the clamp at 0 and stamp redelivered rows below the
     # checkpoint frontier (silently dropped by the (start, end] filter).
-    client.last_stamp = max(client.last_stamp, max_segment_lsn(segments_dir))
-    if checkpoint_dir is not None:
-        client.last_stamp = max(
-            client.last_stamp, committed_checkpoint_lsn(checkpoint_dir)
-        )
-
-    committed_path = _os.path.join(segments_dir, "_committed")
-    committed_offset = 0
+    client.last_stamp = max(
+        client.last_stamp,
+        max_segment_lsn(segments_dir),
+        committed_checkpoint_lsn(checkpoint_dir),
+    )
 
     def ack_sweep(last: int) -> int:
-        nonlocal committed_offset
         prev = last
-        if checkpoint_dir is not None:
-            last = forward_checkpoint_acks(client, checkpoint_dir, last)
-            # the source's commit() still appends to _committed, but this
-            # path acks from the checkpoint: all of the file is consumed
-            try:
-                committed_offset = _os.path.getsize(committed_path)
-            except OSError:
-                committed_offset = 0
-        else:
-            last, committed_offset = forward_committed_acks_tail(
-                client, segments_dir, last, committed_offset
-            )
-        # the _committed record file grows one line per batch forever;
-        # once the consumed prefix passes 8 MB, rotate it (commit() opens
-        # per append, so a rename between sweeps is clean; any line
-        # appended in the race window is superseded by the next batch's
-        # strictly-larger cumulative frontier)
-        if committed_offset >= COMMITTED_ROTATE_BYTES:
-            try:
-                _os.replace(committed_path, committed_path + ".old")
-                committed_offset = 0
-            except OSError:
-                pass
+        last = forward_checkpoint_acks(client, checkpoint_dir, last)
         if last > prev:
             # frontier advanced => segments wholly below it are consumed
             # for good (Spark never re-reads below a committed offset) —
@@ -1938,70 +1860,3 @@ def run_live_consumer(
     except (OSError, ValueError):
         pass
     return last_acked
-
-
-def forward_committed_acks_tail(
-    client: ReplicationClient,
-    segments_dir: str,
-    last_acked: int = -1,
-    offset: int = 0,
-) -> tuple[int, int]:
-    """Tail ``<segments_dir>/_committed`` (appended by the Spark source's
-    commit()) FROM ``offset`` and forward the newest frontier as a
-    StandbyStatusUpdate. Returns (last_acked, new_offset). The offset
-    keeps each sweep O(appended bytes): commit() appends one record per
-    batch forever, so re-parsing the whole file made a long-running
-    processing-time stream's 1 s sweeps O(total batches ever committed).
-    A possibly-partial final line (commit mid-append) is left for the
-    next sweep by rewinding to the last newline. Called from the consumer
-    loop — the process that owns the socket; Spark's commit() runs in the
-    python-streaming-source runner, which is why the handoff is a file."""
-    import json
-    import os
-
-    def _drain_idle():
-        # no new commit lines, but empty/filtered txns may have arrived
-        # under the unchanged frontier — drain their bounds, and let the
-        # idle keepalive extension advance past publication-filtered
-        # traffic (see forward_checkpoint_acks; stamp 0 covers the
-        # fresh-slot-nothing-committed case — review r7; sends nothing
-        # when nothing is covered and the consumer isn't caught up)
-        client.ack_frontier(max(last_acked, 0))
-
-    p = os.path.join(segments_dir, "_committed")
-    if not os.path.exists(p):
-        _drain_idle()
-        return last_acked, offset
-    newest = last_acked
-    with open(p, "rb") as f:
-        f.seek(offset)
-        chunk = f.read()
-    if not chunk:
-        _drain_idle()
-        return last_acked, offset
-    complete, sep, _tail = chunk.rpartition(b"\n")
-    if not sep:
-        _drain_idle()
-        return last_acked, offset  # no full line appended yet
-    offset += len(complete) + 1
-    for line in complete.splitlines():
-        try:
-            newest = max(newest, json.loads(line).get("lsn", -1))
-        except ValueError:
-            continue
-    if newest >= 0:
-        # the frontier is a segment stamp; translate to a commit end_lsn.
-        # Called even on an UNCHANGED frontier — see forward_checkpoint_acks:
-        # empty/filtered txn bounds keep arriving under a static frontier
-        # and must drain, or WAL retention pins on the primary (review r6)
-        client.ack_frontier(newest)
-    return newest, offset
-
-
-def forward_committed_acks(
-    client: ReplicationClient, segments_dir: str, last_acked: int = -1
-) -> int:
-    """Whole-file variant of ``forward_committed_acks_tail`` (one-shot
-    callers / final sweep)."""
-    newest, _ = forward_committed_acks_tail(client, segments_dir, last_acked, 0)
-    return newest

@@ -20,18 +20,18 @@ Spark 4 Python streaming DataSource over an append-only directory of NDJSON
   (the runner's prefetch cache is empty then). A catch-up backlog is
   read by that one process, not split into per-segment tasks. A poll
   that finds no new segment opens no file;
-- ``commit(offset)`` is the ack: it records to ``<path>/_committed``; the
-  live consumer loop tails that file and sends the ``StandbyStatusUpdate``
-  that advances the slot's restart LSN
-  (sources/pgoutput.py:forward_committed_acks). File-based because Spark
-  executes these callbacks in the python-streaming-source runner process,
-  not the user's.
+- the ack is the Structured Streaming checkpoint: once batch N's sink
+  completes, ``commits/N`` marks the end offset in ``offsets/N`` as
+  consumed. The live consumer loop reads that frontier
+  (sources/pgoutput.py:committed_checkpoint_lsn) and sends the
+  ``StandbyStatusUpdate`` that advances the slot's restart LSN. The
+  reader keeps Spark's no-op ``commit``.
 
-The live producer is sources/pgoutput.py: a pgoutput slot consumer
-(CREATE_REPLICATION_SLOT / START_REPLICATION / keepalive / ack) pumps the
-socket into these segment files (``stream_to_segments``), so the file
-contract stays the single source of truth for offsets while the socket is
-just the producer.
+The live producer is sources/pgoutput.py's ``run_live_consumer``: a
+pgoutput slot consumer (CREATE_REPLICATION_SLOT / START_REPLICATION /
+keepalive / ack) that writes the socket's changes into these segment
+files. The staged dir holds nothing else, so the segments are the single
+source of truth for rows and the checkpoint for consumed offsets.
 """
 
 from __future__ import annotations
@@ -106,23 +106,15 @@ def prune_segments(path: str, committed_lsn: int) -> int:
     Returns the number of files removed."""
     removed = 0
     segs = list_segments(path)
-    pruned_names = []
     for i in range(len(segs) - 1):
         if segs[i + 1][0] - 1 <= committed_lsn:
             try:
                 os.remove(segs[i][1])
                 removed += 1
-                pruned_names.append(os.path.basename(segs[i][1]))
             except OSError:
                 break
         else:
             break
-    if pruned_names:
-        # retire the pruned segments' TRUNCATE-tombstone counts: the
-        # replay-parity warning is about tombstones still REPLAYABLE from
-        # live segments, and a cumulative count warned forever after the
-        # carrying segments were consumed and deleted (review r11)
-        _drop_staged_truncates(path, pruned_names)
     return removed
 
 
@@ -143,113 +135,33 @@ def write_wal_segment(path: str, messages: list[dict]) -> str:
         for m in messages:
             f.write(json.dumps(m) + "\n")
     os.rename(tmp, fpath)
-    n_trunc = sum(1 for m in messages if m.get("op") == "TRUNCATE")
-    if n_trunc:
-        note_staged_truncates(path, n_trunc, os.path.basename(fpath))
     return fpath
 
 
-TRUNCATE_STAGE_MARKER = "_truncates_staged"
-
-
-def _read_truncate_marker(path: str) -> dict:
-    """The marker maps segment basename -> its TRUNCATE tombstone count.
-    A legacy plain-int marker (the r11 cumulative form) is folded under
-    a sentinel key so its conservative warning survives until the dir is
-    fully drained."""
-    try:
-        with open(os.path.join(path, TRUNCATE_STAGE_MARKER)) as f:
-            raw = f.read().strip()
-    except OSError:
-        return {}
-    if not raw:
-        return {}
-    try:
-        data = json.loads(raw)
-    except ValueError:
-        return {}
-    if isinstance(data, dict):
-        return data
-    if isinstance(data, int):
-        return {"_legacy": data}
-    return {}
-
-
-def _write_truncate_marker(path: str, data: dict) -> None:
-    marker = os.path.join(path, TRUNCATE_STAGE_MARKER)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(data, f)
-    os.rename(tmp, marker)
-
-
-def _gc_marker_entries(path: str, data: dict) -> dict:
-    """Drop marker entries that can never warn again (ADVICE r11): a
-    per-segment entry whose file is gone (crash between a prune's
-    os.remove and the marker rewrite — correctly excluded from the count
-    already, but the file grew monotonically), and the '_legacy'
-    cumulative sentinel once the dir holds no segment files at all (it
-    has no file to check, so it otherwise warned forever even after the
-    dir fully drained — the permanent-false-alarm class the per-segment
-    form was introduced to fix)."""
-    kept = {
-        k: v
-        for k, v in data.items()
-        if k != "_legacy" and os.path.exists(os.path.join(path, k))
-    }
-    if "_legacy" in data and list_segments(path):
-        kept["_legacy"] = data["_legacy"]
-    return kept
-
-
-def note_staged_truncates(path: str, n: int, segment: str) -> None:
-    """Record ``n`` TRUNCATE tombstone rows staged into ``segment``
-    (``TRUNCATE_STAGE_MARKER`` sidecar, per-segment counts). Written by
-    the single active staging producer, read by Connector.start(): a
-    replay of these segments through a connector whose on_truncate
-    policy reverted to 'ignore' silently drops the tombstones and keeps
-    rows the live view truncated — the marker lets start() warn loudly,
-    with the count (review r11). Counts are PER SEGMENT so the ack
-    sweep's prune retires them with the files — a cumulative total kept
-    warning forever after the carrying segments were consumed, a
-    permanent false alarm. Same tmp+rename protocol as the segments so
-    a racing reader never sees a half-written marker. Every rewrite also
-    garbage-collects dead entries (``_gc_marker_entries``)."""
-    data = _gc_marker_entries(path, _read_truncate_marker(path))
-    data[segment] = data.get(segment, 0) + n
-    _write_truncate_marker(path, data)
-
-
-def _drop_staged_truncates(path: str, segments: list[str]) -> None:
-    data = _read_truncate_marker(path)
-    if not data:
-        return
-    kept = _gc_marker_entries(
-        path, {k: v for k, v in data.items() if k not in set(segments)}
-    )
-    if kept != data:
-        _write_truncate_marker(path, kept)
-
-
 def staged_truncate_count(path: str) -> int:
-    """TRUNCATE tombstone rows still replayable from LIVE segments (0 if
-    none). Entries whose segment file no longer exists are ignored — a
-    crash between a prune's file delete and its marker rewrite must not
-    resurrect the false alarm. The legacy cumulative sentinel (no file
-    to check) counts only while the dir still holds segments: once fully
-    drained nothing it described is replayable (ADVICE r11)."""
-    data = _read_truncate_marker(path)
-    total = 0
-    legacy_live = None  # lazily probed: list_segments lists the dir
-    for seg, n in data.items():
-        if seg == "_legacy":
-            if legacy_live is None:
-                legacy_live = bool(list_segments(path))
-            if legacy_live:
-                total += int(n)
-        elif os.path.exists(os.path.join(path, seg)):
-            total += int(n)
-    return total
+    """TRUNCATE tombstone rows still replayable from the live segments (0
+    if none). Segments staged under on_truncate='tombstone_table' carry
+    them; replaying those through a connector whose policy reverted to
+    'ignore' drops them, so ``Connector.start()`` warns with this count.
+    A pruned segment was consumed and is not counted. Each segment is
+    read whole and skipped unless it contains the quoted op; only the
+    lines that match are parsed, since a payload value can carry the same
+    string."""
+    n = 0
+    for _, fpath in list_segments(path):
+        try:
+            with open(fpath, "rb") as f:
+                data = f.read()
+        except FileNotFoundError:
+            continue  # pruned after the listing: consumed
+        if b'"TRUNCATE"' not in data:
+            continue
+        n += sum(
+            json.loads(line).get("op") == "TRUNCATE"
+            for line in data.splitlines()
+            if b'"TRUNCATE"' in line
+        )
+    return n
 
 
 def _read_segment(fpath: str, lo: int, hi: int | None) -> list[tuple]:
@@ -337,31 +249,6 @@ class WalStreamReader(SimpleDataSourceStreamReader):
 
     def readBetweenOffsets(self, start: dict, end: dict):
         return iter(self._rows(start["lsn"], end["lsn"]))
-
-    def commit(self, end: dict) -> None:
-        """The ack (R12): advance the restart LSN. Spark runs this in the
-        python-streaming-source runner process, so the live bridge is
-        file-based: the record appended here is picked up by the consumer
-        loop (pgoutput.forward_committed_acks) which owns the socket and
-        sends the StandbyStatusUpdate."""
-        try:
-            with open(os.path.join(self.path, "_committed"), "a") as f:
-                f.write(json.dumps(end) + "\n")
-        except OSError:
-            # swallowing keeps the STREAM alive (commit() must not kill a
-            # healthy query over the ack side-channel), but a silent drop
-            # stalls the slot's restart LSN invisibly — upstream retains
-            # WAL forever while everything reports progress (review r7).
-            # Log loudly; the next successful commit's larger cumulative
-            # frontier supersedes this one.
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "pgwal commit record append failed (slot ack frontier "
-                "will not advance until a later commit lands): %s",
-                end,
-                exc_info=True,
-            )
 
 
 class WalDataSource(DataSource):

@@ -462,9 +462,9 @@ def _staged_wal_segments(spark: SparkSession, sf_dir: str) -> str | None:
         FROM ranked WHERE rn = 1 AND (event_type IS NULL OR event_type <> 'error')
     """,
     doc="Custom Python streaming DataSource (pgwal: LSN offsets, rows "
-    "prefetched in the source runner, commit-as-ack) driven end-to-end: "
-    "events re-encoded as WAL segments, streamed, merged — final state == "
-    "batch cdc_apply. 'error' plays DELETE.",
+    "prefetched in the source runner, checkpoint-frontier acks) driven "
+    "end-to-end: events re-encoded as WAL segments, streamed, merged — "
+    "final state == batch cdc_apply. 'error' plays DELETE.",
 )
 def q_t7(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_pq_cdc_elasticsearch_spark.sink.materialized import MaterializedView

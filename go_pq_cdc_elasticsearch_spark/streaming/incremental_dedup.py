@@ -614,7 +614,25 @@ class IncrementalDeduper(LshDedupIndex):
         """Detect, fold, index: returns the KEPT rows of ``batch`` (full
         rows, not just ids) and records them in the kept view."""
         kept_batch = self._compute_kept(batch, corpus, epoch_id=epoch_id)
-        self._merge_kept(kept_batch, epoch_id=epoch_id)
+        rows = kept_batch.select(self.id_col)
+        if self.kept._live_buckets():
+            # first-kept epoch WINS: a later wave legitimately re-feeding
+            # an already-kept id must not overwrite its seq, or the id
+            # loses 'prior' status (seq < epoch) on a redelivery of that
+            # later wave and the recompute diverges — the same chain-
+            # severing leak _compute_kept's epoch scoping prevents
+            # (review r8). The kept view is an id registry; re-upserting
+            # an existing id carries no information anyway.
+            # pinned: merge_batch evaluates its input twice (probe +
+            # write), and a lazy anti-join re-resolving the kept view on
+            # the second evaluation would see this merge's own commit.
+            # foreach_batch_writer needs none of this: it drops every
+            # prior-kept id before the fold, and its frontier guard keeps
+            # this epoch's ids out of the view.
+            rows = rows.join(
+                self.kept.read().select(self.id_col), self.id_col, "left_anti"
+            ).localCheckpoint(eager=True)
+        self._merge_kept(rows, epoch_id=epoch_id)
         return kept_batch
 
     def _compute_kept(
@@ -703,23 +721,9 @@ class IncrementalDeduper(LshDedupIndex):
         lineage: str | None = None,
     ) -> None:
         seq = 0 if epoch_id is None else int(epoch_id)
-        rows = kept_batch.select(self.id_col)
-        if self.kept._live_buckets():
-            # first-kept epoch WINS: a later wave legitimately re-feeding
-            # an already-kept id must not overwrite its seq, or the id
-            # loses 'prior' status (seq < epoch) on a redelivery of that
-            # later wave and the recompute diverges — the same chain-
-            # severing leak _compute_kept's epoch scoping prevents
-            # (review r8). The kept view is an id registry; re-upserting
-            # an existing id carries no information anyway.
-            # pinned: merge_batch evaluates its input twice (probe +
-            # write), and a lazy anti-join re-resolving the kept view on
-            # the second evaluation would see this merge's own commit
-            rows = rows.join(
-                self.kept.read().select(self.id_col), self.id_col, "left_anti"
-            ).localCheckpoint(eager=True)
         self.kept.merge_batch(
-            rows.withColumn("seq", F.lit(seq))
+            kept_batch.select(self.id_col)
+            .withColumn("seq", F.lit(seq))
             .withColumn("op", F.lit("upsert")),
             epoch_id=epoch_id,
             lineage=lineage,

@@ -550,8 +550,8 @@ def test_live_batch_costs_three_spark_jobs(spark):
 def test_staged_truncate_marker_and_start_warning(spark, caplog):
     """ADVICE r11: segments staged by an on_truncate='tombstone_table'
     run carry TRUNCATE rows; replaying them through a connector whose
-    policy reverted to 'ignore' drops them silently. The staging writer
-    counts tombstones into a sidecar marker and start() warns loudly."""
+    policy reverted to 'ignore' drops them silently. start() counts the
+    tombstones in the live segments and warns loudly."""
     import logging
 
     from go_pq_cdc_elasticsearch_spark.connector import ReplicationSettings
@@ -775,12 +775,11 @@ def test_wal_transform_always_drops_message_rows(spark):
 def test_staged_truncate_marker_retired_by_prune():
     """Review r11: the replay-parity warning covers tombstones still
     REPLAYABLE from live segments. Once the ack sweep prunes the carrying
-    segments, their counts retire with the files — a cumulative total
-    warned forever (a permanent false alarm). A crash between the file
-    delete and the marker rewrite self-heals: counts for missing segment
-    files are ignored."""
+    segments, they are no longer counted — a cumulative total warned
+    forever (a permanent false alarm). The count is a scan of the live
+    segments, so a segment file that is gone counts nothing, and a
+    payload value spelled like the op is not a tombstone."""
     from go_pq_cdc_elasticsearch_spark.sources.wal import (
-        TRUNCATE_STAGE_MARKER,
         prune_segments,
         staged_truncate_count,
         write_wal_segment,
@@ -808,7 +807,7 @@ def test_staged_truncate_marker_retired_by_prune():
     assert prune_segments(staged, committed_lsn=29) == 1
     assert staged_truncate_count(staged) == 0
 
-    # crash-window self-heal: marker entry present, segment file gone
+    # a segment file that is gone counts nothing
     seg = os.path.join(staged, "wal_0000000000000040.ndjson")
     write_wal_segment(
         staged, [{"lsn": 40, "op": "TRUNCATE", "before": None, "after": None}]
@@ -817,58 +816,15 @@ def test_staged_truncate_marker_retired_by_prune():
     os.remove(seg)
     assert staged_truncate_count(staged) == 0
 
-    # legacy cumulative-int marker stays a conservative warning
-    with open(os.path.join(staged, TRUNCATE_STAGE_MARKER), "w") as f:
-        f.write("5")
-    assert staged_truncate_count(staged) == 5
-
-
-def test_staged_truncate_marker_gc_and_legacy_retirement():
-    """ADVICE r11 closures: (a) the '_legacy' cumulative sentinel retires
-    once the dir holds no segment files (it previously warned forever —
-    the permanent-false-alarm class the per-segment marker fixed only for
-    non-upgraded dirs); (b) marker rewrites drop entries whose segment
-    file no longer exists (crash between os.remove and the rewrite), so
-    the marker file no longer grows monotonically."""
-    import json
-
-    from go_pq_cdc_elasticsearch_spark.sources.wal import (
-        TRUNCATE_STAGE_MARKER,
-        staged_truncate_count,
-        write_wal_segment,
-    )
-
-    staged = os.path.join(tempfile.mkdtemp(prefix="conn_trgc_"), "staged")
-    os.makedirs(staged)
-    marker = os.path.join(staged, TRUNCATE_STAGE_MARKER)
-
-    # (a) legacy sentinel counts only while segments remain replayable
-    with open(marker, "w") as f:
-        f.write("5")
-    assert staged_truncate_count(staged) == 0  # dir fully drained
-    seg = write_wal_segment(
-        staged, [{"lsn": 10, "op": "INSERT", "after": {"id": "1"}}]
-    )
-    assert staged_truncate_count(staged) == 5  # replayable again
-    os.remove(seg)
-    assert staged_truncate_count(staged) == 0
-
-    # (b) rewrites GC dead entries AND the drained legacy sentinel from
-    # the marker FILE itself (not merely from the count)
-    with open(marker, "w") as f:
-        json.dump({"_legacy": 5, "wal_gone.ndjson": 2}, f)
-    seg2 = write_wal_segment(
+    # the quoted op string inside a payload is not a tombstone
+    write_wal_segment(
         staged,
-        [{"lsn": 20, "op": "TRUNCATE", "before": None, "after": None}],
+        [
+            {"lsn": 50, "op": "INSERT", "after": {"id": "2", "op": "TRUNCATE"}},
+            {"lsn": 51, "op": "TRUNCATE", "before": None, "after": None},
+        ],
     )
-    with open(marker) as f:
-        data = json.load(f)
-    # the dead entry is gone; the just-written segment's count is present;
-    # _legacy survives (the new segment makes the dir non-drained at GC
-    # time inside note_staged_truncates — conservative, correct direction)
-    assert "wal_gone.ndjson" not in data
-    assert data[os.path.basename(seg2)] == 1
-    assert staged_truncate_count(staged) == 1 + data.get("_legacy", 0)
+    assert staged_truncate_count(staged) == 1
 
 
 @pytest.mark.parametrize(
@@ -986,3 +942,132 @@ def test_read_once_unpersists_after_return_and_raise(spark):
         _read_once(inner)(df, 1)
     assert df.storageLevel == none
     assert len(seen) == 2 and none not in seen  # persisted while inner ran
+
+
+def test_available_now_restart_drains_segments_staged_after_failure(
+    spark, tmp_path
+):
+    """A pgwal availableNow restart whose newest offset-log batch never
+    committed replays that batch first. The same drain must then read the
+    segments staged after the failure, not stop at the replayed batch."""
+    from go_pq_cdc_elasticsearch_spark.connector import ReplicationSettings
+    from go_pq_cdc_elasticsearch_spark.sources.pgoutput import (
+        committed_checkpoint_lsn,
+    )
+    from go_pq_cdc_elasticsearch_spark.sources.wal import write_wal_segment
+
+    cfg = _cfg(
+        str(tmp_path),
+        keys=("id",),
+        seq_col="lsn",
+        op_col="op",
+        delete_op="DELETE",
+        replication=ReplicationSettings(host="h", port=1, slot="s"),
+    )
+
+    def stage(lsns):
+        write_wal_segment(
+            cfg.staged_dir,
+            [
+                {"lsn": n, "op": "INSERT", "table_schema": "public",
+                 "table_name": "users", "before": None,
+                 "after": {"id": str(n)}, "ts": None}
+                for n in lsns
+            ],
+        )
+
+    def drain(fail=False):
+        c = Connector(spark, cfg)
+        # the drain reads the staged dir only: no walsender session
+        c._connect_replication = lambda: None
+        c._start_replication_consumer = lambda: None
+        if fail:
+            def boom(*_a, **_k):
+                raise RuntimeError("injected merge failure")
+
+            c.view.merge_batch = boom
+        c.start(available_now=True)
+        try:
+            c.await_drained()
+        finally:
+            c.close()
+        return c
+
+    stage([1, 2])
+    drain()
+    assert committed_checkpoint_lsn(cfg.checkpoint_dir) == 2
+    stage([3, 4])
+    with pytest.raises(Exception, match="injected merge failure"):
+        drain(fail=True)
+    assert committed_checkpoint_lsn(cfg.checkpoint_dir) == 2
+    stage([5, 6])
+    c = drain()
+    assert committed_checkpoint_lsn(cfg.checkpoint_dir) == 6
+    assert sorted(int(r["id"]) for r in c.read().collect()) == [1, 2, 3, 4, 5, 6]
+
+
+def test_live_staged_dir_holds_only_segments(spark):
+    """Live mode acks from the Spark checkpoint alone: after two merged
+    micro-batches and close(), the staged dir holds nothing but
+    ``wal_*.ndjson`` segments."""
+    import threading
+    import time
+
+    from go_pq_cdc_elasticsearch_spark.connector import ReplicationSettings
+    from go_pq_cdc_elasticsearch_spark.sources import pgoutput as PG
+    from go_pq_cdc_elasticsearch_spark.testing_utils import FakeReplicationServer
+
+    rel = PG.encode_relation(7, "public", "users", ["id", "v"])
+    gate = threading.Event()
+
+    def script():
+        # the second transaction waits until the first one is merged, so
+        # the two land in separate micro-batches
+        yield [
+            (10, rel),
+            (10, PG.encode_begin(13, 0, 1)),
+            (11, PG.encode_insert(7, ["1", "a"])),
+            (12, PG.encode_insert(7, ["2", "b"])),
+            (13, PG.encode_commit(13, 14, 0)),
+        ]
+        gate.wait(120)
+        yield [
+            (20, PG.encode_begin(23, 0, 2)),
+            (21, PG.encode_update(7, ["1", "a2"])),
+            (22, PG.encode_delete(7, ["2", None])),
+            (23, PG.encode_commit(23, 24, 0)),
+        ]
+
+    server = FakeReplicationServer(script(), keepalive_each_txn=False)
+    work = tempfile.mkdtemp(prefix="conn_onlyseg_")
+    cfg = _cfg(
+        work,
+        keys=("id",),
+        seq_col="lsn",
+        op_col="op",
+        delete_op="DELETE",
+        replication=ReplicationSettings(
+            host="127.0.0.1", port=server.port, slot="onlyseg_slot",
+            ack_interval_sec=0.2,
+        ),
+    )
+    c = Connector(spark, cfg)
+    c.start()
+    try:
+        for lsn in (12, 22):
+            deadline = time.time() + 120
+            while PG.committed_checkpoint_lsn(cfg.checkpoint_dir) < lsn:
+                assert time.time() < deadline, f"stream did not commit lsn {lsn}"
+                time.sleep(0.1)
+            gate.set()
+        assert c.view._last_epoch >= 1  # two merged micro-batches
+        state = {r["id"]: r["payload"]["v"] for r in c.read().collect()}
+        assert state == {"1": "a2"}
+    finally:
+        gate.set()
+        c.close()
+        server.done.wait(5)
+    names = os.listdir(cfg.staged_dir)
+    assert names and all(
+        n.startswith("wal_") and n.endswith(".ndjson") for n in names
+    ), names

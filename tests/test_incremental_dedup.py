@@ -1234,3 +1234,40 @@ def test_foreach_writer_auto_compacts(spark, sf_dir):
     assert kept_ids == {
         r["doc_id"] for r in d.kept.read().select("doc_id").collect()
     }
+
+
+def test_warm_writer_kept_commit_runs_only_the_merge_jobs(spark, sf_dir):
+    """A warm foreach_batch_writer epoch has already dropped every id kept
+    in an earlier epoch, and the frontier guard keeps this epoch's ids out
+    of the kept view, so the kept-view commit runs the merge's own Spark
+    jobs and nothing else: no anti-join against the kept view pinned by
+    an eager localCheckpoint. Jobs are told apart by job group."""
+    from go_pq_cdc_elasticsearch_spark.streaming.incremental_dedup import (
+        IncrementalDeduper,
+    )
+
+    sc = spark.sparkContext
+
+    def in_group(fn, group):
+        def run(*a, **k):
+            outer = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setJobGroup(group, group)
+            try:
+                return fn(*a, **k)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", outer)
+
+        return run
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 160)
+    work = tempfile.mkdtemp(prefix="dedup_warmjobs_")
+    dd = IncrementalDeduper(spark, os.path.join(work, "dd"), jaccard_threshold=TAU)
+    write = dd.foreach_batch_writer(auto_compact_batches=None)
+    write(docs.filter(F.col("doc_id") % 2 == 0), 0)
+    dd._merge_kept = in_group(dd._merge_kept, "warm-kept-commit")
+    dd.kept.merge_batch = in_group(dd.kept.merge_batch, "warm-kept-merge")
+    write(docs.filter(F.col("doc_id") % 2 == 1), 1)  # warm: the view has state
+    assert dd.kept._last_epoch == 1
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup("warm-kept-merge")
+    assert tracker.getJobIdsForGroup("warm-kept-commit") == []

@@ -305,7 +305,7 @@ def test_live_consumer_to_spark_view(pg, spark):
     stop = threading.Event()
     t = threading.Thread(
         target=PG.run_live_consumer,
-        args=(client, seg_dir),
+        args=(client, seg_dir, os.path.join(work, "ckpt")),
         kwargs={"batch_size": 2, "flush_interval_sec": 0.5, "stop_event": stop},
         daemon=True,
     )
@@ -799,7 +799,7 @@ def test_live_ddl_add_column_and_widen_mid_stream(pg, spark):
     stop = threading.Event()
     t = threading.Thread(
         target=PG.run_live_consumer,
-        args=(client, seg_dir),
+        args=(client, seg_dir, os.path.join(work, "ckpt")),
         kwargs={"batch_size": 1, "flush_interval_sec": 0.3, "stop_event": stop},
         daemon=True,
     )
@@ -1326,7 +1326,7 @@ def test_live_ddl_drop_column_mid_stream(pg, spark):
     stop = threading.Event()
     t = threading.Thread(
         target=PG.run_live_consumer,
-        args=(client, seg_dir),
+        args=(client, seg_dir, os.path.join(work, "ckpt")),
         kwargs={"batch_size": 1, "flush_interval_sec": 0.3, "stop_event": stop},
         daemon=True,
     )
@@ -1556,7 +1556,7 @@ def test_live_proto_v2_full_consumer_chain_to_spark_view(pg, spark):
     stop = threading.Event()
     t = threading.Thread(
         target=PG.run_live_consumer,
-        args=(client, seg_dir),
+        args=(client, seg_dir, os.path.join(work, "ckpt")),
         kwargs={"batch_size": 500, "flush_interval_sec": 0.5, "stop_event": stop},
         daemon=True,
     )

@@ -2,7 +2,7 @@
 codecs, pgoutput decode, and the full slot-consumer handshake against a
 scripted fake replication server over a real TCP socket — slot create,
 CopyBoth start, keepalive reply, StandbyStatusUpdate ack progression, and
-the socket -> wal-segment -> Spark pgwal bridge."""
+the socket -> wal-segment -> Spark pgwal path acked from the checkpoint."""
 
 import io
 import json
@@ -235,8 +235,8 @@ def test_fuzz_decode_with_restart(data):
 
 
 def test_socket_to_segments_to_spark_pgwal(spark):
-    # full live path: socket -> stream_to_segments -> pgwal DataSource ->
-    # micro-batches -> commit records -> forward_committed_acks
+    # full live path: socket -> run_live_consumer -> pgwal DataSource ->
+    # micro-batches -> checkpoint commit log -> forward_checkpoint_acks
     cols = ["user_id", "value"]
     server = FakeReplicationServer(
         [
@@ -251,10 +251,13 @@ def test_socket_to_segments_to_spark_pgwal(spark):
 
     work = tempfile.mkdtemp(prefix="pgwal_live_")
     seg_dir = os.path.join(work, "segments")
-    n = PG.stream_to_segments(client, seg_dir, batch_size=2)
-    assert n == 3
+    ckpt = os.path.join(work, "ckpt")
+    # returns when the server ends the stream; nothing is committed yet
+    assert PG.run_live_consumer(client, seg_dir, ckpt, batch_size=2) == -1
+    from go_pq_cdc_elasticsearch_spark.sources.wal import list_segments, register
 
-    from go_pq_cdc_elasticsearch_spark.sources.wal import register
+    staged = [json.loads(ln) for _, p in list_segments(seg_dir) for ln in open(p)]
+    assert len(staged) == 3
 
     register(spark)
     q = (
@@ -263,7 +266,7 @@ def test_socket_to_segments_to_spark_pgwal(spark):
         .load()
         .writeStream.format("parquet")
         .option("path", os.path.join(work, "out"))
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
@@ -274,36 +277,11 @@ def test_socket_to_segments_to_spark_pgwal(spark):
     assert rows[1001]["after"]["user_id"] == "1"
     assert rows[2001]["after"]["value"] == "9.9"
 
-    # commit() wrote the frontier; the consumer loop forwards it as the ack.
-    # Spark acks offset N once batch N+1 completes (same flush-then-ack lag
-    # as the reference, bulk/bulk.go:271-276), so stage one more segment and
-    # drain again to trigger the commit record for the first batch.
-    committed = os.path.join(seg_dir, "_committed")
-    from go_pq_cdc_elasticsearch_spark.sources.wal import write_wal_segment
-
-    write_wal_segment(
-        seg_dir,
-        [{"lsn": 3000, "op": "INSERT", "table_schema": "public",
-          "table_name": "events", "before": None, "after": {"user_id": "5"},
-          "ts": "t"}],
-    )
-    q2 = (
-        spark.readStream.format("pgwal")
-        .option("path", seg_dir)
-        .load()
-        .writeStream.format("parquet")
-        .option("path", os.path.join(work, "out"))
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    assert os.path.exists(committed)
+    # the checkpoint's commit log covers the final batch; the consumer
+    # loop forwards it as the ack
     before = len(server.acks)
-    last = PG.forward_committed_acks(client, seg_dir)
-    assert last == max(
-        json.loads(line)["lsn"] for line in open(committed)
-    )
+    last = PG.forward_checkpoint_acks(client, ckpt)
+    assert last == PG.committed_checkpoint_lsn(ckpt) == 2001
     server.done.wait(5)
     assert len(server.acks) > before
     # the ack on the wire is NOT the raw stamp frontier: ack_frontier
@@ -780,37 +758,6 @@ def test_prune_segments_respects_frontier_and_keeps_newest():
     assert W.max_segment_lsn(d) == 30
 
 
-@pytest.mark.parametrize("with_checkpoint", [True, False], ids=["checkpoint", "committed_file"])
-def test_run_live_consumer_rotates_grown_committed_file(tmp_path, with_checkpoint):
-    """The source's commit() appends one ``_committed`` line per batch on
-    both ack paths; the ack sweep rotates the file once it passes the size
-    bound, also when the frontier is read from the checkpoint and nothing
-    reads the file."""
-    d = tmp_path / "seg"
-    d.mkdir()
-    committed = d / "_committed"
-    line = json.dumps({"lsn": 1}) + "\n"
-    committed.write_text(line * (PG.COMMITTED_ROTATE_BYTES // len(line) + 1))
-    grown = committed.stat().st_size
-    server = FakeReplicationServer(
-        [_txn(1, ["id", "v"], 100, [("I", ["9", "x"])])], keepalive_each_txn=False
-    )
-    sock = socket.create_connection(("127.0.0.1", server.port))
-    client = PG.ReplicationClient(sock, slot="s_rotate")
-    client.create_slot()
-    client.start()
-    try:
-        PG.run_live_consumer(
-            client, str(d),
-            checkpoint_dir=str(tmp_path / "ckpt") if with_checkpoint else None,
-            batch_size=1, ack_interval_sec=9, flush_interval_sec=9,
-        )
-    finally:
-        client.close()
-    assert not committed.exists()
-    assert (d / "_committed.old").stat().st_size == grown
-
-
 def test_run_live_consumer_seeds_stamps_above_existing_segments():
     """After a crash/reconnect, redelivered (unacked) txns must be stamped
     ABOVE every stamp already flushed by the previous consumer — else the
@@ -832,7 +779,10 @@ def test_run_live_consumer_seeds_stamps_above_existing_segments():
     client = PG.ReplicationClient(sock, slot="s_seed")
     client.create_slot()
     client.start()
-    PG.run_live_consumer(client, d, batch_size=1, ack_interval_sec=9, flush_interval_sec=9)
+    PG.run_live_consumer(
+        client, d, os.path.join(d, "ckpt"),
+        batch_size=1, ack_interval_sec=9, flush_interval_sec=9,
+    )
     stamps = sorted(
         json.loads(line)["lsn"]
         for s, p in W.list_segments(d)
@@ -886,15 +836,6 @@ def test_idle_ack_sweep_drains_filtered_txn_bounds():
     # frontier stamp 5 already acked once; two empty txns arrive later
     # with the SAME last stamp (no rows) but newer commit ends
     client.txn_bounds = collections.deque([(5, 300), (5, 400)])
-    empty_dir = tempfile.mkdtemp(prefix="idle_ack_")
-
-    # no _committed file at all: the idle sweep must still drain
-    last, off = PG.forward_committed_acks_tail(client, empty_dir, 5, 0)
-    assert last == 5 and sent == [400]  # newest covered commit end acked
-    assert not client.txn_bounds
-
-    # and the checkpoint-based forwarder drains on an unchanged frontier
-    client.txn_bounds = collections.deque([(5, 500)])
     ckpt = tempfile.mkdtemp(prefix="idle_ckpt_")
     import json as _json
     import os as _os
@@ -905,9 +846,9 @@ def test_idle_ack_sweep_drains_filtered_txn_bounds():
         f.write("{}")
     with open(_os.path.join(ckpt, "offsets", "0"), "w") as f:
         f.write('{"lsn": 5}\n')
-    sent.clear()
     last = PG.forward_checkpoint_acks(client, ckpt, last_acked=5)
-    assert last == 5 and sent == [500]
+    assert last == 5 and sent == [400]  # newest covered commit end acked
+    assert not client.txn_bounds
     client.close()
     b.close()
 
@@ -1047,9 +988,8 @@ def test_fresh_slot_idle_drain_without_any_committed_frontier():
     """Review r7: on a FRESH slot whose published tables are quiet while
     unpublished ones are busy, no Spark batch ever commits — the ack
     sweeps must still reach ack_frontier (with the stamp-0 frontier) so
-    the idle keepalive extension can advance the slot. Both sweep callers
-    are covered: checkpoint-based (no commits/ dir at all) and
-    _committed-file-based (file absent)."""
+    the idle keepalive extension can advance the slot, with no commits/
+    dir in the checkpoint at all."""
     import tempfile as _tf
 
     a, b = socket.socketpair()
@@ -1071,18 +1011,12 @@ def test_fresh_slot_idle_drain_without_any_committed_frontier():
         PG.forward_checkpoint_acks(client, ckpt, last_acked=-1)
         assert sent == [12345]
 
-        seg = _tf.mkdtemp(prefix="fresh_seg_")  # no _committed file
-        client.idle_wal_end = 23456
-        PG.forward_committed_acks_tail(client, seg, last_acked=-1, offset=0)
-        assert sent == [12345, 23456]
-
         # and NOT when something was delivered but never committed
         # downstream: the frontier (0) no longer covers last_stamp
         client.last_stamp = 99
         client.idle_wal_end = 34567
         PG.forward_checkpoint_acks(client, ckpt, last_acked=-1)
-        PG.forward_committed_acks_tail(client, seg, last_acked=-1, offset=0)
-        assert sent == [12345, 23456]
+        assert sent == [12345]
     finally:
         a.close()
         b.close()
@@ -1103,7 +1037,7 @@ def test_receiver_timeout_ends_consumer_on_silent_link(tmp_path):
 
         def run():
             PG.run_live_consumer(
-                client, str(tmp_path / "seg"),
+                client, str(tmp_path / "seg"), str(tmp_path / "ckpt"),
                 ack_interval_sec=0.1, flush_interval_sec=0.1,
                 receiver_timeout_sec=1.0,
             )
@@ -1135,7 +1069,8 @@ def test_receiver_timeout_not_tripped_by_keepalives(tmp_path):
 
         def run():
             PG.run_live_consumer(
-                client, str(tmp_path / "seg2"), stop_event=stop,
+                client, str(tmp_path / "seg2"), str(tmp_path / "ckpt2"),
+                stop_event=stop,
                 ack_interval_sec=0.1, flush_interval_sec=0.1,
                 receiver_timeout_sec=1.0,
             )
@@ -1714,7 +1649,8 @@ def test_run_live_consumer_seeds_stamps_above_segments_v2_stream():
     client.create_slot()
     client.start()
     PG.run_live_consumer(
-        client, d, batch_size=1, ack_interval_sec=9, flush_interval_sec=9
+        client, d, os.path.join(d, "ckpt"),
+        batch_size=1, ack_interval_sec=9, flush_interval_sec=9,
     )
     stamps = sorted(
         json.loads(line)["lsn"]

@@ -1,6 +1,6 @@
 """Custom pgwal streaming DataSource: LSN offsets, prefetched reads and
-replay after a restart, commit-as-ack, end-to-end into the materialized
-view."""
+replay after a restart, checkpoint-frontier acks, end-to-end into the
+materialized view."""
 
 import json
 import os
@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from go_pq_cdc_elasticsearch_spark.sink.materialized import MaterializedView
 from go_pq_cdc_elasticsearch_spark.sources import wal as W
+from go_pq_cdc_elasticsearch_spark.sources.pgoutput import committed_checkpoint_lsn
 
 
 def _msg(lsn, op, key, val):
@@ -31,6 +32,7 @@ def test_wal_stream_end_to_end_with_ack(spark):
     W.write_wal_segment(wal_dir, [_msg(1, "INSERT", 1, "a"), _msg(2, "INSERT", 2, "b")])
     W.write_wal_segment(wal_dir, [_msg(3, "UPDATE", 1, "a2"), _msg(4, "DELETE", 2, 0)])
 
+    ckpt = os.path.join(work, "ckpt")
     W.register(spark)
     stream = spark.readStream.format("pgwal").option("path", wal_dir).load()
 
@@ -52,7 +54,7 @@ def test_wal_stream_end_to_end_with_ack(spark):
     q = (
         xform(stream)
         .writeStream.foreachBatch(view.foreach_batch_writer())
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
@@ -60,13 +62,14 @@ def test_wal_stream_end_to_end_with_ack(spark):
 
     state = {r["key"]: r["v"] for r in view.read().collect()}
     assert state == {"1": "a2"}  # key 2 deleted, key 1 updated
+    assert committed_checkpoint_lsn(ckpt) == 4
 
     # new WAL arrives; restart from checkpoint picks up ONLY lsn > 4
     W.write_wal_segment(wal_dir, [_msg(5, "INSERT", 3, "c")])
     q = (
         xform(spark.readStream.format("pgwal").option("path", wal_dir).load())
         .writeStream.foreachBatch(view.foreach_batch_writer())
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
@@ -74,16 +77,11 @@ def test_wal_stream_end_to_end_with_ack(spark):
     state = {r["key"]: r["v"] for r in view.read().collect()}
     assert state == {"1": "a2", "3": "c"}
 
-    # ack progression (commit == StandbyStatusUpdate): Spark acks offset N
-    # once batch N+1 completes — the same flush-then-ack lag the reference
-    # has (bulk/bulk.go:271-276: ack fires after the NEXT successful flush
-    # cycle touches the saved context). After the restart batch (lsn 5),
-    # phase 1's frontier {"lsn": 4} must be committed.
-    committed = [
-        json.loads(ln)
-        for ln in open(os.path.join(wal_dir, "_committed")).read().splitlines()
-    ]
-    assert {"lsn": 4} in committed
+    # ack progression: the checkpoint's commit log is the ack record the
+    # live consumer forwards as a StandbyStatusUpdate. Batch N's end offset
+    # is committed the moment its sink completes, so after the restart
+    # batch (lsn 5) the frontier is 5, past phase 1's {"lsn": 4}.
+    assert committed_checkpoint_lsn(ckpt) == 5
 
 
 def test_wal_reader_serves_rows_up_to_newest_staged_lsn():
